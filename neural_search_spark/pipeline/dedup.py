@@ -560,13 +560,6 @@ def ngram_jaccard_pairs(
 # ---------------------------------------------------------------------------
 
 
-def embedding_bucket_expr(vec_col: str) -> Column:
-    """Random-hyperplane sign bucket (params.HYPERPLANES)."""
-    from neural_search_spark.pipeline.ann import bucket_col
-
-    return bucket_col(vec_col)
-
-
 def semantic_dedup(
     emb: DataFrame,
     n_lists: int | None = None,

@@ -330,10 +330,11 @@ def phrase_freq_text_col(text_col, terms: list[str]):
     (3) the whole needle sits in a zero-width lookahead so every matching
     start offset counts once — OVERLAPPING phrase occurrences included
     (Java's matcher advances one char past an empty match), exactly the
-    per-position count of the array form. Caller must guarantee every
-    term matches ``^[a-z0-9_]+$`` (true for any analyzer output)."""
-    m = len(terms)
-    assert m >= 1 and all(_TOKEN_RE.fullmatch(t) for t in terms), terms
+    per-position count of the array form. Every term must match
+    ``^[a-z0-9_]+$`` (true for any analyzer output), else ValueError: a
+    regex metacharacter would change the pattern."""
+    if not terms or not all(_TOKEN_RE.fullmatch(t) for t in terms):
+        raise ValueError(f"phrase terms must be non-empty analyzer tokens [a-z0-9_]+: {terms!r}")
     needle = "[^a-z0-9_]+".join(terms)
     pat = f"(?=(?<![a-z0-9_]){needle}(?![a-z0-9_]))"
     return F.regexp_count(F.lower(text_col), F.lit(pat)).cast("int")

@@ -12,20 +12,23 @@ declarative DataFrame plan:
   (``HybridCollectorManager.java:102,591-607``); we cut each clause to
   ``depth`` by (score desc, docID asc).
 - normalization stats are **global per clause** across all shards
-  (``MinMaxScoreNormalizationTechnique.java:140-147``) — a plain global
-  aggregate here.
+  (``MinMaxScoreNormalizationTechnique.java:140-147``) — a whole-clause
+  window aggregate here.
 - combination sees a zero-filled float array per doc
   (``ScoreCombiner.java:291-305``): absent clauses contribute 0.0 and DO
   count in the arithmetic-mean denominator.
-- final cut: combined score desc, docID asc (``ScoreCombiner.java:43-56``),
-  optional post_filter (membership only, ``HybridCollectorManager.java:121-133``)
-  and collapse (best doc per field value,
-  ``search/collector/HybridCollapsingTopDocsCollector.java``).
+- final cut: combined score desc, docID asc (``ScoreCombiner.java:43-56``)
+  and optional post_filter (membership only,
+  ``HybridCollectorManager.java:121-133``).
 
-Scale shape: clause scores are unioned long-form ``(docID, clause, score)``
-and pivoted in a single groupBy — one shuffle for any clause count,
-instead of k-1 outer joins. Normalization stats are 1-row aggregates
-cross-joined back (broadcast, no extra shuffle of the data).
+Scale shape: each clause is cut to ``depth`` rows first, and its
+normalization statistics are whole-clause windows over that cut. The cut
+comes out of one task, as the reference's coordinator sees at most
+``depth`` top docs per sub-query, so the windows need no exchange, no
+broadcast and no cache, and every clause plan is referenced once. Clause
+scores are then unioned long-form ``(docID, clause, score)`` and pivoted
+in a single groupBy — one shuffle for any clause count, instead of k-1
+outer joins.
 """
 
 from __future__ import annotations
@@ -101,11 +104,9 @@ def describe_combination(technique: str, weights: list[float] | None = None) -> 
     return f"{technique} combination of:"
 
 
-def clause_depth_cut(scored: DataFrame, depth: int | None) -> DataFrame:
+def clause_depth_cut(scored: DataFrame, depth: int) -> DataFrame:
     """Per-clause collection depth (numHits): keep top ``depth`` docs by
-    (score desc, docID asc). ``None`` keeps all matches."""
-    if depth is None:
-        return scored
+    (score desc, docID asc)."""
     return scored.orderBy(F.desc("score"), F.asc("docID")).limit(depth)
 
 
@@ -148,19 +149,27 @@ def normalize_clause(
     rank_constant: int = 60,
     lower_bound: tuple[str, float] | None = None,
     upper_bound: tuple[str, float] | None = None,
+    keys: tuple[str, ...] = (),
 ) -> DataFrame:
     """(docID, score) → (docID, nscore), reference edge cases included.
+
+    Precondition: ``scored`` is a depth-cut clause (:func:`clause_depth_cut`,
+    at most ``depth`` rows). The statistics are window aggregates over the
+    whole clause, and with no ``keys`` the window is unpartitioned, so the
+    clause runs through a single task. ``keys`` partitions the window when
+    one frame holds many clauses (e.g. ``("qid", "cidx")``, each partition
+    depth-cut); the key columns are kept in the output.
 
     ``lower_bound``/``upper_bound``: optional ("apply"|"clip"|"ignore", value)
     pairs, min_max only — ``MinMaxScoreNormalizationTechnique.java:258-295``
     with the bound substitution/clip rules from ``normalization/bounds/``.
     """
     s = F.col("score")
+    w = Window.partitionBy(*keys)
     if technique != "min_max" and (lower_bound is not None or upper_bound is not None):
         raise ValueError("bounds are only supported by min_max normalization")
     if technique == "min_max":
-        stats = scored.agg(F.min("score").alias("_mn"), F.max("score").alias("_mx"))
-        df = scored.crossJoin(F.broadcast(stats))
+        df = scored.select("*", F.min(s).over(w).alias("_mn"), F.max(s).over(w).alias("_mx"))
         mn, mx = F.col("_mn"), F.col("_mx")
         eff_min, eff_max = _effective_bounds(s, mn, mx, lower_bound, upper_bound)
         raw = (s - eff_min) / (eff_max - eff_min)
@@ -175,35 +184,33 @@ def normalize_clause(
         n = n.when(eff_max == eff_min, F.lit(1.0)).otherwise(
             F.when(raw == 0.0, F.lit(MIN_SCORE)).otherwise(raw)
         )
-        return df.select("docID", n.alias("nscore"))
+        return df.select(*keys, "docID", n.alias("nscore"))
     if technique == "l2":
-        stats = scored.agg(F.sqrt(F.sum(s * s)).alias("_norm"))
-        df = scored.crossJoin(F.broadcast(stats))
+        df = scored.select("*", F.sqrt(F.sum(s * s).over(w)).alias("_norm"))
         n = F.when(F.col("_norm") == 0.0, F.lit(0.0)).otherwise(s / F.col("_norm"))
-        return df.select("docID", n.alias("nscore"))
+        return df.select(*keys, "docID", n.alias("nscore"))
     if technique == "z_score":
-        stats = scored.agg(
-            F.avg("score").alias("_mean"),
-            F.coalesce(F.stddev_samp("score"), F.lit(0.0)).alias("_sd"),
-            F.max("score").alias("_mx"),
-            F.min("score").alias("_mn"),
+        df = scored.select(
+            "*",
+            F.avg(s).over(w).alias("_mean"),
+            F.coalesce(F.stddev_samp(s).over(w), F.lit(0.0)).alias("_sd"),
+            F.max(s).over(w).alias("_mx"),
+            F.min(s).over(w).alias("_mn"),
         )
-        df = scored.crossJoin(F.broadcast(stats))
         z = (s - F.col("_mean")) / F.col("_sd")
         n = (
             F.when(s == F.col("_mean"), F.col("_mx"))  # s==mean → clause max
             .when(F.col("_sd") == 0.0, F.col("_mn"))  # sd==0 → clause min
             .otherwise(F.when(z <= 0.0, F.lit(MIN_SCORE)).otherwise(z))
         )
-        return df.select("docID", n.alias("nscore"))
+        return df.select(*keys, "docID", n.alias("nscore"))
     if technique == "rrf":
         # 1/(rank_constant + pos + 1), BigDecimal scale 10 HALF_UP
         # (RRFNormalizationTechnique.java:136-138); rank within the clause's
         # collected order = score desc, docID asc
-        w = Window.orderBy(F.desc("score"), F.asc("docID"))
-        rn = F.row_number().over(w)
+        rn = F.row_number().over(w.orderBy(F.desc("score"), F.asc("docID")))
         n = F.round(F.lit(1.0) / (F.lit(rank_constant) + rn), 10)
-        return scored.select("docID", n.alias("nscore"))
+        return scored.select(*keys, "docID", n.alias("nscore"))
     raise ValueError(technique)
 
 
@@ -292,7 +299,7 @@ def hybrid_batch_topk(
     postings join + one (qid, clause, docID) aggregation; everything
     after the depth cut is bounded by Q × clauses × depth rows."""
     from neural_search_spark import settings
-    from neural_search_spark.search.bm25 import idf_col
+    from neural_search_spark.search import bm25
 
     max_sub = int(settings.get("hybrid_max_sub_queries"))
     rows = []
@@ -326,10 +333,10 @@ def hybrid_batch_topk(
     tf = F.col("tf").cast("double")
     tf_norm = tf / (
         tf
-        + F.lit(1.2) * (F.lit(1.0 - 0.75) + F.lit(0.75) * F.col("dlq") / F.lit(stats.avgdl))
+        + F.lit(bm25.K1) * (F.lit(1.0 - bm25.B) + F.lit(bm25.B) * F.col("dlq") / F.lit(stats.avgdl))
     )
     clause_scores = matched.groupBy("qid", "cidx", "docID").agg(
-        F.sum(idf_col(stats.n_docs, F.col("ndoc")) * tf_norm).alias("score")
+        F.sum(bm25.idf_col(stats.n_docs, F.col("ndoc")) * tf_norm).alias("score")
     )
     if depth is not None:
         wd = Window.partitionBy("qid", "cidx").orderBy(
@@ -340,18 +347,7 @@ def hybrid_batch_topk(
             .where(F.col("_rn") <= int(depth))
             .drop("_rn")
         )
-    st = clause_scores.groupBy("qid", "cidx").agg(
-        F.min("score").alias("_mn"), F.max("score").alias("_mx")
-    )
-    j = clause_scores.join(F.broadcast(st), ["qid", "cidx"])
-    s, mn, mx = F.col("score"), F.col("_mn"), F.col("_mx")
-    raw = (s - mn) / (mx - mn)
-    n = (
-        F.when((mx == mn) & (mx == s), F.lit(1.0))
-        .when(mx == mn, F.lit(1.0))
-        .otherwise(F.when(raw == 0.0, F.lit(MIN_SCORE)).otherwise(raw))
-    )
-    normalized = j.select("qid", "cidx", "docID", n.alias("nscore"))
+    normalized = normalize_clause(clause_scores, "min_max", keys=("qid", "cidx"))
     maxc = max(len(c) for c in batches.values())
     wide = normalized.groupBy("qid", "docID").agg(
         *[
@@ -395,7 +391,6 @@ def hybrid_search(
     depth: int | None = None,
     rank_constant: int = 60,
     post_filter_docs: DataFrame | None = None,
-    collapse: tuple[DataFrame, str] | None = None,
     keep_clause_columns: bool = False,
     lower_bounds: list[tuple[str, float] | None] | None = None,
     upper_bounds: list[tuple[str, float] | None] | None = None,
@@ -403,10 +398,10 @@ def hybrid_search(
     """Full hybrid pipeline over pre-scored clauses → top-k (docID, score).
 
     ``clause_scores``: per-clause (docID, score) DataFrames (raw scores).
-    ``depth``: per-clause collection depth (pagination_depth ?? size).
+    ``depth``: required per-clause collection depth ≥ 1 — the reference's
+    ``numHits = pagination_depth ?? size``; a missing one raises ValueError.
     ``post_filter_docs``: docID membership filter applied after scoring,
     before the final cut (post_filter semantics).
-    ``collapse``: (docs_df, field) — keep the best doc per field value.
     ``lower_bounds``/``upper_bounds``: per-clause min_max bounds, one entry
     (or None) per clause (``MinMaxScoreNormalizationTechnique.java:52-64``).
     """
@@ -416,12 +411,10 @@ def hybrid_search(
     if not 1 <= len(clause_scores) <= max_sub:
         raise ValueError(f"hybrid query supports 1..{max_sub} sub-queries")
     validate_technique_pair(normalization, combination)
-    if normalization == "rrf" and depth is None:
-        # rrf ranks via a global (unpartitioned) row_number window — safe
-        # ONLY over a depth-cut clause (<= depth rows through one task);
-        # unbounded input would funnel the whole clause through a single
-        # task, so the scale contract is enforced, not assumed
-        raise ValueError("rrf normalization requires a per-clause depth (numHits) cut")
+    if depth is None or depth < 1:
+        # normalize_clause's unpartitioned windows run the clause through
+        # one task, which is bounded only over a depth cut
+        raise ValueError("hybrid_search requires a per-clause depth (numHits) >= 1")
     # stats-API event counters (stats/events/EventStatName.java analog)
     from neural_search_spark import stats as _stats
 
@@ -453,32 +446,15 @@ def hybrid_search(
             raise ValueError("bounds list must have one entry per sub-query")
     lbs = lower_bounds or [None] * len(clause_scores)
     ubs = upper_bounds or [None] * len(clause_scores)
-    cut = [clause_depth_cut(df, depth) for df in clause_scores]
-    if depth is not None:
-        # every normalization technique references its clause twice (the
-        # 1-row stats aggregate + the broadcast-joined rescore), so an
-        # uncached clause plan executes twice end-to-end — ruinous when the
-        # clause itself is expensive (phrase verify, on-the-fly embedding).
-        # The depth cut bounds the cached footprint to <= depth rows per
-        # clause, so this is a guaranteed-tiny materialization, never a
-        # corpus-sized one.
-        cut = [df.cache() for df in cut]
     normalized = [
-        normalize_clause(df, normalization, rank_constant, lower_bound=lb, upper_bound=ub)
-        for df, lb, ub in zip(cut, lbs, ubs)
+        normalize_clause(
+            clause_depth_cut(df, depth), normalization, rank_constant, lower_bound=lb, upper_bound=ub
+        )
+        for df, lb, ub in zip(clause_scores, lbs, ubs)
     ]
     combined = combine_clauses(normalized, combination, weights)
     if post_filter_docs is not None:
         combined = combined.join(post_filter_docs.select("docID"), "docID", "semi")
-    if collapse is not None:
-        docs_df, field = collapse
-        combined = combined.join(docs_df.select("docID", field), "docID")
-        w = Window.partitionBy(field).orderBy(F.desc("score"), F.asc("docID"))
-        combined = (
-            combined.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_rn", field)
-        )
     out_cols = ["docID", "score"] + (
         [c for c in combined.columns if c.startswith("s_")] if keep_clause_columns else []
     )

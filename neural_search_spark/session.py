@@ -16,6 +16,17 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """Half of physical memory, capped at 24g: in local mode every task runs
+    in the driver JVM, and a heap near the host's RAM gets the JVM killed
+    by the kernel's OOM killer instead of collected."""
+    try:
+        phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (1 << 20)
+    except (AttributeError, ValueError, OSError):  # no sysconf (Windows) or no such name
+        return "24g"
+    return f"{min(24 * 1024, phys_mb // 2)}m"
+
+
 def get_spark(
     app_name: str = "neural-search-spark",
     master: str | None = None,
@@ -28,7 +39,7 @@ def get_spark(
     # local-mode "executor" memory is the driver JVM; the 1g default
     # GC-thrashes under 32 concurrent Arrow-UDF tasks (takes effect only if
     # this call creates the JVM, which it does in every entry path)
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem()
     b = (
         SparkSession.builder.appName(app_name)
         .master(master)

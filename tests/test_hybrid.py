@@ -271,10 +271,38 @@ def test_hybrid_e2e_vs_oracle(engine, oracle_idx, norm, comb, weights):
             assert abs(gs - ws) <= 2 * DELTA, (norm, comb, gd, wd)
 
 
-def test_rrf_requires_depth(spark):
-    """The rrf rank window is global (single task) — hybrid_search enforces
-    the depth cut instead of assuming it."""
-    with pytest.raises(ValueError, match="depth"):
-        hybrid_search(
-            [_df(spark, [(1, 1.0)])], "rrf", "rrf", k=5, depth=None
-        )
+PAIRS = [("min_max", "arithmetic_mean"), ("l2", "harmonic_mean"), ("z_score", "geometric_mean"), ("rrf", "rrf")]
+
+
+def test_depth_required(spark):
+    """Every technique's stats are unpartitioned windows (single task), so
+    hybrid_search enforces the depth cut instead of assuming it."""
+    clauses = [_df(spark, [(1, 1.0)])]
+    for norm, comb in PAIRS:
+        with pytest.raises(ValueError, match="depth"):
+            hybrid_search(clauses, norm, comb, k=5)
+        for depth in (None, 0):
+            with pytest.raises(ValueError, match="depth"):
+                hybrid_search(clauses, norm, comb, k=5, depth=depth)
+
+
+def test_hybrid_holds_no_cache_entries(spark, engine):
+    """A hybrid request leaves the Spark cache as it found it: no clause cut
+    is pinned, for any technique pair, with bounds or a post_filter."""
+    clauses = [engine.match(t) for t in CLAUSES]
+    for c in clauses:  # materialize the engine's own caches first
+        c.count()
+    jsc = spark.sparkContext._jsc.sc()
+
+    def cached_rdds():
+        return {info.id() for info in jsc.getRDDStorageInfo()}
+
+    before = cached_rdds()
+    for norm, comb in PAIRS:
+        hybrid_search(clauses, norm, comb, k=5, depth=20).collect()
+    hybrid_search(
+        clauses, k=5, depth=20,
+        lower_bounds=[("clip", 0.5), None], upper_bounds=[None, ("apply", 5.0)],
+        post_filter_docs=clauses[0].select("docID"),
+    ).collect()
+    assert cached_rdds() - before == set()

@@ -51,8 +51,9 @@ def test_phrase_freq_text_matches_token_form(spark):
 def test_phrase_freq_text_rejects_non_token_terms():
     from neural_search_spark.search.bm25 import phrase_freq_text_col
 
-    with pytest.raises(AssertionError):
-        phrase_freq_text_col(F.col("content"), ["has space"])
+    for terms in (["has space"], ["a+b"], ["ok", "a.b"], []):
+        with pytest.raises(ValueError, match="analyzer tokens"):
+            phrase_freq_text_col(F.col("content"), terms)
 
 
 # ---------------------------------------------------------------------------

@@ -82,7 +82,7 @@ class TestHybridClauseCap:
         clauses = [engine.match("import"), engine.term("ident1"), engine.match("def")]
         with settings.override(hybrid_max_sub_queries=2):
             with pytest.raises(ValueError, match="1..2 sub-queries"):
-                hybrid_search(clauses, "min_max", "arithmetic_mean", k=3)
+                hybrid_search(clauses, "min_max", "arithmetic_mean", k=3, depth=10)
 
 
 class TestRerankFieldCap:

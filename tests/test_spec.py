@@ -112,7 +112,7 @@ def test_event_counters(spark, engine):
         topk(engine.match("import ident1"), 5).collect()
         hybrid_search(
             [engine.match("import"), engine.term("ident1")],
-            "min_max", "arithmetic_mean", k=3,
+            "min_max", "arithmetic_mean", k=3, depth=10,
         ).collect()
     ev = stats.event_counts()
     assert ev["match_query_requests"] == 2

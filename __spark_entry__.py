@@ -1854,6 +1854,13 @@ def _pq_codebook_artifacts(spark: SparkSession, sf_dir: str):
     codebooks also materializes the STORED CODE table (the second half of
     the write-time encoder — see :func:`_pq_code_artifacts`), so warming
     this artifact warms the whole PQ index."""
+    _pq_code_artifacts(spark, sf_dir)
+    return _pq_codebooks(spark, sf_dir)
+
+
+def _pq_codebooks(spark: SparkSession, sf_dir: str):
+    """The one builder of the cached codebook table; both PQ artifact
+    accessors read the codebooks through it, so either may run first."""
     from neural_search_spark.pipeline.ann import pq_codebooks
 
     key = (id(spark), sf_dir)
@@ -1861,7 +1868,6 @@ def _pq_codebook_artifacts(spark: SparkSession, sf_dir: str):
         cents = pq_codebooks(_embeddings(spark, sf_dir)).cache()
         cents.count()
         _PQ_CODEBOOKS[key] = cents
-    _pq_code_artifacts(spark, sf_dir)
     return _PQ_CODEBOOKS[key]
 
 
@@ -1877,7 +1883,7 @@ def _pq_code_artifacts(spark: SparkSession, sf_dir: str):
 
     key = (id(spark), sf_dir)
     if key not in _PQ_CODES:
-        cents = _PQ_CODEBOOKS[key]
+        cents = _pq_codebooks(spark, sf_dir)
         cb = {
             (int(r["m"]), int(r["code"])): [float(x) for x in r["centroid"]]
             for r in cents.collect()  # O(M·K) rows — bounded by design

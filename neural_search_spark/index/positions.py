@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from neural_search_spark.analysis.tokenizer import TOKEN_PATTERN, tokenize_text
 from neural_search_spark.search.bm25 import B, K1, CorpusStats, idf_col, topk
+from neural_search_spark.session import local_table
 
 N_BUCKETS = 64
 
@@ -106,16 +107,14 @@ class PositionalIndex:
         equivalence is pinned by tests and by sharing the driver oracle."""
         terms = tokenize_text(phrase)
         if not terms:
-            return self.spark.range(0).select(
-                F.col("id").alias("docID"), F.lit(0.0).alias("score")
-            )
+            return local_table(self.spark, [], "docID long, score double")
         distinct_terms = sorted(set(terms))
         rows = self._term_rows(distinct_terms)
         # index-wide document frequency per distinct term (one row per
         # (term, doc) in the positions table)
         dfreq = rows.groupBy("term").agg(F.count("*").alias("ndoc"))
         pos_df = F.broadcast(
-            self.spark.createDataFrame(list(enumerate(terms)), "pos int, term string")
+            local_table(self.spark, list(enumerate(terms)), "pos int, term string")
         )
         qidf = pos_df.join(F.broadcast(dfreq), "term").agg(
             F.sum(idf_col(self.stats.n_docs, F.col("ndoc"))).alias("qidf")
@@ -180,15 +179,13 @@ class PositionalIndex:
             exp_df = exp_df.limit(int(max_expansions))
         exp = [r["term"] for r in exp_df.collect()]  # O(max_expansions) rows
         if not exp:
-            return self.spark.range(0).select(
-                F.col("id").alias("docID"), F.lit(0.0).alias("score")
-            )
+            return local_table(self.spark, [], "docID long, score double")
         distinct_fixed = sorted(set(fixed))
         rows = self._term_rows(sorted(set(distinct_fixed) | set(exp)))
         rows_f = rows.where(F.col("term").isin(distinct_fixed))
         dfreq = rows_f.groupBy("term").agg(F.count("*").alias("ndoc"))
         pos_df = F.broadcast(
-            self.spark.createDataFrame(list(enumerate(fixed)), "pos int, term string")
+            local_table(self.spark, list(enumerate(fixed)), "pos int, term string")
         )
         qidf = pos_df.join(F.broadcast(dfreq), "term").agg(
             F.sum(idf_col(self.stats.n_docs, F.col("ndoc"))).alias("qidf")
@@ -255,14 +252,12 @@ class PositionalIndex:
         """
         terms = tokenize_text(phrase)
         if not terms:
-            return self.spark.range(0).select(
-                F.col("id").alias("docID"), F.lit(0.0).alias("score")
-            )
+            return local_table(self.spark, [], "docID long, score double")
         distinct_terms = sorted(set(terms))
         rows = self._term_rows(distinct_terms)
         dfreq = rows.groupBy("term").agg(F.count("*").alias("ndoc"))
         pos_df = F.broadcast(
-            self.spark.createDataFrame(list(enumerate(terms)), "pos int, term string")
+            local_table(self.spark, list(enumerate(terms)), "pos int, term string")
         )
         qidf = pos_df.join(F.broadcast(dfreq), "term").agg(
             F.sum(idf_col(self.stats.n_docs, F.col("ndoc"))).alias("qidf")

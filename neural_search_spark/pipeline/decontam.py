@@ -7,12 +7,16 @@ an exact word n-gram that also appears in a held-out benchmark document is
 flagged (and usually dropped or scrubbed) so eval numbers are not
 memorization artifacts.
 
-Scale shape for 100 TB: the benchmark side is eval-set-sized (thousands of
-documents), so its distinct n-gram set broadcasts; the corpus side is one
-tokenize + n-gram projection (pure codegen array expressions) and one
-broadcast join — the corpus is never shuffled. If the benchmark outgrows
-broadcast (unusual), drop the explicit ``F.broadcast`` and let AQE pick a
-shuffle join; the op stays correct.
+Design: the benchmark side is eval-set-sized (thousands of documents).
+Its distinct n-grams are collected once into one Python set on the
+driver and broadcast; the corpus side is one Arrow-batched
+``mapInPandas`` pass that intersects each document's n-grams with that
+set in-process — no explode, no shuffle, no join, and the corpus is never
+shuffled. There is no relational fallback: the driver must hold the whole
+set, about (benchmark tokens) x (n-gram string bytes + per-entry set
+overhead) — for 10^4 benchmark docs of 10^3 tokens at n=8 that is 10^7
+grams, roughly 1-2 GB of Python objects. A benchmark beyond that needs an
+n-gram hash filter or a semi-join instead.
 """
 
 from __future__ import annotations
@@ -60,8 +64,7 @@ def ngram_decontaminate(
     from pyspark.sql.types import LongType, StructField, StructType
 
     # The benchmark side is eval-set-sized BY CONTRACT (module docstring),
-    # so its distinct n-gram set is driver-collectable — the same bound
-    # the broadcast semi-join relied on, now held as one Python set.
+    # so its distinct n-gram set is driver-collectable as one Python set.
     # Grams are built with the identical recipe as _distinct_ngrams
     # (lower → TOKEN_PATTERN runs → space-join of n consecutive tokens);
     # the engine's tokenizer already runs this exact Python path for
@@ -81,7 +84,7 @@ def ngram_decontaminate(
 
     out_schema = StructType(
         [
-            StructField("docID", LongType(), False),
+            StructField("docID", corpus.schema[id_col].dataType, False),
             StructField("n_hit_ngrams", LongType(), False),
         ]
     )
@@ -89,13 +92,11 @@ def ngram_decontaminate(
     def _count_hits(batches):
         bset = bc.value
         for pdf in batches:
-            ids, hits = [], []
-            for doc_id, text in zip(pdf["docID"], pdf[text_col]):
-                c = len(_grams_of(text) & bset)
-                if c:
-                    ids.append(doc_id)
-                    hits.append(c)
-            yield pd.DataFrame({"docID": ids, "n_hit_ngrams": hits}, dtype="int64")
+            hits = pdf[text_col].map(lambda text: len(_grams_of(text) & bset))
+            keep = hits > 0  # docID keeps the caller's id dtype
+            yield pd.DataFrame(
+                {"docID": pdf["docID"][keep], "n_hit_ngrams": hits[keep].astype("int64")}
+            )
 
     # one Arrow-batched pass over (docID, text): per-doc distinct grams
     # intersect the broadcast set in-process — no explode, no shuffle, no

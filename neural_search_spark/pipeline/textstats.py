@@ -648,9 +648,9 @@ def ccnet_ppl_buckets(
     Scale shape: NO per-language single-reducer sort. The rank is the
     two-stage distributed scan used by :func:`training.pack_plan`:
     range-partition by (lang, ppl, docID), per-partition local
-    row_numbers, then a tiny (partition × lang) count table is collected,
-    prefix-summed driver-side, and broadcast back as base offsets —
-    O(n_ranges · n_langs) driver rows regardless of corpus size. (CCNet
+    row_numbers, then a tiny (partition × lang) count table is prefix-
+    summed per language by a window and broadcast back as base offsets —
+    O(n_ranges · n_langs) rows regardless of corpus size. (CCNet
     itself computes per-language ppl *thresholds* once per release from a
     sample; the rank formulation is the exact, artifact-free equivalent.)
     """
@@ -664,23 +664,24 @@ def ccnet_ppl_buckets(
     )
     w = Window.partitionBy("_pid", "lang").orderBy("ppl", "docID")
     local = parts.withColumn("_lr", F.row_number().over(w)).persist()
-    counts = (
-        local.groupBy("_pid", "lang").agg(F.count(F.lit(1)).alias("_c"))
-        .orderBy("lang", "_pid")
-        .collect()
-    )
-    offsets: list[tuple[int, str, int]] = []
-    totals: dict[str, int] = {}
-    for r in counts:  # rows arrive (lang, _pid)-sorted: running base per lang
-        base = totals.get(r["lang"], 0)
-        offsets.append((int(r["_pid"]), r["lang"], base))
-        totals[r["lang"]] = base + int(r["_c"])
-    spark = df.sparkSession
+    # per (partition, lang): base = docs of that lang in earlier
+    # partitions, _n = the lang's doc count — windows over the
+    # (partition × lang) count aggregate
+    by_lang = Window.partitionBy("lang")
     off_df = F.broadcast(
-        spark.createDataFrame(offsets, "_pid int, lang string, _off long")
-    )
-    tot_df = F.broadcast(
-        spark.createDataFrame(sorted(totals.items()), "lang string, _n long")
+        local.groupBy("_pid", "lang")
+        .agg(F.count(F.lit(1)).alias("_c"))
+        .select(
+            "_pid",
+            "lang",
+            F.coalesce(
+                F.sum("_c").over(
+                    by_lang.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
+                ),
+                F.lit(0),
+            ).alias("_off"),
+            F.sum("_c").over(by_lang).alias("_n"),
+        )
     )
     rank = F.col("_lr") + F.col("_off")  # 1-indexed rank within lang
     bidx = F.floor((rank - 1) * 3 / F.col("_n"))
@@ -690,7 +691,6 @@ def ccnet_ppl_buckets(
     )
     return (
         local.join(off_df, ["_pid", "lang"])
-        .join(tot_df, "lang")
         .groupBy("lang", bucket.alias("bucket"))
         .agg(
             F.count(F.lit(1)).alias("n_docs"),

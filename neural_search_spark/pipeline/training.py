@@ -66,6 +66,18 @@ def split_assign(
     )
 
 
+def _partition_offsets(totals: DataFrame, total_col: str) -> DataFrame:
+    """(_pid, _off): each range partition's base offset — the running sum
+    of ``total_col`` over every earlier partition of the per-partition
+    ``totals`` aggregate (one row per partition), computed in the JVM."""
+    from pyspark.sql import Window
+
+    before = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
+    return totals.select(
+        "_pid", F.coalesce(F.sum(total_col).over(before), F.lit(0)).cast("long").alias("_off")
+    )
+
+
 def pack_plan(
     df: DataFrame,
     budget: int,
@@ -86,8 +98,8 @@ def pack_plan(
     Scale shape: a global prefix sum WITHOUT a global sort — the two-stage
     distributed scan: range-partition by docID, per-partition running sums
     (window within partition), then a tiny per-partition-totals aggregate
-    (``n_ranges`` rows) is collected, prefix-summed driver-side, and
-    broadcast back as each partition's base offset. No single-partition
+    (``n_ranges`` rows) is prefix-summed by a window and broadcast back as
+    each partition's base offset. No single-partition
     bottleneck at any size; the only wide exchange is the range partition.
     """
     dl = df.select(
@@ -103,18 +115,8 @@ def pack_plan(
     local = parts.withColumn(
         "_local_start", F.sum("dl").over(w) - F.col("dl")
     ).persist()
-    totals = (
-        local.groupBy("_pid").agg(F.sum("dl").alias("_t")).orderBy("_pid").collect()
-    )
-    base, offsets = 0, {}
-    for r in totals:
-        offsets[r["_pid"]] = base
-        base += int(r["_t"])
-    spark = df.sparkSession
     off_df = F.broadcast(
-        spark.createDataFrame(
-            [(int(p), int(o)) for p, o in offsets.items()], "_pid int, _off long"
-        )
+        _partition_offsets(local.groupBy("_pid").agg(F.sum("dl").alias("_t")), "_t")
     )
     start = F.col("_local_start") + F.col("_off")
     end = start + F.col("dl")  # exclusive
@@ -151,9 +153,9 @@ def shuffle_order(
 
     Scale shape: a global dense rank WITHOUT a single-partition window —
     the same two-stage distributed scan as :func:`pack_plan`: range-
-    partition by (skey, docID), per-partition ``row_number``, then an
-    O(``n_ranges``) per-partition-counts collect is prefix-summed
-    driver-side and broadcast back as base offsets. The only wide
+    partition by (skey, docID), per-partition ``row_number``, then the
+    O(``n_ranges``) per-partition counts are prefix-summed by a window
+    (one partition, ``n_ranges`` rows) and broadcast back as base offsets. The only wide
     exchange is the range partition.
     """
     from pyspark.sql import Window
@@ -169,18 +171,8 @@ def shuffle_order(
     )
     w = Window.partitionBy("_pid").orderBy("skey", "docID")
     local = parts.withColumn("_local_pos", F.row_number().over(w) - 1).persist()
-    totals = (
-        local.groupBy("_pid").agg(F.count(F.lit(1)).alias("_n")).orderBy("_pid").collect()
-    )
-    base, offsets = 0, {}
-    for r in totals:
-        offsets[r["_pid"]] = base
-        base += int(r["_n"])
-    spark = df.sparkSession
     off_df = F.broadcast(
-        spark.createDataFrame(
-            [(int(p), int(o)) for p, o in offsets.items()], "_pid int, _off long"
-        )
+        _partition_offsets(local.groupBy("_pid").agg(F.count(F.lit(1)).alias("_n")), "_n")
     )
     return (
         local.join(off_df, "_pid")

@@ -41,6 +41,7 @@ from neural_search_spark.analysis.tokenizer import (
     term_freqs_udf,
     tokenize_text,
 )
+from neural_search_spark.session import local_table
 
 K1 = 1.2
 B = 0.75
@@ -120,10 +121,8 @@ def bm25_clause_scores(
         raise ValueError(f"unknown match operator {operator}")
     terms = sorted(set(terms))
     if not terms:
-        return postings.sparkSession.range(0).select(
-            F.col("id").alias("docID"), F.lit(0.0).alias("score")
-        )
-    qt = F.broadcast(spark.createDataFrame([(t,) for t in terms], "term string"))
+        return local_table(spark, [], "docID long, score double")
+    qt = F.broadcast(local_table(spark, [(t,) for t in terms], "term string"))
     matched = postings.join(qt, "term")
     # document frequency per query term over the full corpus: postings rows
     # are distinct (term, docID), so a plain count is n_t
@@ -166,12 +165,8 @@ def match_only_text_scores(engine: "BM25Engine", query_text: str) -> DataFrame:
 
     terms = sorted(set(tokenize_text(query_text)))
     if not terms:
-        return engine.spark.range(0).select(
-            F.col("id").alias("docID"), F.lit(0.0).alias("score")
-        )
-    qt = F.broadcast(
-        engine.spark.createDataFrame([(t,) for t in terms], "term string")
-    )
+        return local_table(engine.spark, [], "docID long, score double")
+    qt = F.broadcast(local_table(engine.spark, [(t,) for t in terms], "term string"))
     # postings rows are distinct (term, docID) → count(*) = distinct terms
     return (
         engine.postings.join(qt, "term")
@@ -200,9 +195,7 @@ def match_bool_prefix_scores(engine: "BM25Engine", query_text: str) -> DataFrame
     _stats.record_event("match_bool_prefix_query_requests")
     terms = tokenize_text(query_text)
     if not terms:
-        return engine.spark.range(0).select(
-            F.col("id").alias("docID"), F.lit(0.0).alias("score")
-        )
+        return local_table(engine.spark, [], "docID long, score double")
     fixed, prefix = terms[:-1], terms[-1]
     parts = [prefix_query_scores(engine, prefix)]
     if fixed:
@@ -245,12 +238,8 @@ def bm25_batch_scores(
         {(int(qid), t) for qid, ts in queries.items() for t in ts if t}
     )
     if not pairs:
-        return spark.range(0).select(
-            F.col("id").cast("int").alias("qid"),
-            F.col("id").alias("docID"),
-            F.lit(0.0).alias("score"),
-        )
-    qt = F.broadcast(spark.createDataFrame(pairs, "qid int, term string"))
+        return local_table(spark, [], "qid int, docID long, score double")
+    qt = F.broadcast(local_table(spark, pairs, "qid int, term string"))
     dfreq = (
         postings.join(F.broadcast(qt.select("term").distinct()), "term")
         .groupBy("term")
@@ -374,19 +363,15 @@ def match_phrase_scores(
     """
     terms = tokenize_text(phrase)
     if not terms:
-        return spark.range(0).select(F.col("id").alias("docID"), F.lit(0.0).alias("score"))
+        return local_table(spark, [], "docID long, score double")
     distinct_terms = sorted(set(terms))
-    qt = F.broadcast(
-        spark.createDataFrame([(t,) for t in distinct_terms], "term string")
-    )
+    qt = F.broadcast(local_table(spark, [(t,) for t in distinct_terms], "term string"))
     matched = postings.join(qt, "term")
     # index-wide document frequency per distinct term (Lucene stats are
     # filter/candidate-independent)
     dfreq = matched.groupBy("term").agg(F.count("*").alias("ndoc"))
     # phrase idf: one row per phrase POSITION joined to its term's ndoc
-    pos_df = F.broadcast(
-        spark.createDataFrame(list(enumerate(terms)), "pos int, term string")
-    )
+    pos_df = F.broadcast(local_table(spark, list(enumerate(terms)), "pos int, term string"))
     qidf = (
         pos_df.join(F.broadcast(dfreq), "term")
         .agg(F.sum(idf_col(stats.n_docs, F.col("ndoc"))).alias("qidf"))
@@ -546,9 +531,7 @@ def terms_query_scores(engine: "BM25Engine", terms: list[str]) -> DataFrame:
 
     _stats.record_event("terms_query_requests")
     tl = sorted({t.lower() for t in terms})
-    qt = F.broadcast(
-        engine.spark.createDataFrame([(t,) for t in tl], "term string")
-    )
+    qt = F.broadcast(local_table(engine.spark, [(t,) for t in tl], "term string"))
     return (
         engine.postings.join(qt, "term")
         .select("docID")
@@ -935,7 +918,7 @@ def more_like_this_scores(
     )
     terms = [r["term"] for r in cand.collect()]  # O(max_query_terms) rows
     if not terms:
-        return engine.spark.createDataFrame([], "docID long, score double")
+        return local_table(engine.spark, [], "docID long, score double")
     scored = bm25_clause_scores(
         engine.spark, engine.postings, engine.doclens, engine.stats, terms, k1=k1, b=b
     )
@@ -1070,14 +1053,10 @@ def match_phrase_prefix_scores(
     fixed, prefix = terms[:-1], terms[-1]
     m = len(terms)
     distinct_fixed = sorted(set(fixed))
-    qt = F.broadcast(
-        spark.createDataFrame([(t,) for t in distinct_fixed], "term string")
-    )
+    qt = F.broadcast(local_table(spark, [(t,) for t in distinct_fixed], "term string"))
     matched = postings.join(qt, "term")
     dfreq = matched.groupBy("term").agg(F.count("*").alias("ndoc"))
-    pos_df = F.broadcast(
-        spark.createDataFrame(list(enumerate(fixed)), "pos int, term string")
-    )
+    pos_df = F.broadcast(local_table(spark, list(enumerate(fixed)), "pos int, term string"))
     qidf = pos_df.join(F.broadcast(dfreq), "term").agg(
         F.sum(idf_col(stats.n_docs, F.col("ndoc"))).alias("qidf")
     )

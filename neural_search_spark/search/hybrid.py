@@ -37,6 +37,8 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, functions as F, Window
 
+from neural_search_spark.session import local_table
+
 # HybridQueryBuilder.java:67 — default; live value comes from the
 # settings surface ("hybrid_max_sub_queries")
 MAX_SUB_QUERIES = 5
@@ -311,14 +313,8 @@ def hybrid_batch_topk(
                 rows.append((int(qid), ci, t))
     spark = engine.spark
     if not rows:
-        return spark.range(0).select(
-            F.col("id").cast("int").alias("qid"),
-            F.col("id").alias("docID"),
-            F.lit(0.0).alias("score"),
-        )
-    qt = F.broadcast(
-        spark.createDataFrame(rows, "qid int, cidx int, term string")
-    )
+        return local_table(spark, [], "qid int, docID long, score double")
+    qt = F.broadcast(local_table(spark, rows, "qid int, cidx int, term string"))
     postings, doclens, stats = engine.postings, engine.doclens, engine.stats
     dfreq = (
         postings.join(F.broadcast(qt.select("term").distinct()), "term")
@@ -358,7 +354,8 @@ def hybrid_batch_topk(
         ]
     )
     nclause = F.broadcast(
-        spark.createDataFrame(
+        local_table(
+            spark,
             [(int(qid), float(len(c))) for qid, c in sorted(batches.items())],
             "qid int, _nc double",
         )

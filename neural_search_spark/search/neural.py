@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, functions as F
 from neural_search_spark.analysis.tokenizer import tokenize_text
 from neural_search_spark.pipeline import params as P
 from neural_search_spark.pipeline.embedding import N_DIMS
+from neural_search_spark.session import local_table
 
 
 def query_embedding_stub(query_text: str, n_dims: int = N_DIMS) -> list[float]:
@@ -341,12 +342,8 @@ def neural_batch_topk(
         for qid, qv in sorted(query_vectors.items())
     ]
     if not rows:
-        return spark.range(0).select(
-            F.col("id").cast("int").alias("qid"),
-            F.col("id").alias("docID"),
-            F.lit(0.0).alias("score"),
-        )
-    qt = F.broadcast(spark.createDataFrame(rows, "qid int, qv array<double>"))
+        return local_table(spark, [], "qid int, docID long, score double")
+    qt = F.broadcast(local_table(spark, rows, "qid int, qv array<double>"))
     scored = doc_embeddings.crossJoin(qt).select(
         "qid", "docID", P.round6(_dot(F.col(vec_col), F.col("qv"))).alias("score")
     )

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import FloatType, MapType, StringType
 
 from neural_search_spark.analysis.tokenizer import term_freqs_udf
+from neural_search_spark.session import local_table
 
 DEFAULT_PRUNE_TYPE = "max_ratio"
 DEFAULT_PRUNE_RATIO = 0.4
@@ -177,10 +178,10 @@ def neural_sparse_score(
 
     _stats.record_event("neural_sparse_query_requests")
     if not query_tokens:
-        return spark.range(0).select(F.col("id").alias("docID"), F.lit(0.0).alias("score"))
+        return local_table(spark, [], "docID long, score double")
     qt = F.broadcast(
-        spark.createDataFrame(
-            [(t, float(w)) for t, w in sorted(query_tokens.items())], "term string, qw double"
+        local_table(
+            spark, [(t, float(w)) for t, w in sorted(query_tokens.items())], "term string, qw double"
         )
     )
     matched = postings.join(qt, "term")

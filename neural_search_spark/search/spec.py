@@ -40,6 +40,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 
 from neural_search_spark.search.hybrid import MAX_SUB_QUERIES, hybrid_search
+from neural_search_spark.session import local_table
 
 LEXICAL_TYPES = ("match", "term", "match_phrase")
 CONSTANT_SCORE_TYPES = (
@@ -295,7 +296,7 @@ def _score_clause_impl(engine, clause: dict, filter_expr: str | None) -> DataFra
                     engine.match(" ".join(c["terms"]), filter_expr=filter_expr)
                 )
         if not clauses:
-            return engine.spark.createDataFrame([], "docID long, score double")
+            return local_table(engine.spark, [], "docID long, score double")
         scored = hybrid_raw_sum(clauses)
         for mn in parsed["must_not"]:
             scored = scored.join(

@@ -37,6 +37,7 @@ from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 from neural_search_spark.analysis.tokenizer import tokenize_text
 from neural_search_spark.index.codec import decode_posting_list
 from neural_search_spark.search.bm25 import B, K1
+from neural_search_spark.session import local_table
 
 SCORE_SCHEMA = StructType(
     [StructField("docID", LongType(), False), StructField("score", DoubleType(), False)]
@@ -216,7 +217,7 @@ class BlockMaxIndex:
         dfs = self.global_dfs(terms)
         terms = [t for t in terms if t in dfs]
         if not terms:
-            return self.spark.createDataFrame([], SCORE_SCHEMA)
+            return local_table(self.spark, [], SCORE_SCHEMA)
         n = self.stats["n_docs"]
         idf = {t: math.log(1.0 + (n - dfs[t] + 0.5) / (dfs[t] + 0.5)) for t in terms}
         kernel = _shard_kernel_factory(idf, self.avgdl, k, k1, b, prune)

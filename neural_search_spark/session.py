@@ -7,13 +7,21 @@ the local[N] sandbox:
 - Arrow on (all Python compute goes through vectorized pandas/Arrow UDFs;
   never row-at-a-time Python — BASELINE.json input_hint).
 - shuffle partitions sized by env (cluster: ~2-3x total cores; sandbox: 32).
+
+Rule: a driver-side literal table (query terms, phrase positions, batch
+query vectors) is built with ``local_table``, never with
+``createDataFrame(<list>)``. Classic PySpark plans a list as ``Scan
+ExistingRDD`` — a Python RDD that every execution re-reads through
+Python-worker tasks; ``local_table`` keeps the rows in the JVM.
 """
 
 from __future__ import annotations
 
+import json
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import ArrayType, StructType, _parse_datatype_string
 
 
 def _default_driver_mem() -> str:
@@ -58,3 +66,38 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def local_table(spark: SparkSession, rows: list[tuple], schema: str | StructType) -> DataFrame:
+    """A small literal table that lives in the JVM: ``rows`` (tuples in
+    ``schema`` field order) become one JSON string literal, parsed by
+    ``from_json`` with the declared schema and exploded by ``inline`` over
+    a one-row range. Catalyst folds the parse into one array literal, so
+    no Python-worker task ever reads the rows, an empty ``rows`` plans the
+    same way, and the schema comes out exactly as declared (``int`` vs
+    ``long``, ``array<double>``, nullability). A row of the wrong width,
+    or a None in a NOT NULL field, raises ValueError, and FAILFAST makes a
+    value that does not fit its declared type raise instead of reading as
+    null. Meant for query-sized tables (up to a few thousand rows): the
+    whole table is one literal in the plan."""
+    st = schema if isinstance(schema, StructType) else _parse_datatype_string(schema)
+    payload = json.dumps([dict(zip(st.names, r, strict=True)) for r in rows])
+    notnull = [i for i, f in enumerate(st.fields) if not f.nullable]
+    if any(r[i] is None for r in rows for i in notnull):
+        raise ValueError("local_table: None in a NOT NULL field")
+    df = spark.range(0, 1, 1, 1).select(
+        F.inline(F.from_json(F.lit(payload), ArrayType(st), {"mode": "FAILFAST"}))
+    )
+    if not notnull:
+        return df
+    # from_json reads every field as nullable; a NOT NULL (numeric,
+    # boolean or string) field gets it back by a coalesce that no row
+    # reaches, its fallback being a typed constant
+    return df.select(
+        *(
+            F.col(f.name)
+            if f.nullable
+            else F.coalesce(F.col(f.name), F.lit(0).cast(f.dataType)).alias(f.name)
+            for f in st.fields
+        )
+    )

@@ -546,6 +546,30 @@ def test_ngram_decontaminate(spark):
     assert got == {0: 1}  # only "alpha beta gamma" overlaps
 
 
+def test_ngram_decontaminate_keeps_string_ids(spark):
+    """The output docID carries the caller's id type: a string-id corpus
+    (under a non-default id column) comes back as string ids."""
+    from pyspark.sql.types import StringType
+
+    from neural_search_spark.pipeline.decontam import ngram_decontaminate
+
+    corpus = spark.createDataFrame(
+        [
+            ("doc-a", "alpha beta gamma delta"),
+            ("doc-b", "alpha beta zeta"),
+            ("doc-c", "beta gamma epsilon alpha beta gamma"),
+        ],
+        "uid string, content string",
+    )
+    bench = spark.createDataFrame(
+        [(100, "alpha beta gamma epsilon")], "docID long, content string"
+    )
+    out = ngram_decontaminate(corpus, bench, n=3, id_col="uid")
+    assert out.schema["docID"].dataType == StringType()
+    got = {r["docID"]: r["n_hit_ngrams"] for r in out.collect()}
+    assert got == {"doc-a": 1, "doc-c": 2}
+
+
 def test_stratified_sample_deterministic_and_stratified(spark):
     from neural_search_spark.pipeline.training import stratified_sample
 

@@ -13,6 +13,8 @@ from __future__ import annotations
 
 import pytest
 
+from neural_search_spark.search.wand import SCORE_SCHEMA
+
 SF_DIR = "/root/testdata/sf0.001"
 
 
@@ -52,15 +54,19 @@ def test_wand_path_is_bounded_exchange_topk(spark, entry):
 
 def test_phrase_default_routes_through_positional_index(spark, entry):
     """bm25_phrase_topk (the registry DEFAULT since round 6) must carry
-    the positional-index plan: no SortMergeJoin (the scan path's position
-    chain join) and no MapInPandas corpus re-tokenization; the explicit
-    scan exhibit keeps both."""
+    the positional-index plan: it reads the positional postings, never
+    re-reads corpus text to verify positions, and has no SortMergeJoin.
+    The explicit scan exhibit keeps the scan shape: a regexp verify over
+    the corpus text, semi-joined to the postings candidates (the join
+    strategy is the planner's), and no positional index."""
     qmap = entry.queries()
     default = _plan(qmap["bm25_phrase_topk"](spark, SF_DIR))
     assert "SortMergeJoin" not in default
     assert "TakeOrderedAndProject" in default
+    assert "nss_positions_" in default and "regexp_" not in default
     scan = _plan(qmap["bm25_phrase_scan_topk"](spark, SF_DIR))
-    assert "SortMergeJoin" in scan  # the exhibit keeps the scan shape
+    assert "nss_positions_" not in scan
+    assert "regexp_" in scan and "LeftSemi" in scan
 
 
 def test_delegate_raw_routes_are_artifact_bounded(spark, entry):
@@ -96,3 +102,117 @@ def test_two_phase_spec_rescore_broadcasts_the_window(spark, entry):
         p = _plan(entry.queries()[key](spark, SF_DIR))
         assert "SortMergeJoin" not in p, key
         assert "TakeOrderedAndProject" in p, key
+
+
+#: keys whose query-time plans used to read driver-side literal tables
+#: (query terms, phrase positions, batch query vectors) as Python RDDs
+PYRDD_FREE_KEYS = (
+    "bm25_match_topk",
+    "bm25_batch_topk",
+    "bm25_phrase_topk",
+    "bm25_phrase_indexed_topk",
+    "bm25_phrase_scan_topk",
+    "bm25_multi_match_phrase",
+    "match_phrase_prefix_topk",
+    "match_bool_prefix_topk",
+    "prefix_topk",
+    "fuzzy_topk",
+    "terms_topk",
+    "span_near_topk",
+    "neural_batch_topk",
+)
+
+
+def test_query_time_literal_tables_stay_in_the_jvm(spark, entry):
+    """No listed key — the lexical rewrites, every hybrid_* key (batch
+    included), the spec and the sparse keys — plans a ``Scan
+    ExistingRDD`` outside a cached relation: such a scan re-reads its
+    rows through Python-worker tasks on every execution."""
+    from tools.plan_audit import audit_one
+
+    qmap = entry.queries()
+    keys = set(PYRDD_FREE_KEYS) | {
+        k for k in qmap if k.startswith("hybrid_") or "spec" in k or "sparse" in k
+    }
+    found = {k: audit_one(qmap[k](spark, SF_DIR))["pyrdd"] for k in sorted(keys)}
+    assert {k: n for k, n in found.items() if n} == {}
+    assert {"hybrid_batch_topk", "sparse_score_topk", "hybrid_spec_full"} <= keys
+
+
+@pytest.mark.parametrize(
+    "rows, schema",
+    [
+        ([], "docID long, score double"),
+        ([(7, "term")], "pos int, term string"),
+        ([(1, [0.1, 0.30000000000000004]), (2, [-1e-300, 2.5])], "qid int, qv array<double>"),
+        ([], SCORE_SCHEMA),
+        ([(3, 1.5), (9, -0.25)], SCORE_SCHEMA),
+    ],
+    ids=["empty", "one_row", "array_double", "not_null_empty", "not_null"],
+)
+def test_local_table_plans_no_python_rdd(spark, rows, schema):
+    """``local_table`` keeps its rows in the JVM for an empty table, one
+    row, an ``array<double>`` column and NOT NULL fields (the block-max
+    index's score schema), with the declared schema."""
+    from pyspark.sql.types import StructType, _parse_datatype_string
+
+    from neural_search_spark.session import local_table
+    from tools.plan_audit import python_rdd_scans
+
+    df = local_table(spark, rows, schema)
+    plan = _plan(df)
+    assert python_rdd_scans(plan) == 0 and "ExistingRDD" not in plan
+    assert df.schema == (schema if isinstance(schema, StructType) else _parse_datatype_string(schema))
+    assert [tuple(r) for r in df.collect()] == rows
+
+
+def test_local_table_rejects_misfit_rows(spark):
+    """A row of the wrong width, a None in a NOT NULL field, or a value
+    its declared type cannot hold raises instead of reading as null."""
+    from neural_search_spark.session import local_table
+
+    with pytest.raises(ValueError):
+        local_table(spark, [(1, "a", "extra")], "pos int, term string")
+    with pytest.raises(ValueError):
+        local_table(spark, [(1, None)], SCORE_SCHEMA)
+    with pytest.raises(Exception, match="MALFORMED_RECORD"):
+        local_table(spark, [(2**40,)], "pos int").collect()
+
+
+def test_python_rdd_scans_skips_cached_relations():
+    """The audit counts a Python-RDD scan read at query time and skips the
+    one under an InMemoryRelation (read once, when the cache is built)."""
+    from tools.plan_audit import python_rdd_scans
+
+    plan = """== Physical Plan ==
+AdaptiveSparkPlan (8)
++- BroadcastHashJoin Inner BuildLeft (7)
+   :- BroadcastExchange (4)
+   :  +- InMemoryTableScan (1)
+   :        +- InMemoryRelation (2)
+   :              +- * Scan ExistingRDD (3)
+   +- Filter (6)
+      +- Scan ExistingRDD (5)
+
+
+(3) Scan ExistingRDD [codegen id : 1]
+(5) Scan ExistingRDD
+"""
+    assert python_rdd_scans(plan) == 1
+
+
+def test_library_builds_no_python_list_tables():
+    """Static guard: the library calls ``createDataFrame`` only in
+    ``corpus.py`` (over a pandas frame); every driver-side literal table
+    goes through ``session.local_table``."""
+    import pathlib
+    import re
+
+    root = pathlib.Path(__file__).resolve().parent.parent / "neural_search_spark"
+    hits = {
+        (str(p.relative_to(root)), line.strip())
+        for p in root.rglob("*.py")
+        for line in p.read_text().splitlines()
+        if re.search(r"\.createDataFrame\b", line)
+    }
+    assert hits == {("corpus.py", "return spark.createDataFrame(pdf)")}

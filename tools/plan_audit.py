@@ -3,8 +3,8 @@
 For each requested key, builds the DataFrame at the given sf dir and
 counts plan nodes in `explain("formatted")` output: shuffles, join
 strategies, cached-table scans, Arrow Python nodes, parquet pushdown,
-and whether the final cut is TakeOrderedAndProject. Prints a PLANS.md
-markdown row per key.
+whether the final cut is TakeOrderedAndProject, and query-time Python-RDD
+scans. Prints a PLANS.md markdown row per key.
 
 Usage: python tools/plan_audit.py [sf_dir] [key1,key2,...]
 """
@@ -12,9 +12,29 @@ Usage: python tools/plan_audit.py [sf_dir] [key1,key2,...]
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+def python_rdd_scans(plan: str) -> int:
+    """``Scan ExistingRDD`` nodes in a formatted plan's tree, not counting
+    those under an ``InMemoryRelation`` (read once, when the cache is
+    built). ``createDataFrame`` over a list plans this way: a Python RDD
+    that Python-worker tasks re-read on every execution. A checkpointed
+    frame (JVM-side, e.g. connected components) plans this way too."""
+    n, cached = 0, None  # tree depth of the InMemoryRelation being skipped
+    for line in plan.splitlines():
+        m = re.match(r"([ :+\-*]*)(\S.*) \(\d+\)$", line)
+        if not m or line.startswith("("):  # not a tree line
+            continue
+        depth, node = len(m.group(1)), m.group(2)
+        if cached is not None and depth > cached:
+            continue
+        cached = depth if node.startswith("InMemoryRelation") else None
+        n += node.startswith("Scan ExistingRDD")
+    return n
 
 
 def audit_one(df) -> dict:
@@ -38,6 +58,7 @@ def audit_one(df) -> dict:
         )
         else "-",
         "topk": "yes" if "TakeOrderedAndProject" in s else "-",
+        "pyrdd": python_rdd_scans(s),
     }
 
 
@@ -61,7 +82,8 @@ def main() -> None:
             continue
         print(
             f"| {name} | {row['exch']} | {row['BHJ']} | {row['SMJ']} | "
-            f"{row['BNLJ']} | {row['mem']} | {row['arrow']} | {row['push']} | {row['topk']} |"
+            f"{row['BNLJ']} | {row['mem']} | {row['arrow']} | {row['push']} | {row['topk']} | "
+            f"{row['pyrdd']} |"
         )
     spark.stop()
 

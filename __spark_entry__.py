@@ -1162,7 +1162,7 @@ def _sparse_postings(spark: SparkSession, sf_dir: str, prune=None) -> DataFrame:
     it is derived once per (session, corpus, prune) and cached; queries
     only join against it."""
     from neural_search_spark.search.sparse import (
-        prune_map_udf,
+        prune_features,
         sparse_features_from_tf,
         sparse_postings,
     )
@@ -1171,10 +1171,7 @@ def _sparse_postings(spark: SparkSession, sf_dir: str, prune=None) -> DataFrame:
     if key not in _SPARSE_POSTINGS:
         feats = sparse_features_from_tf(corpus_from_documents(spark, sf_dir))
         if prune is not None:
-            ptype, ratio = prune
-            feats = feats.select(
-                "docID", prune_map_udf(ptype, ratio)("features").alias("features")
-            )
+            feats = prune_features(feats, *prune)
         _SPARSE_POSTINGS[key] = sparse_postings(feats).cache()
     return _SPARSE_POSTINGS[key]
 

@@ -33,15 +33,13 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType
 
-from neural_search_spark.analysis.tokenizer import TOKEN_PATTERN
+from neural_search_spark.analysis.tokenizer import TOKEN_RE
 
 DEFAULT_MAX_CHUNK_LIMIT = 100
 DISABLED_MAX_CHUNK_LIMIT = -1
 DEFAULT_DELIMITER = "\n\n"
 DEFAULT_TOKEN_LIMIT = 384
 DEFAULT_CHAR_LIMIT = 2048
-
-_TOKEN_RE = re.compile(TOKEN_PATTERN)
 
 #: Word tokenizers accepted by the reference chunker
 #: (``processor/chunker/FixedTokenLengthChunker.java:56-64``,
@@ -55,7 +53,7 @@ _WHITESPACE_RE = re.compile(r"\S+")
 _LETTER_RE = re.compile(r"[^\W\d_]+", re.UNICODE)
 _TOKENIZERS = {
     # the repo's standard tokenizer (lowercase + word pattern)
-    "standard": lambda content: _TOKEN_RE.finditer(content.lower()),
+    "standard": lambda content: TOKEN_RE.finditer(content.lower()),
     # maximal non-whitespace runs
     "whitespace": lambda content: _WHITESPACE_RE.finditer(content),
     # maximal letter-only runs (digits/punct break tokens)

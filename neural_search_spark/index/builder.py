@@ -43,7 +43,6 @@ from pyspark.sql.types import (
     BinaryType,
     IntegerType,
     LongType,
-    MapType,
     StringType,
     StructField,
     StructType,
@@ -54,7 +53,8 @@ from neural_search_spark.index.codec import (
     FORMAT_VERSION,
     encode_posting_list,
 )
-from neural_search_spark.index.smallfloat import quantize_length_np
+from neural_search_spark.analysis.tokenizer import explode_term_freqs, term_freqs
+from neural_search_spark.search.bm25 import quantize_length_col
 
 POSTINGS_SCHEMA = StructType(
     [
@@ -176,52 +176,48 @@ def _encode_stream_factory(block_size: int):
     return encode_stream
 
 
-_TF_DLQ_SCHEMA = StructType(
-    [
-        StructField("tf_map", MapType(StringType(), IntegerType()), False),
-        StructField("dl", IntegerType(), False),
-        StructField("dlq", IntegerType(), False),
-    ]
-)
+def _compact_docs(corpus: DataFrame, n_shards: int, text_col: str, id_col: str) -> DataFrame:
+    """corpus → (docID, shard, _tf, dlq): one row per doc, with the
+    analyzer's ``term_freqs`` struct (tf_map, dl) and the SmallFloat
+    quantized length. Quantized per doc, BEFORE the explode: after it, the
+    same value would be computed once per posting row."""
+    return corpus.select(
+        F.col(id_col).alias("docID"),
+        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_shards)).cast("int").alias("shard"),
+        term_freqs(text_col).alias("_tf"),
+    ).withColumn("dlq", quantize_length_col("_tf.dl"))
 
 
-@F.pandas_udf(_TF_DLQ_SCHEMA)
-def _tf_dlq_udf(texts: pd.Series) -> pd.DataFrame:
-    """content → (map<term,tf>, dl, quantized dl) in ONE Arrow pass.
-
-    Quantization runs here, per doc, BEFORE the explode: doing it after
-    would push every posting row (avg-tf x more rows) through a second
-    Python round-trip for a value that is constant per doc."""
-    from collections import Counter
-
-    from neural_search_spark.analysis.tokenizer import _TOKEN_RE
-
-    toks = texts.fillna("").str.lower().str.findall(_TOKEN_RE)
-    dl = np.fromiter((len(t) for t in toks), dtype=np.int64, count=len(toks))
-    return pd.DataFrame(
-        {
-            "tf_map": [dict(Counter(t)) for t in toks],
-            "dl": dl.astype("int32"),
-            "dlq": quantize_length_np(dl).astype("int32"),
-        }
-    )
+def _postings_of(compact: DataFrame) -> DataFrame:
+    """compact doc rows → (docID, shard, dl, dlq, term, tf)."""
+    return explode_term_freqs(compact, "docID", "shard", F.col("_tf.dl").alias("dl"), "dlq")
 
 
 def raw_postings(corpus: DataFrame, n_shards: int, text_col: str = "content", id_col: str = "docID") -> DataFrame:
     """corpus → (docID, shard, term, tf, dl, dlq): tokenize once, carry the
     doc length with every posting row so the encoder never joins doclens
-    (at 10^12 docs that join would be a second full shuffle). The explode
+    (at 10^12 docs that join would be a second full shuffle). Everything
     runs JVM-side; nothing per-posting ever touches Python here."""
-    return corpus.select(
-        F.col(id_col).alias("docID"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_shards)).cast("int").alias("shard"),
-        _tf_dlq_udf(F.col(text_col)).alias("_tf"),
-    ).select(
-        "docID",
-        "shard",
-        F.col("_tf.dl").alias("dl"),
-        F.col("_tf.dlq").alias("dlq"),
-        F.explode(F.col("_tf.tf_map")).alias("term", "tf"),
+    return _postings_of(_compact_docs(corpus, n_shards, text_col, id_col))
+
+
+def _shard_sorted_postings(corpus: DataFrame, n_shards: int, text_col: str, id_col: str) -> DataFrame:
+    """Stage A's raw checkpoint rows, with ONE shuffle for the whole build.
+
+    The shuffle moves the COMPACT per-doc rows (docID, shard, tf_map, dl,
+    dlq) — one record per document — not the exploded postings: the
+    explode multiplies record count by the distinct-terms-per-doc factor
+    (~23x here), and shuffling that many tiny rows dominates CPU in
+    serialization + GC. The tf_map IS the map-side combine. Reduce side:
+    explode, then partition-local sort by (shard, term, docID) so the raw
+    checkpoint is stored run-contiguous and stage B is a pure scan+encode,
+    shuffle-free. (Writing partitionBy straight from the map tasks instead
+    would open n_shards parquet writers per task — buffer explosion.) 4x
+    partitions so hash collisions between shard keys do not double-load
+    reduce tasks (a key still lands wholly in one task)."""
+    compact = _compact_docs(corpus, n_shards, text_col, id_col)
+    return _postings_of(compact.repartition(4 * n_shards, "shard")).sortWithinPartitions(
+        "shard", "term", "docID"
     )
 
 
@@ -275,21 +271,6 @@ def build_index(
     t0 = time.perf_counter()
 
     if not done_stage_a:
-        # ONE shuffle for the whole build, and it moves the COMPACT per-doc
-        # rows (docID, shard, tf_map, dl, dlq) — one record per document —
-        # not the exploded postings: the explode multiplies record count by
-        # the distinct-terms-per-doc factor (~23x here), and shuffling that
-        # many tiny rows dominates CPU in serialization + GC. The tf_map IS
-        # the map-side combine. Reduce side: explode, then partition-local
-        # sort by (shard, term, docID) so the raw checkpoint is stored
-        # run-contiguous and stage B is a pure scan+encode, shuffle-free.
-        # (Writing partitionBy straight from the 128 map tasks instead
-        # would open n_shards parquet writers per task — buffer explosion.)
-        compact = corpus.select(
-            F.col(id_col).alias("docID"),
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_shards)).cast("int").alias("shard"),
-            _tf_dlq_udf(F.col(text_col)).alias("_tf"),
-        )
         # docmap: (docID, sha) per shard — the content-identity checkpoint
         # that update_index anti-joins against to skip unchanged docs (the
         # reference's inference-skip filter,
@@ -313,22 +294,9 @@ def build_index(
 
         docmap_thread = threading.Thread(target=_write_docmap, daemon=True)
         docmap_thread.start()
-        (
-            # 4x partitions so hash collisions between shard keys do not
-            # double-load reduce tasks (a key still lands wholly in one task)
-            compact.repartition(4 * n_shards, "shard")
-            .select(
-                "docID",
-                "shard",
-                F.col("_tf.dl").alias("dl"),
-                F.col("_tf.dlq").alias("dlq"),
-                F.explode(F.col("_tf.tf_map")).alias("term", "tf"),
-            )
-            .sortWithinPartitions("shard", "term", "docID")
-            .write.partitionBy("shard")
-            .mode("overwrite")
-            .parquet(raw_dir)
-        )
+        _shard_sorted_postings(corpus, n_shards, text_col, id_col).write.partitionBy(
+            "shard"
+        ).mode("overwrite").parquet(raw_dir)
         t_shuffle = time.perf_counter()
         docmap_thread.join()
         if docmap_err:

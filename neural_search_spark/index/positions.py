@@ -32,7 +32,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from neural_search_spark.analysis.tokenizer import TOKEN_PATTERN, tokenize_text
+from neural_search_spark.analysis.tokenizer import analyzed_tokens, tokenize_text
 from neural_search_spark.search.bm25 import B, K1, CorpusStats, idf_col, topk
 from neural_search_spark.session import local_table
 
@@ -60,7 +60,7 @@ def build_positions(
     term), one groupBy (docID, term) shuffle collecting sorted position
     lists, dynamic-partition write. The shuffle moves one row per token
     occurrence — the irreducible payload of a positional index."""
-    toks = F.expr(f"regexp_extract_all(lower({text_col}), '{TOKEN_PATTERN}', 0)")
+    toks = analyzed_tokens(text_col)
     long = corpus.select(
         F.col(id_col).alias("docID"), F.posexplode(toks).alias("pos", "term")
     )

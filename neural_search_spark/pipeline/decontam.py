@@ -23,7 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from neural_search_spark.analysis.tokenizer import TOKEN_PATTERN
+from neural_search_spark.analysis.tokenizer import analyzed_tokens, tokenize_text
 
 DECONTAM_N = 8  # word n-gram width (GPT-3 used 13; 8 suits short docs)
 
@@ -32,7 +32,7 @@ def _distinct_ngrams(df: DataFrame, n: int, text_col: str, id_col: str) -> DataF
     """(docID, ngram) — each document's DISTINCT word n-grams (analyzed
     tokens, space-joined). The ``size >= n`` guard matters: Spark's
     ``sequence(1, 0)`` counts down."""
-    toks = F.expr(f"regexp_extract_all(lower({text_col}), '{TOKEN_PATTERN}', 0)")
+    toks = analyzed_tokens(text_col)
     base = df.select(F.col(id_col).alias("docID"), toks.alias("_toks"))
     grams = F.when(
         F.size("_toks") >= n,
@@ -58,21 +58,17 @@ def ngram_decontaminate(
     doc's distinct contaminated n-grams (the drop/scrub decision input).
     Docs with no overlap are absent (the clean set is the anti-join).
     """
-    import re
-
     import pandas as pd
     from pyspark.sql.types import LongType, StructField, StructType
 
     # The benchmark side is eval-set-sized BY CONTRACT (module docstring),
     # so its distinct n-gram set is driver-collectable as one Python set.
     # Grams are built with the identical recipe as _distinct_ngrams
-    # (lower → TOKEN_PATTERN runs → space-join of n consecutive tokens);
-    # the engine's tokenizer already runs this exact Python path for
-    # postings (term_freqs_udf), so the two tokenizations agree.
-    tok_re = re.compile(TOKEN_PATTERN)
-
+    # (analyzed tokens → space-join of n consecutive tokens): tokenize_text
+    # is the Python twin of the Spark analyzer, pinned to it by
+    # tests/test_tokenizer.py, so the two tokenizations agree.
     def _grams_of(text: str) -> set:
-        toks = tok_re.findall((text or "").lower())
+        toks = tokenize_text(text)
         return {
             " ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)
         }

@@ -28,14 +28,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from neural_search_spark.analysis.tokenizer import TOKEN_PATTERN
+from neural_search_spark.analysis.tokenizer import analyzed_tokens
 from neural_search_spark.pipeline import params as P
-
-
-def _tokens(col: str) -> Column:
-    """JVM-side analyzer: lowercase + maximal [a-z0-9_]+ runs (same
-    contract as the tokenizer pandas UDF, but codegen-friendly here)."""
-    return F.expr(f"regexp_extract_all(lower({col}), '{TOKEN_PATTERN}', 0)")
 
 
 def _hash32(col: Column) -> Column:
@@ -78,18 +72,15 @@ def _shingle_hash_udf(n: int):
     re-evaluates the token array per lambda element and the md5→hex→conv
     chain allocates several strings per shingle; this Arrow batch does the
     same hash (identical ``params.hash32_py`` contract, shared with the
-    DuckDB oracle) in ~3 s — the same vectorized-UDF pattern as the
-    engine's tokenizer. One Arrow round-trip per batch, no per-row Spark
-    UDF calls."""
+    DuckDB oracle) in ~3 s. One Arrow round-trip per batch, no per-row
+    Spark UDF calls."""
     import hashlib
-    import re
 
     import pandas as pd
     from pyspark.sql.types import ArrayType, LongType
 
-    from neural_search_spark.analysis.tokenizer import TOKEN_PATTERN
+    from neural_search_spark.analysis.tokenizer import tokenize_text
 
-    tok_re = re.compile(TOKEN_PATTERN)
     md5 = hashlib.md5
 
     # no type hints: dedup.py uses `from __future__ import annotations`,
@@ -97,8 +88,8 @@ def _shingle_hash_udf(n: int):
     @F.pandas_udf(ArrayType(LongType()))
     def _sh(texts):
         out = []
-        for t in texts.fillna(""):
-            toks = tok_re.findall(t.lower())
+        for t in texts:
+            toks = tokenize_text(t)
             # per-doc DEDUP here (dict preserves first occurrence): every
             # consumer treats shingles as a per-doc SET, and doc-local
             # dedup inside the batch makes the former corpus-wide
@@ -370,7 +361,7 @@ def canonical_per_cluster(
     sort, no corpus shuffle."""
     dl = corpus.select(
         F.col(id_col).alias("docID"),
-        F.size(_tokens(text_col)).cast("long").alias("dl"),
+        F.size(analyzed_tokens(text_col)).cast("long").alias("dl"),
     )
     from pyspark.sql import Window
 
@@ -407,7 +398,7 @@ def simhash(df: DataFrame, text_col: str = "content", id_col: str = "docID") -> 
     words (params.SIMHASH_* — the two-word form keeps all bit arithmetic
     inside signed int64 in Spark, DuckDB and Python)."""
     tf = (
-        df.select(F.col(id_col).alias("docID"), F.explode(_tokens(text_col)).alias("term"))
+        df.select(F.col(id_col).alias("docID"), F.explode(analyzed_tokens(text_col)).alias("term"))
         .groupBy("docID", "term")
         .agg(F.count("*").alias("tf"))
         .withColumn("th_lo", _hash32(F.col("term")))
@@ -834,9 +825,7 @@ def substring_dup_stats(
     exchanges, which is the shape that survives 100 TB. Docs shorter than
     ``n`` tokens report 0 grams and fraction 0.0.
     """
-    from neural_search_spark.analysis.tokenizer import TOKEN_PATTERN
-
-    toks = F.expr(f"regexp_extract_all(lower({text_col}), '{TOKEN_PATTERN}', 0)")
+    toks = analyzed_tokens(text_col)
     base = df.select(F.col(id_col).alias("docID"), toks.alias("_toks"))
     grams_arr = F.when(
         F.size("_toks") >= n,

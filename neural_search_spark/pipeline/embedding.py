@@ -46,21 +46,19 @@ def text_embedding_stub(
     Spark's. Docs with zero tokens emit no row (the explode dropped them
     the same way)."""
     import math
-    import re
 
     import pandas as pd
 
     from neural_search_spark import stats as _stats
-    from neural_search_spark.analysis.tokenizer import TOKEN_PATTERN
+    from neural_search_spark.analysis.tokenizer import tokenize_text
 
     _stats.record_event("text_embedding_executions")
-    tok_re = re.compile(TOKEN_PATTERN)
 
     def _embed(batches):
         for pdf in batches:
             ids, embs = [], []
             for doc_id, t in zip(pdf["docID"], pdf["_text"]):
-                toks = tok_re.findall(("" if t is None else t).lower())
+                toks = tokenize_text(t)
                 if not toks:
                     continue
                 dims = [0.0] * n_dims
@@ -95,20 +93,17 @@ def embedding_col_udf(n_dims: int = N_DIMS):
     (semantic mapping) and would otherwise pay a docID join + two
     exchanges to re-attach a value that is a pure function of the row."""
     import math
-    import re
 
     import pandas as pd
     from pyspark.sql.types import ArrayType, DoubleType
 
-    from neural_search_spark.analysis.tokenizer import TOKEN_PATTERN
-
-    tok_re = re.compile(TOKEN_PATTERN)
+    from neural_search_spark.analysis.tokenizer import tokenize_text
 
     @F.pandas_udf(ArrayType(DoubleType()))
     def _emb(texts):
         out = []
         for t in texts:
-            toks = tok_re.findall(("" if t is None else t).lower())
+            toks = tokenize_text(t)
             if not toks:
                 out.append(None)
                 continue
@@ -132,22 +127,18 @@ def sparse_features_col_udf():
     :func:`neural_search_spark.search.sparse.sparse_features_from_tf`
     restricted to non-empty values, for the same join-avoidance reason as
     :func:`embedding_col_udf`."""
-    import re
-
     import pandas as pd
     from pyspark.sql.types import FloatType, MapType, StringType
 
     from collections import Counter
 
-    from neural_search_spark.analysis.tokenizer import TOKEN_PATTERN
-
-    tok_re = re.compile(TOKEN_PATTERN)
+    from neural_search_spark.analysis.tokenizer import tokenize_text
 
     @F.pandas_udf(MapType(StringType(), FloatType()))
     def _feats(texts):
         out = []
         for t in texts:
-            toks = tok_re.findall(("" if t is None else t).lower())
+            toks = tokenize_text(t)
             if not toks:
                 out.append(None)
                 continue

@@ -163,9 +163,10 @@ def text_image_embedding_stub(
     batch shape. Returns long form (docID, dim, value) for the oracle gate.
     """
     from neural_search_spark import stats as _stats
+    from neural_search_spark.analysis.tokenizer import analyzed_tokens
 
     _stats.record_event("text_image_embedding_executions")
-    toks = F.expr(f"regexp_extract_all(lower({text_col}), '[a-z0-9_]+', 0)")
+    toks = analyzed_tokens(text_col)
     tcnt = (
         df.select(F.col(id_col).alias("docID"), F.explode(toks).alias("term"))
         .groupBy("docID", (F.length("term") % TEXT_DIMS).cast("int").alias("dim"))

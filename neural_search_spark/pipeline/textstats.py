@@ -10,12 +10,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from neural_search_spark.analysis.tokenizer import TOKEN_PATTERN
+from neural_search_spark.analysis.tokenizer import analyzed_tokens
 from neural_search_spark.pipeline import params as P
-
-
-def _tokens(col: str) -> Column:
-    return F.expr(f"regexp_extract_all(lower({col}), '{TOKEN_PATTERN}', 0)")
 
 
 def _stopword_count(toks: Column, words: list[str]) -> Column:
@@ -44,7 +40,7 @@ def lang_id(df: DataFrame, text_col: str = "content", id_col: str = "docID") -> 
     argmax over per-language stopword hit counts; ties break by
     params.LANGS order (first wins); zero hits everywhere → 'und'.
     """
-    toks = _tokens(text_col)
+    toks = analyzed_tokens(text_col)
     counts = {lang: _stopword_count(toks, P.STOPWORDS[lang]) for lang in P.LANGS}
     g = F.greatest(*counts.values())
     pred = F.when(g == 0, F.lit("und"))
@@ -61,7 +57,7 @@ def quality_scores(df: DataFrame, text_col: str = "content", id_col: str = "docI
     a simple monotone composite; the contract is determinism, not a
     claim about linguistic quality.
     """
-    toks = _tokens(text_col)
+    toks = analyzed_tokens(text_col)
     n_chars = F.length(F.col(text_col)).cast("long")
     n_tokens = F.size(toks).cast("long")
     alpha = F.length(F.regexp_replace(F.lower(F.col(text_col)), "[^a-z]", "")).cast("double")
@@ -155,7 +151,7 @@ def fingerprints(df: DataFrame, text_col: str = "content", id_col: str = "docID"
     """(docID, fingerprint): rolling polynomial hash over analyzed tokens,
     acc = (acc*31 + hash32(token)) mod P. Order-sensitive (unlike the
     shingle-set hashes), so it fingerprints the document *sequence*."""
-    toks = _tokens(text_col)
+    toks = analyzed_tokens(text_col)
     fp = F.aggregate(
         toks,
         F.lit(0).cast("long"),
@@ -198,7 +194,7 @@ def repetition_stats(
         F.col(id_col).alias("docID"),
         n_lines.alias("n_lines"),
         P.round6(dup_frac).alias("dup_line_frac"),
-        _tokens(text_col).alias("_toks"),
+        analyzed_tokens(text_col).alias("_toks"),
     )
     bigrams = base.select(
         "docID",
@@ -334,7 +330,7 @@ def vocab_topk(
     ``TakeOrderedAndProject`` for the global top-k (per-partition heaps,
     driver merges k rows per partition; never a global sort).
     """
-    toks = df.select(F.explode(_tokens(text_col)).alias("term"))
+    toks = df.select(F.explode(analyzed_tokens(text_col)).alias("term"))
     return (
         toks.groupBy("term")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
@@ -398,7 +394,7 @@ def gopher_rules(df: DataFrame, text_col: str = "content", id_col: str = "docID"
         F.filter(words, lambda w: w.rlike("[a-zA-Z]"))
     ).cast("double")
     alpha_frac = F.when(n_words > 0, alpha_words / n_words).otherwise(F.lit(0.0))
-    toks = _tokens(text_col)
+    toks = analyzed_tokens(text_col)
     stop_hits = F.size(
         F.filter(
             F.array(*[F.lit(s) for s in GOPHER_STOPWORDS]),
@@ -481,7 +477,7 @@ def entropy_stats(
     partitioning — no second exchange at 100 TB if
     ``spark.sql.shuffle.partitions`` keys on docID first.
     """
-    toks = df.select(F.col(id_col).alias("docID"), F.explode(_tokens(text_col)).alias("term"))
+    toks = df.select(F.col(id_col).alias("docID"), F.explode(analyzed_tokens(text_col)).alias("term"))
     tf = toks.groupBy("docID", "term").agg(F.count(F.lit(1)).cast("double").alias("tf"))
     per = tf.groupBy("docID").agg(
         F.sum("tf").cast("long").alias("n_tokens"),
@@ -527,7 +523,7 @@ def oov_rates(
     side is one tokenize + map-side hash probe + one docID groupBy — the
     token stream itself is never shuffled by term. Docs with zero analyzed
     tokens are absent (same contract as :func:`token_counts`)."""
-    toks = df.select(F.col(id_col).alias("docID"), F.explode(_tokens(text_col)).alias("term"))
+    toks = df.select(F.col(id_col).alias("docID"), F.explode(analyzed_tokens(text_col)).alias("term"))
     v = F.broadcast(vocab.select("term").distinct().withColumn("_in_v", F.lit(1)))
     return (
         toks.join(v, "term", "left")
@@ -563,7 +559,7 @@ def doc_keywords(
     vocabulary-sized."""
     from pyspark.sql import Window
 
-    toks = df.select(F.col(id_col).alias("docID"), F.explode(_tokens(text_col)).alias("term"))
+    toks = df.select(F.col(id_col).alias("docID"), F.explode(analyzed_tokens(text_col)).alias("term"))
     tf = toks.groupBy("docID", "term").agg(F.count(F.lit(1)).alias("tf"))
     nd = tf.groupBy("term").agg(F.count(F.lit(1)).alias("ndoc"))
     tot = df.select(F.countDistinct(id_col).cast("double").alias("_n"))
@@ -607,7 +603,7 @@ def unigram_ppl(
     joins the per-doc tf table — already (docID, term)-reduced, far
     smaller than the raw token stream — to the model on the term key, one
     hash exchange, then one docID groupBy."""
-    toks = df.select(F.col(id_col).alias("docID"), F.explode(_tokens(text_col)).alias("term"))
+    toks = df.select(F.col(id_col).alias("docID"), F.explode(analyzed_tokens(text_col)).alias("term"))
     tf = toks.groupBy("docID", "term").agg(F.count(F.lit(1)).cast("double").alias("tf"))
     cnt = tf.groupBy("term").agg(F.sum("tf").alias("cnt"))
     tot = cnt.agg(F.sum("cnt").cast("double").alias("_tot"))
@@ -728,7 +724,7 @@ def dsir_weights(
     toks = df.select(
         F.col(id_col).alias("docID"),
         F.expr(target_expr).alias("_is_t"),
-        F.explode(_tokens(text_col)).alias("term"),
+        F.explode(analyzed_tokens(text_col)).alias("term"),
     )
     tf = toks.groupBy("docID", "term").agg(
         F.count(F.lit(1)).cast("double").alias("tf"),

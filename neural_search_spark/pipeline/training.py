@@ -22,7 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from neural_search_spark.analysis.tokenizer import term_freqs_udf
+from neural_search_spark.analysis.tokenizer import analyzed_tokens
 
 SPLIT_BUCKETS = 10000
 DEFAULT_SPLITS = (("train", 9000), ("val", 500), ("test", 500))  # per-10000 weights
@@ -104,7 +104,7 @@ def pack_plan(
     """
     dl = df.select(
         F.col(id_col).alias("docID"),
-        term_freqs_udf(F.col(text_col)).getField("dl").cast("long").alias("dl"),
+        F.size(analyzed_tokens(text_col)).cast("long").alias("dl"),
     )
     parts = dl.repartitionByRange(n_ranges, "docID").withColumn(
         "_pid", F.spark_partition_id()
@@ -304,9 +304,7 @@ def length_buckets(
     relevant n), one tiny groupBy."""
     from pyspark.sql import functions as F
 
-    from neural_search_spark.analysis.tokenizer import TOKEN_PATTERN
-
-    n = F.size(F.expr(f"regexp_extract_all(lower({text_col}), '{TOKEN_PATTERN}', 0)"))
+    n = F.size(analyzed_tokens(text_col))
     base = df.select(F.col(id_col).alias("docID"), n.alias("n")).where(F.col("n") >= 1)
     bucket = F.pow(F.lit(2.0), F.ceil(F.log2("n"))).cast("long")
     return (
@@ -338,10 +336,8 @@ def packing_efficiency(
 
     Scale shape: one pure-projection pass + a single 1-row aggregate —
     no shuffle beyond the final combine."""
-    from neural_search_spark.analysis.tokenizer import TOKEN_PATTERN
-
     L = int(context_len)
-    n = F.size(F.expr(f"regexp_extract_all(lower({text_col}), '{TOKEN_PATTERN}', 0)"))
+    n = F.size(analyzed_tokens(text_col))
     base = df.select(F.col(id_col).alias("docID"), n.alias("n")).where(
         F.col("n") >= 1
     )
@@ -420,17 +416,13 @@ def token_ids(
     as the corpus was read, ready for :func:`pack_plan`-style packing."""
     from pyspark.sql import Window, functions as F
 
-    from neural_search_spark.analysis.tokenizer import TOKEN_PATTERN
-
     w = Window.orderBy(F.col("cnt").desc(), F.col("term").asc())
     vids = vocab.withColumn("token_id", (F.row_number().over(w) - 1).cast("int")).select(
         "term", "token_id"
     )
     toks = df.select(
         F.col(id_col).alias("docID"),
-        F.posexplode(
-            F.expr(f"regexp_extract_all(lower({text_col}), '{TOKEN_PATTERN}', 0)")
-        ).alias("pos0", "term"),
+        F.posexplode(analyzed_tokens(text_col)).alias("pos0", "term"),
     )
     return toks.join(F.broadcast(vids), "term", "left").select(
         "docID",
@@ -458,10 +450,9 @@ def mix_report(
     window over the |strata|·3-row result."""
     from pyspark.sql import Window, functions as F
 
-    from neural_search_spark.analysis.tokenizer import TOKEN_PATTERN
     from neural_search_spark.pipeline import params as P
 
-    n = F.size(F.expr(f"regexp_extract_all(lower({text_col}), '{TOKEN_PATTERN}', 0)"))
+    n = F.size(analyzed_tokens(text_col))
     bucket = (
         F.expr(P.hash32_sql_spark(f"concat('{seed}', ':', CAST({id_col} AS STRING))"))
         % SPLIT_BUCKETS

@@ -30,15 +30,14 @@ coordinator merge comparator (``processor/combination/ScoreCombiner.java:43-56``
 
 from __future__ import annotations
 
-import re
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, functions as F
 
 from neural_search_spark.analysis.tokenizer import (
-    TOKEN_PATTERN,
+    TOKEN_RE,
+    analyzed_tokens,
     term_freq_rows,
-    term_freqs_udf,
     tokenize_text,
 )
 from neural_search_spark.session import local_table
@@ -58,12 +57,12 @@ class CorpusStats:
 
 
 def quantized_doc_lengths(corpus: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """corpus → (docID, dl, dlq). dl via the Arrow tokenizer; the SmallFloat
-    quantization runs JVM-side (bin/shift built-ins) so it stays inside
-    whole-stage codegen."""
+    """corpus → (docID, dl, dlq). dl is the analyzer's token count; the
+    SmallFloat quantization runs JVM-side too (bin/shift built-ins), so no
+    step leaves the JVM."""
     dl = corpus.select(
         F.col(id_col).alias("docID"),
-        term_freqs_udf(F.col(text_col)).getField("dl").alias("dl"),
+        F.size(analyzed_tokens(text_col)).alias("dl"),
     )
     return dl.withColumn("dlq", quantize_length_col("dl"))
 
@@ -300,9 +299,6 @@ def phrase_freq_col(toks_col, terms: list[str]):
     ).otherwise(F.lit(0))
 
 
-_TOKEN_RE = re.compile(TOKEN_PATTERN)
-
-
 def phrase_freq_text_col(text_col, terms: list[str]):
     """Exact-phrase frequency (slop 0) computed DIRECTLY on the lowercased
     text with one ``regexp_count`` pass — position-equivalent to
@@ -311,7 +307,7 @@ def phrase_freq_text_col(text_col, terms: list[str]):
     position; this is a single NFA sweep inside codegen).
 
     Equivalence: analyzer tokens are MAXIMAL runs of ``[a-z0-9_]``
-    (``TOKEN_PATTERN``), so (1) a token occurrence of ``terms[0]`` starts
+    (``TOKEN_RE``), so (1) a token occurrence of ``terms[0]`` starts
     exactly where the lookbehind ``(?<![a-z0-9_])`` holds before a run
     equal to it, (2) "consecutive tokens" means separated by one-or-more
     non-token chars (two adjacent runs would have merged), hence the
@@ -319,11 +315,11 @@ def phrase_freq_text_col(text_col, terms: list[str]):
     (3) the whole needle sits in a zero-width lookahead so every matching
     start offset counts once — OVERLAPPING phrase occurrences included
     (Java's matcher advances one char past an empty match), exactly the
-    per-position count of the array form. Every term must match
-    ``^[a-z0-9_]+$`` (true for any analyzer output), else ValueError: a
+    per-position count of the array form. Every term must fully match
+    ``TOKEN_RE`` (true for any analyzer output), else ValueError: a
     regex metacharacter would change the pattern."""
-    if not terms or not all(_TOKEN_RE.fullmatch(t) for t in terms):
-        raise ValueError(f"phrase terms must be non-empty analyzer tokens [a-z0-9_]+: {terms!r}")
+    if not terms or not all(TOKEN_RE.fullmatch(t) for t in terms):
+        raise ValueError(f"phrase terms must be non-empty analyzer tokens {TOKEN_RE.pattern}: {terms!r}")
     needle = "[^a-z0-9_]+".join(terms)
     pat = f"(?=(?<![a-z0-9_]){needle}(?![a-z0-9_]))"
     return F.regexp_count(F.lower(text_col), F.lit(pat)).cast("int")
@@ -1066,7 +1062,7 @@ def match_phrase_prefix_scores(
         .where(F.col("nt") == len(distinct_fixed))
         .select("docID")
     )
-    toks = F.expr(f"regexp_extract_all(lower({text_col}), '{TOKEN_PATTERN}', 0)")
+    toks = analyzed_tokens(text_col)
     positions = F.sequence(F.lit(1), F.size("_toks") - (m - 1))
 
     def _match_at(i):

@@ -276,8 +276,8 @@ def nested_inner_hits(
     inner hits (``HybridQueryInnerHitsIT``; nested unwrap in
     ``HybridQueryPhaseSearcher.java:83-110``). The Spark analog treats
     chunks as nested children: each chunk scores by query-term occurrence
-    count (JVM-side: tokenize UDF + builtin ``filter``/``size`` — no
-    per-row Python), the parent doc scores as the MAX over its chunks
+    count (JVM-side: the analyzer + builtin ``filter``/``size`` — no
+    Python), the parent doc scores as the MAX over its chunks
     (nested score_mode=max), and the inner hit is the best chunk
     (lowest ``chunk_idx`` on ties). Returns
     ``(docID, score, best_chunk_idx)`` top-k by (score desc, docID asc).
@@ -288,11 +288,11 @@ def nested_inner_hits(
     from neural_search_spark import stats as _stats
 
     _stats.record_event("hybrid_query_with_inner_hits_requests")
-    from neural_search_spark.analysis.tokenizer import tokenize_udf
+    from neural_search_spark.analysis.tokenizer import analyzed_tokens
 
     tset = F.array(*[F.lit(t) for t in sorted(set(terms))])
     cscore = F.size(
-        F.filter(tokenize_udf(F.col(chunk_col)), lambda t: F.array_contains(tset, t))
+        F.filter(analyzed_tokens(chunk_col), lambda t: F.array_contains(tset, t))
     )
     scored = chunks.select(
         F.col(parent_col).alias("docID"),
@@ -330,7 +330,7 @@ def highlight_best_fragment(
     """
     import re
 
-    from neural_search_spark.analysis.tokenizer import tokenize_udf
+    from neural_search_spark.analysis.tokenizer import analyzed_tokens
 
     tset = F.array(*[F.lit(t) for t in sorted(set(terms))])
     hits_df = results.select(F.col("docID").alias("_hit_id"), "score")
@@ -346,7 +346,7 @@ def highlight_best_fragment(
         )
         .withColumn(
             "hits",
-            F.size(F.filter(tokenize_udf(F.col("fragment")), lambda t: F.array_contains(tset, t))).cast("long"),
+            F.size(F.filter(analyzed_tokens("fragment"), lambda t: F.array_contains(tset, t))).cast("long"),
         )
     )
     w = Window.partitionBy("docID").orderBy(F.desc("hits"), F.asc("frag_idx"))

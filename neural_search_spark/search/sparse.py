@@ -27,11 +27,9 @@ those candidates with the low-weight set added.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import FloatType, MapType, StringType
 
-from neural_search_spark.analysis.tokenizer import term_freqs_udf
+from neural_search_spark.analysis.tokenizer import term_freqs
 from neural_search_spark.session import local_table
 
 DEFAULT_PRUNE_TYPE = "max_ratio"
@@ -76,16 +74,27 @@ def prune_vector(
     raise ValueError(f"unknown prune type {prune_type}")
 
 
-def prune_map_udf(prune_type: str, ratio: float, keep: str = "high"):
-    """Arrow-batched map<string,float> → map<string,float> prune (doc side:
-    the sparse_encoding ingest processor prunes stored vectors)."""
+def prune_features(
+    features: DataFrame, prune_type: str, ratio: float, keep: str = "high"
+) -> DataFrame:
+    """(docID, features) → the same rows with each map pruned per the
+    reference rules, keeping the high or the low side (doc side: the
+    sparse_encoding ingest processor prunes stored vectors).
 
-    @F.pandas_udf(MapType(StringType(), FloatType()))
-    def _prune(maps: pd.Series) -> pd.Series:
-        idx = 0 if keep == "high" else 1
-        return maps.map(lambda m: prune_vector(dict(m), prune_type, ratio)[idx])
+    One Arrow pass over whole rows (``mapInPandas``), not a scalar pandas
+    UDF over the column: Spark 4.1 can leave a scalar Python UDF whose
+    argument holds the analyzer's lambda expressions unextracted, and the
+    query then fails with "Cannot evaluate expression"."""
+    idx = 0 if keep == "high" else 1
 
-    return _prune
+    def _prune(batches):
+        for pdf in batches:
+            pdf["features"] = pdf["features"].map(
+                lambda m: prune_vector(dict(m), prune_type, ratio)[idx]
+            )
+            yield pdf
+
+    return features.mapInPandas(_prune, features.schema)
 
 
 def sparse_features_from_tf(corpus: DataFrame, text_col: str = "content", id_col: str = "docID") -> DataFrame:
@@ -99,7 +108,7 @@ def sparse_features_from_tf(corpus: DataFrame, text_col: str = "content", id_col
     return corpus.select(
         F.col(id_col).alias("docID"),
         F.transform_values(
-            term_freqs_udf(F.col(text_col)).getField("tf_map"),
+            term_freqs(text_col).getField("tf_map"),
             lambda _, v: v.cast("float"),
         ).alias("features"),
     )
@@ -160,10 +169,14 @@ def sparse_query_tokens_from_analyzer(
 
 def sparse_postings(features: DataFrame) -> DataFrame:
     """(docID, features) → long-form (term, docID, weight): the
-    rank_features "index" as a DataFrame."""
+    rank_features "index" as a DataFrame. ``explode_outer`` plus a
+    null-term filter, for the reason given in
+    :func:`~neural_search_spark.analysis.tokenizer.explode_term_freqs`: an
+    inner explode's inferred ``size(features) > 0`` filter would evaluate
+    the features (the analyzer, or a prune UDF over it) a second time."""
     return features.select(
-        "docID", F.explode("features").alias("term", "weight")
-    )
+        "docID", F.explode_outer("features").alias("term", "weight")
+    ).where(F.col("term").isNotNull())
 
 
 def neural_sparse_score(

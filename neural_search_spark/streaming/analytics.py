@@ -9,8 +9,8 @@ handling via watermarks.
 
 Semantics / scale notes:
 
-- tokenization reuses the engine's shared Arrow analyzer
-  (``term_freqs_udf`` — one vectorized pass, no per-row Python), so the
+- tokenization reuses the engine's one Spark analyzer
+  (``analyzed_tokens``, a JVM expression — no Python worker), so the
   streamed statistics are defined over exactly the same token stream the
   index build sees.
 - the aggregation is a standard watermarked tumbling-window groupBy —
@@ -21,14 +21,14 @@ Semantics / scale notes:
   state at unbounded input.
 - at 100 TB/day the groupBy keys are (window, lang) — low cardinality —
   so the shuffle is tiny regardless of input volume; the heavy column
-  (content) is projected away right after the token-count UDF.
+  (content) is projected away right after the token count.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from neural_search_spark.analysis.tokenizer import term_freqs_udf
+from neural_search_spark.analysis.tokenizer import analyzed_tokens
 
 
 def windowed_doc_stats(
@@ -49,7 +49,7 @@ def windowed_doc_stats(
     base = corpus_stream.withWatermark(time_col, watermark_delay).select(
         F.col(time_col),
         *( [F.col(group_col)] if group_col else [] ),
-        term_freqs_udf(F.col(text_col)).getField("dl").alias("dl"),
+        F.size(analyzed_tokens(text_col)).alias("dl"),
     )
     keys = [F.window(time_col, window_duration).alias("window")]
     if group_col:

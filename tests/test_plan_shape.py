@@ -59,14 +59,17 @@ def test_phrase_default_routes_through_positional_index(spark, entry):
     The explicit scan exhibit keeps the scan shape: a regexp verify over
     the corpus text, semi-joined to the postings candidates (the join
     strategy is the planner's), and no positional index."""
+    from tools.plan_audit import query_time_details
+
     qmap = entry.queries()
     default = _plan(qmap["bm25_phrase_topk"](spark, SF_DIR))
     assert "SortMergeJoin" not in default
     assert "TakeOrderedAndProject" in default
-    assert "nss_positions_" in default and "regexp_" not in default
+    # the cached doclens artifact tokenizes once, when it is built
+    assert "nss_positions_" in default and "regexp_" not in query_time_details(default)
     scan = _plan(qmap["bm25_phrase_scan_topk"](spark, SF_DIR))
     assert "nss_positions_" not in scan
-    assert "regexp_" in scan and "LeftSemi" in scan
+    assert "regexp_" in query_time_details(scan) and "LeftSemi" in scan
 
 
 def test_delegate_raw_routes_are_artifact_bounded(spark, entry):
@@ -181,8 +184,9 @@ def test_local_table_rejects_misfit_rows(spark):
 
 def test_python_rdd_scans_skips_cached_relations():
     """The audit counts a Python-RDD scan read at query time and skips the
-    one under an InMemoryRelation (read once, when the cache is built)."""
-    from tools.plan_audit import python_rdd_scans
+    one under an InMemoryRelation (read once, when the cache is built);
+    the query-time details hold the same nodes."""
+    from tools.plan_audit import python_rdd_scans, query_time_details
 
     plan = """== Physical Plan ==
 AdaptiveSparkPlan (8)
@@ -199,6 +203,8 @@ AdaptiveSparkPlan (8)
 (5) Scan ExistingRDD
 """
     assert python_rdd_scans(plan) == 1
+    assert query_time_details(plan).split("\n")[0] == "(5) Scan ExistingRDD"
+    assert "(3)" not in query_time_details(plan)
 
 
 def test_library_builds_no_python_list_tables():
@@ -216,3 +222,63 @@ def test_library_builds_no_python_list_tables():
         if re.search(r"\.createDataFrame\b", line)
     }
     assert hits == {("corpus.py", "return spark.createDataFrame(pdf)")}
+
+
+def _analyzer_plan(df, what: str) -> str:
+    """The plan runs the analyzer once and in the JVM: no Python eval node,
+    and ``regexp_extract_all`` evaluated exactly once."""
+    plan = _plan(df)
+    assert "EvalPython" not in plan, what
+    assert plan.count("regexp_extract_all(") == 1, what
+    return plan
+
+
+def test_analyzer_runs_once_in_the_jvm(spark):
+    """Postings, doc lengths, the index build's stage A, the sparse route
+    and the highlighter each evaluate the analyzer once per row without a
+    Python worker, and stage A keeps its one shard exchange (counting tf
+    inside the row adds none)."""
+    from neural_search_spark.corpus import corpus_from_documents
+    from neural_search_spark.index.builder import _shard_sorted_postings
+    from neural_search_spark.search.bm25 import BM25Engine
+    from neural_search_spark.search.ops import highlight_best_fragment
+    from neural_search_spark.search.sparse import sparse_features_from_tf
+    from neural_search_spark.session import local_table
+
+    corpus = corpus_from_documents(spark, SF_DIR)
+    eng = BM25Engine(spark, corpus)
+    hits = local_table(spark, [(1, 2.5), (7, 1.0)], "docID long, score double")
+    _analyzer_plan(eng.postings, "postings")
+    _analyzer_plan(eng.doclens, "doclens")
+    _analyzer_plan(sparse_features_from_tf(corpus), "sparse_features_from_tf")
+    _analyzer_plan(highlight_best_fragment(hits, corpus, ["data", "import"]), "highlight")
+    stage_a = _analyzer_plan(_shard_sorted_postings(corpus, 8, "content", "docID"), "stage A")
+    assert stage_a.count(") Exchange") == 1
+
+
+def test_one_spark_analyzer_in_the_library():
+    """Static guard: no library module outside ``analysis/tokenizer.py``
+    spells the Spark token regexp (the DuckDB oracle SQL interpolates
+    ``SQL_TOKEN_PATTERN``, which this does not match), no Spark SQL string
+    tokenizes, and the tokenizer defines no pandas UDF."""
+    import pathlib
+    import re
+
+    root = pathlib.Path(__file__).resolve().parent.parent / "neural_search_spark"
+    hits = set()
+    for p in root.rglob("*.py"):
+        rel, src = p.relative_to(root).as_posix(), p.read_text()
+        if rel == "analysis/tokenizer.py":
+            assert "pandas_udf" not in src
+            continue
+        if rel == "analysis/__init__.py":  # the package re-export
+            continue
+        for line in src.splitlines():
+            if (
+                re.search(r"\bTOKEN_PATTERN\b", line)
+                or "[a-z0-9_]+" in line
+                or ("expr(" in line and "regexp_extract_all" in line)
+            ):
+                hits.add((rel, line.strip()))
+    assert hits == set()
+

@@ -307,7 +307,7 @@ class TestSemanticDelegates:
     def test_token_count_route_matches_manual_count(self, spark, engine):
         from pyspark.sql import functions as F
 
-        from neural_search_spark.analysis.tokenizer import tokenize_udf
+        from neural_search_spark.analysis.tokenizer import analyzed_tokens
         from neural_search_spark.mapping import semantic_raw_query
 
         got = {
@@ -319,7 +319,7 @@ class TestSemanticDelegates:
         want = {
             r["docID"]
             for r in engine.corpus.select(
-                "docID", F.size(tokenize_udf(F.col("content"))).alias("n")
+                "docID", F.size(analyzed_tokens("content")).alias("n")
             )
             .where("n BETWEEN 5 AND 12")
             .collect()

@@ -35,12 +35,12 @@ PHRASE_CASES = [
 
 
 def test_phrase_freq_text_matches_token_form(spark):
-    from neural_search_spark.analysis.tokenizer import TOKEN_PATTERN
+    from neural_search_spark.analysis.tokenizer import analyzed_tokens
     from neural_search_spark.search.bm25 import phrase_freq_col, phrase_freq_text_col
 
     rows = [(i, t) for i, (t, _terms) in enumerate(PHRASE_CASES)]
     df = spark.createDataFrame(rows, "docID long, content string")
-    toks = F.expr(f"regexp_extract_all(lower(content), '{TOKEN_PATTERN}', 0)")
+    toks = analyzed_tokens("content")
     for i, (text, terms) in enumerate(PHRASE_CASES):
         sub = df.where(F.col("docID") == i)
         old = sub.select(phrase_freq_col(toks, terms).alias("p")).head()["p"]

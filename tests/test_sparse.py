@@ -84,6 +84,25 @@ def test_sparse_score_matches_oracle(spark, postings, tiny_corpus_pdf):
         assert got[d] == pytest.approx(want[d], abs=1e-9)
 
 
+def test_doc_side_prune_over_the_analyzer(spark, tiny_corpus, tiny_corpus_pdf):
+    """The doc-side prune of ``sparse_doc_pruned_topk``, a pandas pass over
+    the analyzer's tf maps, runs and keeps exactly what ``prune_vector``
+    keeps."""
+    from collections import Counter
+
+    from neural_search_spark.analysis.tokenizer import tokenize_text
+    from neural_search_spark.search.sparse import prune_features
+
+    pruned = prune_features(sparse_features_from_tf(tiny_corpus), "max_ratio", 0.4)
+    got = {(r["docID"], r["term"]): r["weight"] for r in sparse_postings(pruned).collect()}
+    want = {}
+    for r in tiny_corpus_pdf.itertuples():
+        tf = {t: float(c) for t, c in Counter(tokenize_text(r.content)).items()}
+        if tf:
+            want.update({(r.docID, t): w for t, w in prune_vector(tf, "max_ratio", 0.4)[0].items()})
+    assert got == want and got
+
+
 def test_two_phase_equals_full_when_window_covers(spark, postings):
     qtok = {"import": 1.0, "def": 0.9, "ident1": 0.2, "ident2": 0.1}
     full = (

@@ -18,23 +18,39 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def python_rdd_scans(plan: str) -> int:
-    """``Scan ExistingRDD`` nodes in a formatted plan's tree, not counting
-    those under an ``InMemoryRelation`` (read once, when the cache is
-    built). ``createDataFrame`` over a list plans this way: a Python RDD
-    that Python-worker tasks re-read on every execution. A checkpointed
-    frame (JVM-side, e.g. connected components) plans this way too."""
-    n, cached = 0, None  # tree depth of the InMemoryRelation being skipped
+def query_time_nodes(plan: str) -> list[tuple[int, str]]:
+    """(id, name) of each node in a formatted plan's tree, not counting
+    those under an ``InMemoryRelation`` (run once, when the cache is
+    built)."""
+    out, cached = [], None  # tree depth of the InMemoryRelation being skipped
     for line in plan.splitlines():
-        m = re.match(r"([ :+\-*]*)(\S.*) \(\d+\)$", line)
+        m = re.match(r"([ :+\-*]*)(\S.*?) \((\d+)\)( \(.*\))?$", line)
         if not m or line.startswith("("):  # not a tree line
             continue
         depth, node = len(m.group(1)), m.group(2)
         if cached is not None and depth > cached:
             continue
         cached = depth if node.startswith("InMemoryRelation") else None
-        n += node.startswith("Scan ExistingRDD")
-    return n
+        out.append((int(m.group(3)), node))
+    return out
+
+
+def query_time_details(plan: str) -> str:
+    """The detail blocks (``(n) Node`` ...) of the query-time nodes only:
+    what runs on every execution, not what a cache ran once."""
+    ids = {i for i, _ in query_time_nodes(plan)}
+    blocks = re.split(r"\n(?=\(\d+\) )", plan)
+    return "\n".join(
+        b for b in blocks if (m := re.match(r"\((\d+)\) ", b)) and int(m.group(1)) in ids
+    )
+
+
+def python_rdd_scans(plan: str) -> int:
+    """Query-time ``Scan ExistingRDD`` nodes in a formatted plan's tree.
+    ``createDataFrame`` over a list plans this way: a Python RDD that
+    Python-worker tasks re-read on every execution. A checkpointed frame
+    (JVM-side, e.g. connected components) plans this way too."""
+    return sum(node.startswith("Scan ExistingRDD") for _, node in query_time_nodes(plan))
 
 
 def audit_one(df) -> dict:

@@ -55,11 +55,31 @@ COLLAPSE_CLAUSE_DEPTH = 4  # tight depth: per-clause collapse visibly differs
 _ENGINES: dict[tuple[int, str], BM25Engine] = {}
 _INDEXES: dict[tuple[int, str], "object"] = {}
 
+#: the sources whose code writes the /tmp index artifacts
+_BUILD_SOURCES = ("index/builder.py", "index/codec.py", "index/positions.py", "analysis/tokenizer.py")
+
+
+def _build_tag(sf_dir: str, src_root: str | None = None) -> str:
+    """Directory tag of a /tmp index artifact: a hash of the corpus path
+    and of the bytes of the build-path sources under ``src_root`` (the
+    package by default), so an artifact that other code built is never
+    read back."""
+    import hashlib
+    import os
+
+    import neural_search_spark
+
+    root = src_root or os.path.dirname(neural_search_spark.__file__)
+    h = hashlib.sha1(sf_dir.encode())
+    for rel in _BUILD_SOURCES:
+        with open(os.path.join(root, rel), "rb") as f:
+            h.update(rel.encode() + b"\0" + f.read())
+    return h.hexdigest()[:10]
+
 
 def _index(spark: SparkSession, sf_dir: str):
     """Compressed block-max index per (session, corpus), built once under
     /tmp and reused — the persisted-index query path."""
-    import hashlib
     import os
 
     from neural_search_spark.index.builder import build_index
@@ -73,8 +93,7 @@ def _index(spark: SparkSession, sf_dir: str):
         # upgrade (FORMAT_VERSION bump) migrates by building fresh in a
         # new dir instead of tripping the reader's BWC refusal on a
         # stale-format cache left by an older engine.
-        tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:10]
-        d = os.path.join("/tmp", f"nss_index_v{FORMAT_VERSION}_{tag}")
+        d = os.path.join("/tmp", f"nss_index_v{FORMAT_VERSION}_{_build_tag(sf_dir)}")
         build_index(spark, corpus_from_documents(spark, sf_dir), d, n_shards=8)
         _INDEXES[key] = BlockMaxIndex(spark, d).cache()
     return _INDEXES[key]
@@ -95,7 +114,6 @@ def _updated_index(spark: SparkSession, sf_dir: str):
     ships without re-indexing the world. On a dir left complete by a
     previous process the build resumes as a no-op and the update finds
     zero dirty docs (idempotent by docmap)."""
-    import hashlib
     import os
 
     from neural_search_spark.index.builder import build_index, update_index
@@ -104,8 +122,7 @@ def _updated_index(spark: SparkSession, sf_dir: str):
 
     key = (id(spark), sf_dir)
     if key not in _UPDATED_INDEXES:
-        tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:10]
-        d = os.path.join("/tmp", f"nss_index_upd_v{FORMAT_VERSION}_{tag}")
+        d = os.path.join("/tmp", f"nss_index_upd_v{FORMAT_VERSION}_{_build_tag(sf_dir)}")
         corpus = corpus_from_documents(spark, sf_dir)
         build_index(spark, corpus.where(F.col("docID") % 2 == 0), d, n_shards=8)
         update_index(spark, corpus, d)
@@ -198,11 +215,12 @@ def _pos_index(spark: SparkSession, sf_dir: str, field: str = "content"):
     key = (id(spark), sf_dir, field)
     if key not in _POS_INDEXES:
         eng = _engine(spark, sf_dir)
-        # Tag includes a corpus fingerprint (per-file size+mtime of the source
-        # parquet), not just the path: regenerating data in-place at the same
+        # Tag includes the build-source hash (_build_tag) and a corpus
+        # fingerprint (per-file size+mtime of the source parquet), not just
+        # the path: regenerating data in-place at the same
         # path must invalidate the cached positional index, or the indexed
         # phrase/span paths would silently diverge from the live-data oracle.
-        fp = hashlib.sha1(sf_dir.encode())
+        fp = hashlib.sha1(_build_tag(sf_dir).encode())
         src = os.path.join(sf_dir, "documents.parquet")
         if os.path.isdir(src):
             for name in sorted(os.listdir(src)):

@@ -16,13 +16,13 @@ where ``dlq`` is the SmallFloat-byte4 *quantized* doc length
 numerator factor (rank-neutral); we follow.
 
 Plan shape (scale notes):
-- query terms are a tiny DataFrame → **broadcast** join against postings;
-  the postings side is filtered *before* any aggregation, so only rows
-  for query terms move.
-- document frequency per term is computed from the filtered postings
-  (postings rows are distinct (term, docID) pairs), then broadcast back.
-- one final ``groupBy(docID)`` shuffle over candidate rows only
-  (|query terms| lists), never the corpus.
+- the engine's postings rows are ``(docID, term, tf, dlq, ndoc)``: each
+  row carries its doc's quantized length and its term's corpus-wide
+  document count (Lucene reads docFreq from the terms dictionary and
+  norms from the index), computed once when the postings are built.
+- a clause is a ``term IN (...)`` filter on the postings, then one
+  ``groupBy(docID)`` sum of ``idf(ndoc) · tfNorm(tf, dlq)``: one shuffle
+  over the query terms' rows only, no broadcast and no join.
 
 Tie-break on equal scores is docID ascending — the reference's
 coordinator merge comparator (``processor/combination/ScoreCombiner.java:43-56``).
@@ -32,12 +32,13 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 from neural_search_spark.analysis.tokenizer import (
     TOKEN_RE,
     analyzed_tokens,
-    term_freq_rows,
+    explode_term_freqs,
+    term_freqs,
     tokenize_text,
 )
 from neural_search_spark.session import local_table
@@ -87,10 +88,31 @@ def idf_col(n_docs: int, ndoc_col) -> "F.Column":
     return F.log(F.lit(1.0) + (n - ndoc_col + F.lit(0.5)) / (ndoc_col + F.lit(0.5)))
 
 
+def bm25_postings(corpus: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """corpus → the engine's postings ``(docID, term, tf, dlq, ndoc)``: one
+    row per distinct (doc, term), carrying everything a BM25 clause reads.
+    ``dlq`` is quantized once per doc, before the explode; ``ndoc`` is the
+    term's document count over the whole corpus, one ``count(*) over
+    (partition by term)`` when the postings are built."""
+    docs = corpus.select(
+        F.col(id_col).alias("docID"), term_freqs(text_col).alias("_tf")
+    ).withColumn("dlq", quantize_length_col("_tf.dl"))
+    rows = explode_term_freqs(docs, "docID", "dlq")
+    return rows.select(
+        "docID", "term", "tf", "dlq",
+        F.count(F.lit(1)).over(Window.partitionBy("term")).alias("ndoc"),
+    )
+
+
+def term_score_col(stats: CorpusStats, k1: float = K1, b: float = B) -> "F.Column":
+    """``idf(ndoc) · tfNorm(tf, dlq)`` over a :func:`bm25_postings` row."""
+    tf = F.col("tf").cast("double")
+    tf_norm = tf / (tf + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("dlq") / F.lit(stats.avgdl)))
+    return idf_col(stats.n_docs, F.col("ndoc")) * tf_norm
+
+
 def bm25_clause_scores(
-    spark,
     postings: DataFrame,
-    doclens: DataFrame,
     stats: CorpusStats,
     terms: list[str],
     k1: float = K1,
@@ -101,13 +123,14 @@ def bm25_clause_scores(
 ) -> DataFrame:
     """Score one lexical clause (match/term) → (docID, score).
 
-    ``postings`` is the long-form (docID, term, tf) DataFrame (from
-    :func:`term_freq_rows` or the compressed-index reader); ``doclens``
-    carries (docID, dl, dlq). ``candidate_docs`` (optional, one ``docID``
-    column) restricts *membership* only — per Lucene semantics a pushed
-    filter never changes idf/avgdl, so document frequency is computed
-    before the filter is applied (``HybridQueryBuilder.java:107-122``
-    pushes filters into clauses; Lucene stats stay index-wide).
+    ``postings`` are :func:`bm25_postings` rows ``(docID, term, tf, dlq,
+    ndoc)``. The plan is a ``term IN (terms)`` filter, the optional
+    candidate semi-join, and one ``groupBy(docID)`` sum: one shuffle, no
+    broadcast, no join. ``candidate_docs`` (optional, one ``docID``
+    column) restricts *membership* only: ``ndoc`` was counted over the
+    whole corpus, so a pushed filter never changes idf/avgdl
+    (``HybridQueryBuilder.java:107-122`` pushes filters into clauses;
+    Lucene stats stay index-wide).
 
     ``operator`` — OpenSearch-core ``match`` semantics: ``"or"`` (default,
     any term matches) or ``"and"`` (every distinct query term must occur —
@@ -120,19 +143,10 @@ def bm25_clause_scores(
         raise ValueError(f"unknown match operator {operator}")
     terms = sorted(set(terms))
     if not terms:
-        return local_table(spark, [], "docID long, score double")
-    qt = F.broadcast(local_table(spark, [(t,) for t in terms], "term string"))
-    matched = postings.join(qt, "term")
-    # document frequency per query term over the full corpus: postings rows
-    # are distinct (term, docID), so a plain count is n_t
-    dfreq = matched.groupBy("term").agg(F.count("*").alias("ndoc"))
+        return local_table(postings.sparkSession, [], "docID long, score double")
+    matched = postings.where(F.col("term").isin(terms))
     if candidate_docs is not None:
         matched = matched.join(candidate_docs.select("docID"), "docID", "semi")
-    matched = matched.join(F.broadcast(dfreq), "term").join(doclens, "docID")
-    avgdl = F.lit(stats.avgdl)
-    tf = F.col("tf").cast("double")
-    tf_norm = tf / (tf + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("dlq") / avgdl))
-    term_score = idf_col(stats.n_docs, F.col("ndoc")) * tf_norm
     need = None
     if operator == "and":
         need = len(terms)
@@ -142,7 +156,7 @@ def bm25_clause_scores(
         # msm=5 on a 3-term query must yield an empty result
         need = int(minimum_should_match)
     agg = matched.groupBy("docID").agg(
-        F.sum(term_score).alias("score"), F.count("*").alias("_nt")
+        F.sum(term_score_col(stats, k1, b)).alias("score"), F.count("*").alias("_nt")
     )
     if need is not None:
         # postings rows are distinct (term, docID) → _nt counts distinct
@@ -159,16 +173,15 @@ def match_only_text_scores(engine: "BM25Engine", query_text: str) -> DataFrame:
     for unscored multi-term/docs-only matches inside bool); the match
     query's bool-SHOULD sum is then the count of DISTINCT analyzed query
     terms present in the doc. Membership-only postings access — the same
-    plan shape as a term query, no doc-length join, no idf broadcast."""
+    plan shape as a term query, with a count in place of the BM25 sum."""
     from neural_search_spark.analysis.tokenizer import tokenize_text
 
     terms = sorted(set(tokenize_text(query_text)))
     if not terms:
         return local_table(engine.spark, [], "docID long, score double")
-    qt = F.broadcast(local_table(engine.spark, [(t,) for t in terms], "term string"))
     # postings rows are distinct (term, docID) → count(*) = distinct terms
     return (
-        engine.postings.join(qt, "term")
+        engine.postings.where(F.col("term").isin(terms))
         .groupBy("docID")
         .agg(F.count("*").cast("double").alias("score"))
     )
@@ -185,7 +198,7 @@ def match_bool_prefix_scores(engine: "BM25Engine", query_text: str) -> DataFrame
     (msm=1). Terms need no positions — unlike the phrase variant, word
     order is free.
 
-    Plan shape: the fixed terms reuse the standard broadcast clause path;
+    Plan shape: the fixed terms reuse the standard clause path;
     the prefix expansion walks the distinct-term dictionary and
     semi-joins postings under the settings broadcast cap — nothing scans
     stored text."""
@@ -199,9 +212,7 @@ def match_bool_prefix_scores(engine: "BM25Engine", query_text: str) -> DataFrame
     parts = [prefix_query_scores(engine, prefix)]
     if fixed:
         parts.append(
-            bm25_clause_scores(
-                engine.spark, engine.postings, engine.doclens, engine.stats, fixed
-            )
+            bm25_clause_scores(engine.postings, engine.stats, fixed)
         )
     long = parts[0]
     for p in parts[1:]:
@@ -212,7 +223,6 @@ def match_bool_prefix_scores(engine: "BM25Engine", query_text: str) -> DataFrame
 def bm25_batch_scores(
     spark,
     postings: DataFrame,
-    doclens: DataFrame,
     stats: CorpusStats,
     queries: dict[int, list[str]],
     k1: float = K1,
@@ -226,8 +236,8 @@ def bm25_batch_scores(
     mining) should join the whole (qid, term) query table against
     postings ONCE — one postings scan, one (qid, docID) aggregation —
     instead of N independent jobs. Per-query scores are identical to
-    :func:`bm25_clause_scores` (same idf over the full corpus, same
-    SmallFloat-quantized norms).
+    :func:`bm25_clause_scores`: both read ``ndoc`` and ``dlq`` off the
+    same :func:`bm25_postings` rows.
 
     Scale shape: the query table broadcasts (it is query-log-sized, not
     corpus-sized); postings shuffle once keyed by (qid, docID). A term
@@ -239,21 +249,9 @@ def bm25_batch_scores(
     if not pairs:
         return local_table(spark, [], "qid int, docID long, score double")
     qt = F.broadcast(local_table(spark, pairs, "qid int, term string"))
-    dfreq = (
-        postings.join(F.broadcast(qt.select("term").distinct()), "term")
-        .groupBy("term")
-        .agg(F.count("*").alias("ndoc"))
+    return postings.join(qt, "term").groupBy("qid", "docID").agg(
+        F.sum(term_score_col(stats, k1, b)).alias("score")
     )
-    matched = (
-        postings.join(qt, "term")
-        .join(F.broadcast(dfreq), "term")
-        .join(doclens, "docID")
-    )
-    avgdl = F.lit(stats.avgdl)
-    tf = F.col("tf").cast("double")
-    tf_norm = tf / (tf + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("dlq") / avgdl))
-    term_score = idf_col(stats.n_docs, F.col("ndoc")) * tf_norm
-    return matched.groupBy("qid", "docID").agg(F.sum(term_score).alias("score"))
 
 
 def bm25_batch_topk(
@@ -265,9 +263,7 @@ def bm25_batch_topk(
     so the cut is reproducible across engines."""
     from pyspark.sql import Window
 
-    scored = bm25_batch_scores(
-        engine.spark, engine.postings, engine.doclens, engine.stats, queries
-    )
+    scored = bm25_batch_scores(engine.spark, engine.postings, engine.stats, queries)
     r4 = F.round(F.col("score"), 4)
     w = Window.partitionBy("qid").orderBy(r4.desc(), F.col("docID").asc())
     return (
@@ -455,10 +451,8 @@ def multi_match_scores(
                 query_text, k1=k1, b=b, text_col=fld, id_col=engine.id_col,
             )
         else:
-            postings, doclens, stats = engine.field_artifacts(fld)
-            sc = bm25_clause_scores(
-                engine.spark, postings, doclens, stats, terms, k1=k1, b=b
-            )
+            postings, _, stats = engine.field_artifacts(fld)
+            sc = bm25_clause_scores(postings, stats, terms, k1=k1, b=b)
         per_field.append(
             sc.select("docID", (F.col("score") * F.lit(float(boost))).alias("fscore"))
         )
@@ -772,7 +766,7 @@ class BM25Engine:
         self.corpus = corpus
         self.text_col = text_col
         self.id_col = id_col
-        self.postings = term_freq_rows(corpus, text_col, id_col)
+        self.postings = bm25_postings(corpus, text_col, id_col)
         self.doclens = quantized_doc_lengths(corpus, text_col, id_col)
         self._stats: CorpusStats | None = None
         self._term_dict: DataFrame | None = None
@@ -813,7 +807,7 @@ class BM25Engine:
         if field == self.text_col:
             return self.postings, self.doclens, self.stats
         if field not in self._field_artifacts:
-            p = term_freq_rows(self.corpus, field, self.id_col)
+            p = bm25_postings(self.corpus, field, self.id_col)
             d = quantized_doc_lengths(self.corpus, field, self.id_col)
             if self._cached:
                 p, d = p.cache(), d.cache()
@@ -839,9 +833,9 @@ class BM25Engine:
         _stats.record_event("match_query_requests")
         cand = self.corpus.where(filter_expr).select(F.col(self.id_col).alias("docID")) if filter_expr else None
         return bm25_clause_scores(
-            self.spark, self.postings, self.doclens, self.stats,
-            tokenize_text(query_text), k1=k1, b=b, candidate_docs=cand,
-            operator=operator, minimum_should_match=minimum_should_match,
+            self.postings, self.stats, tokenize_text(query_text), k1=k1, b=b,
+            candidate_docs=cand, operator=operator,
+            minimum_should_match=minimum_should_match,
         )
 
     def term(self, term: str, k1: float = K1, b: float = B) -> DataFrame:
@@ -849,9 +843,7 @@ class BM25Engine:
         from neural_search_spark import stats as _stats
 
         _stats.record_event("term_query_requests")
-        return bm25_clause_scores(
-            self.spark, self.postings, self.doclens, self.stats, [term], k1=k1, b=b
-        )
+        return bm25_clause_scores(self.postings, self.stats, [term], k1=k1, b=b)
 
     def match_phrase(self, phrase: str, k1: float = K1, b: float = B) -> DataFrame:
         """``match_phrase`` query: exact adjacent-run phrase (slop 0)."""
@@ -915,9 +907,7 @@ def more_like_this_scores(
     terms = [r["term"] for r in cand.collect()]  # O(max_query_terms) rows
     if not terms:
         return local_table(engine.spark, [], "docID long, score double")
-    scored = bm25_clause_scores(
-        engine.spark, engine.postings, engine.doclens, engine.stats, terms, k1=k1, b=b
-    )
+    scored = bm25_clause_scores(engine.postings, engine.stats, terms, k1=k1, b=b)
     return scored.where(F.col("docID") != int(seed_doc))
 
 

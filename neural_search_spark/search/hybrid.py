@@ -1,8 +1,7 @@
 """Hybrid query: per-clause scoring → normalization → combination → top-k.
 
 Reproduces the reference's normalization-processor workflow
-(``processor/NormalizationProcessorWorkflow.java:64-107``) as one
-declarative DataFrame plan:
+(``processor/NormalizationProcessorWorkflow.java:64-107``):
 
 - 1..5 sub-queries (``HybridQueryBuilder.java:67`` MAX_NUMBER_OF_SUB_QUERIES),
   each scored independently; a pushed ``filter`` restricts every clause
@@ -12,8 +11,7 @@ declarative DataFrame plan:
   (``HybridCollectorManager.java:102,591-607``); we cut each clause to
   ``depth`` by (score desc, docID asc).
 - normalization stats are **global per clause** across all shards
-  (``MinMaxScoreNormalizationTechnique.java:140-147``) — a whole-clause
-  window aggregate here.
+  (``MinMaxScoreNormalizationTechnique.java:140-147``).
 - combination sees a zero-filled float array per doc
   (``ScoreCombiner.java:291-305``): absent clauses contribute 0.0 and DO
   count in the arithmetic-mean denominator.
@@ -21,19 +19,23 @@ declarative DataFrame plan:
   and optional post_filter (membership only,
   ``HybridCollectorManager.java:121-133``).
 
-Scale shape: each clause is cut to ``depth`` rows first, and its
-normalization statistics are whole-clause windows over that cut. The cut
-comes out of one task, as the reference's coordinator sees at most
-``depth`` top docs per sub-query, so the windows need no exchange, no
-broadcast and no cache, and every clause plan is referenced once. Clause
-scores are then unioned long-form ``(docID, clause, score)`` and pivoted
-in a single groupBy — one shuffle for any clause count, instead of k-1
-outer joins.
+Scale shape: each clause is cut to ``depth`` rows in Spark, the cuts are
+unioned with their clause index, and one ``collect()`` brings at most
+clauses × depth rows to the driver. Normalize, combine, post_filter and
+the final cut run there in plain Python, as the reference's coordinator
+works over the ≤ depth top docs each sub-query returns. The Python steps
+keep the order of double operations of the Spark expressions they
+replaced, so scores are the same doubles. ``hybrid_batch_topk`` stays
+set-oriented: its min_max windows and pivot run in Spark over many
+requests at once.
 """
 
 from __future__ import annotations
 
+import math
+from decimal import ROUND_HALF_UP, Decimal
 from functools import reduce
+from operator import add
 
 from pyspark.sql import DataFrame, functions as F, Window
 
@@ -112,160 +114,137 @@ def clause_depth_cut(scored: DataFrame, depth: int) -> DataFrame:
     return scored.orderBy(F.desc("score"), F.asc("docID")).limit(depth)
 
 
-def _effective_bounds(s, mn, mx, lower_bound, upper_bound):
-    """Effective min/max under optional bounds — exact branch order of
-    ``normalization/bounds/LowerBound.java:determineEffectiveScore`` and
+def _effective_bound(bound, s, own, other, lower: bool) -> float:
+    """Effective min (``lower``) or max under an optional bound — the
+    branch order of ``normalization/bounds/LowerBound.java`` and
     ``UpperBound.java:determineEffectiveScore``."""
-    if lower_bound is None:
-        eff_min = mn
-    else:
-        mode, bv = lower_bound
-        b = F.lit(float(bv))
-        if mode == "apply":
-            eff_min = F.when((mx > b) & (s > b), b).otherwise(mn)
-        elif mode == "clip":
-            eff_min = F.when(mx < b, mn).otherwise(b)
-        elif mode == "ignore":
-            eff_min = mn
-        else:
-            raise ValueError(f"invalid bound mode: {mode}, valid values are: {', '.join(BOUND_MODES)}")
-    if upper_bound is None:
-        eff_max = mx
-    else:
-        mode, bv = upper_bound
-        b = F.lit(float(bv))
-        if mode == "apply":
-            eff_max = F.when((mn < b) & (s < b), b).otherwise(mx)
-        elif mode == "clip":
-            eff_max = F.when(mn > b, mx).otherwise(b)
-        elif mode == "ignore":
-            eff_max = mx
-        else:
-            raise ValueError(f"invalid bound mode: {mode}, valid values are: {', '.join(BOUND_MODES)}")
-    return eff_min, eff_max
+    if bound is None or bound[0] == "ignore":
+        return own
+    b = float(bound[1])
+    if bound[0] == "apply":
+        return b if ((other > b and s > b) if lower else (other < b and s < b)) else own
+    return own if (other < b if lower else other > b) else b  # clip
 
 
-def normalize_clause(
-    scored: DataFrame,
+def _check_bounds(technique: str, *bounds) -> None:
+    for bound in bounds:
+        if bound is not None and technique != "min_max":
+            raise ValueError("bounds are only supported by min_max normalization")
+        if bound is not None and bound[0] not in BOUND_MODES:
+            raise ValueError(f"invalid bound mode: {bound[0]}, valid values are: {', '.join(BOUND_MODES)}")
+
+
+def normalize_scores(
+    rows: list[tuple[int, float]],
     technique: str,
     rank_constant: int = 60,
     lower_bound: tuple[str, float] | None = None,
     upper_bound: tuple[str, float] | None = None,
-    keys: tuple[str, ...] = (),
-) -> DataFrame:
-    """(docID, score) → (docID, nscore), reference edge cases included.
+) -> list[tuple[int, float]]:
+    """One clause's depth cut (docID, score) → (docID, nscore), in (score
+    desc, docID asc) order, reference edge cases included.
 
-    Precondition: ``scored`` is a depth-cut clause (:func:`clause_depth_cut`,
-    at most ``depth`` rows). The statistics are window aggregates over the
-    whole clause, and with no ``keys`` the window is unpartitioned, so the
-    clause runs through a single task. ``keys`` partitions the window when
-    one frame holds many clauses (e.g. ``("qid", "cidx")``, each partition
-    depth-cut); the key columns are kept in the output.
+    Statistics fold over the rows in that order, as the Spark windows over
+    the cut did: sums add left to right from 0.0, the z_score deviation
+    follows ``stddev_samp``'s row-by-row (n, mean, M2) update, and rrf
+    rounds ``1/(rank_constant + rank)`` HALF_UP at scale 10.
 
     ``lower_bound``/``upper_bound``: optional ("apply"|"clip"|"ignore", value)
     pairs, min_max only — ``MinMaxScoreNormalizationTechnique.java:258-295``
     with the bound substitution/clip rules from ``normalization/bounds/``.
     """
-    s = F.col("score")
-    w = Window.partitionBy(*keys)
-    if technique != "min_max" and (lower_bound is not None or upper_bound is not None):
-        raise ValueError("bounds are only supported by min_max normalization")
-    if technique == "min_max":
-        df = scored.select("*", F.min(s).over(w).alias("_mn"), F.max(s).over(w).alias("_mx"))
-        mn, mx = F.col("_mn"), F.col("_mx")
-        eff_min, eff_max = _effective_bounds(s, mn, mx, lower_bound, upper_bound)
-        raw = (s - eff_min) / (eff_max - eff_min)
+    _check_bounds(technique, lower_bound, upper_bound)
+    if not rows:
+        return []
+    rows = sorted(rows, key=lambda r: (-r[1], r[0]))
+    scores = [s for _, s in rows]
+    mn, mx = min(scores), max(scores)
+    clip_lo = lower_bound is not None and lower_bound[0] == "clip"
+    clip_hi = upper_bound is not None and upper_bound[0] == "clip"
+
+    def min_max(s: float) -> float:
+        lo = _effective_bound(lower_bound, s, mn, mx, lower=True)
+        hi = _effective_bound(upper_bound, s, mx, mn, lower=False)
         # normalizeSingleScore branch order (MinMaxScoreNormalizationTechnique
         # .java:258-280): single-score → 1.0; clip-below → MIN_SCORE;
         # clip-above → MAX_SCORE; effMax==effMin → 1.0; raw==0 → MIN_SCORE.
-        n = F.when((mx == mn) & (mx == s), F.lit(1.0))
-        if lower_bound is not None and lower_bound[0] == "clip":
-            n = n.when(s < eff_min, F.lit(MIN_SCORE))
-        if upper_bound is not None and upper_bound[0] == "clip":
-            n = n.when(s > eff_max, F.lit(MAX_SCORE))
-        n = n.when(eff_max == eff_min, F.lit(1.0)).otherwise(
-            F.when(raw == 0.0, F.lit(MIN_SCORE)).otherwise(raw)
-        )
-        return df.select(*keys, "docID", n.alias("nscore"))
-    if technique == "l2":
-        df = scored.select("*", F.sqrt(F.sum(s * s).over(w)).alias("_norm"))
-        n = F.when(F.col("_norm") == 0.0, F.lit(0.0)).otherwise(s / F.col("_norm"))
-        return df.select(*keys, "docID", n.alias("nscore"))
-    if technique == "z_score":
-        df = scored.select(
-            "*",
-            F.avg(s).over(w).alias("_mean"),
-            F.coalesce(F.stddev_samp(s).over(w), F.lit(0.0)).alias("_sd"),
-            F.max(s).over(w).alias("_mx"),
-            F.min(s).over(w).alias("_mn"),
-        )
-        z = (s - F.col("_mean")) / F.col("_sd")
-        n = (
-            F.when(s == F.col("_mean"), F.col("_mx"))  # s==mean → clause max
-            .when(F.col("_sd") == 0.0, F.col("_mn"))  # sd==0 → clause min
-            .otherwise(F.when(z <= 0.0, F.lit(MIN_SCORE)).otherwise(z))
-        )
-        return df.select(*keys, "docID", n.alias("nscore"))
-    if technique == "rrf":
+        if mx == mn and mx == s:
+            return 1.0
+        if clip_lo and s < lo:
+            return MIN_SCORE
+        if clip_hi and s > hi:
+            return MAX_SCORE
+        if hi == lo:
+            return 1.0
+        raw = (s - lo) / (hi - lo)
+        return MIN_SCORE if raw == 0.0 else raw
+
+    if technique == "min_max":
+        out = [min_max(s) for s in scores]
+    elif technique == "l2":
+        norm = math.sqrt(reduce(add, [0.0] + [s * s for s in scores]))
+        out = [0.0 if norm == 0.0 else s / norm for s in scores]
+    elif technique == "z_score":
+        n, avg, m2 = 0.0, 0.0, 0.0
+        for s in scores:
+            n, delta = n + 1.0, s - avg
+            avg, m2 = avg + delta / n, m2 + delta * (delta - delta / n)
+        sd = math.sqrt(m2 / (n - 1.0)) if n > 1.0 else 0.0  # one row: null → 0.0
+        mean = reduce(add, [0.0] + scores) / len(scores)  # avg(): sum / count
+        z = [(s - mean) / sd if sd else 0.0 for s in scores]
+        # s==mean → clause max; sd==0 → clause min; z<=0 → MIN_SCORE
+        out = [mx if s == mean else mn if sd == 0.0 else MIN_SCORE if zi <= 0.0 else zi
+               for s, zi in zip(scores, z)]
+    elif technique == "rrf":
         # 1/(rank_constant + pos + 1), BigDecimal scale 10 HALF_UP
-        # (RRFNormalizationTechnique.java:136-138); rank within the clause's
-        # collected order = score desc, docID asc
-        rn = F.row_number().over(w.orderBy(F.desc("score"), F.asc("docID")))
-        n = F.round(F.lit(1.0) / (F.lit(rank_constant) + rn), 10)
-        return scored.select(*keys, "docID", n.alias("nscore"))
-    raise ValueError(technique)
+        # (RRFNormalizationTechnique.java:136-138)
+        q = Decimal(1).scaleb(-10)
+        out = [float(Decimal(repr(1.0 / (rank_constant + r))).quantize(q, ROUND_HALF_UP))
+               for r in range(1, len(scores) + 1)]
+    else:
+        raise ValueError(technique)
+    return [(d, v) for (d, _), v in zip(rows, out)]
 
 
-def combine_clauses(
-    normalized: list[DataFrame],
+def combine_scores(
+    normalized: list[list[tuple[int, float]]],
     technique: str = "arithmetic_mean",
     weights: list[float] | None = None,
-) -> DataFrame:
-    """Per-doc combination over zero-filled per-clause score columns."""
+) -> dict[int, tuple[float, list[float]]]:
+    """Per-doc combination over zero-filled per-clause scores → docID →
+    (score, [s_0, ..., s_{n-1}]). A clause's score for a doc is 0.0 where
+    the clause did not return the doc (``ScoreCombiner.java:291-305``),
+    else the sum of its rows for the doc (a docID that repeats sums)."""
     n = len(normalized)
     validate_weights(weights, n)
     w = weights or [1.0] * n
-    long = reduce(
-        DataFrame.unionByName,
-        [
-            df.select(
-                F.col("docID"),
-                F.lit(i).alias("_c"),
-                F.col([c for c in df.columns if c != "docID"][0]).alias("nscore"),
-            )
-            for i, df in enumerate(normalized)
-        ],
-    )
-    # one shuffle: pivot clause scores into columns, zero-fill absent
-    wide = long.groupBy("docID").agg(
-        *[
-            F.coalesce(F.sum(F.when(F.col("_c") == i, F.col("nscore"))), F.lit(0.0)).alias(f"s_{i}")
-            for i in range(n)
-        ]
-    )
-    cols = [F.col(f"s_{i}") for i in range(n)]
-    if technique == "arithmetic_mean":
-        # s >= 0 always holds post-zero-fill → all weights in denominator
-        # (ArithmeticMeanScoreCombinationTechnique.java:42-60)
-        num = reduce(lambda a, b: a + b, [c * F.lit(wi) for c, wi in zip(cols, w)])
-        den = F.lit(float(sum(w)))
-        comb = F.when(den == 0.0, F.lit(0.0)).otherwise(num / den)
-    elif technique == "harmonic_mean":
-        # zeros skipped (HarmonicMeanScoreCombinationTechnique.java:41-56)
-        sw = reduce(lambda a, b: a + b, [F.when(c > 0.0, F.lit(wi)).otherwise(F.lit(0.0)) for c, wi in zip(cols, w)])
-        sh = reduce(lambda a, b: a + b, [F.when(c > 0.0, F.lit(wi) / c).otherwise(F.lit(0.0)) for c, wi in zip(cols, w)])
-        comb = F.when(sh > 0.0, sw / sh).otherwise(F.lit(0.0))
-    elif technique == "geometric_mean":
-        # exp(Σ w·ln s / Σ w) over s>0 (GeometricMeanScoreCombinationTechnique.java:43-59)
-        sw = reduce(lambda a, b: a + b, [F.when(c > 0.0, F.lit(wi)).otherwise(F.lit(0.0)) for c, wi in zip(cols, w)])
-        sl = reduce(lambda a, b: a + b, [F.when(c > 0.0, F.lit(wi) * F.log(c)).otherwise(F.lit(0.0)) for c, wi in zip(cols, w)])
-        comb = F.when(sw == 0.0, F.lit(0.0)).otherwise(F.exp(sl / sw))
-    elif technique == "rrf":
-        # weighted SUM, not mean (RRFScoreCombinationTechnique.java:39-62)
-        comb = reduce(lambda a, b: a + b, [c * F.lit(wi) for c, wi in zip(cols, w)])
-    else:
+    per_doc: dict[int, list[float]] = {}
+    for i, rows in enumerate(normalized):
+        for d, v in rows:
+            per_doc.setdefault(d, [0.0] * n)[i] += v
+
+    def comb(cols: list[float]) -> float:
+        cw = list(zip(cols, w))
+        if technique == "arithmetic_mean":
+            # s >= 0 always holds post-zero-fill → all weights in denominator
+            # (ArithmeticMeanScoreCombinationTechnique.java:42-60)
+            den = float(sum(w))
+            return 0.0 if den == 0.0 else reduce(add, [c * wi for c, wi in cw]) / den
+        # harmonic/geometric skip zeros (HarmonicMeanScoreCombinationTechnique
+        # .java:41-56, GeometricMeanScoreCombinationTechnique.java:43-59)
+        sw = reduce(add, [wi if c > 0.0 else 0.0 for c, wi in cw])
+        if technique == "harmonic_mean":
+            sh = reduce(add, [wi / c if c > 0.0 else 0.0 for c, wi in cw])
+            return sw / sh if sh > 0.0 else 0.0
+        if technique == "geometric_mean":  # exp(Σ w·ln s / Σ w) over s>0
+            sl = reduce(add, [wi * math.log(c) if c > 0.0 else 0.0 for c, wi in cw])
+            return 0.0 if sw == 0.0 else math.exp(sl / sw)
+        if technique == "rrf":
+            # weighted SUM, not mean (RRFScoreCombinationTechnique.java:39-62)
+            return reduce(add, [c * wi for c, wi in cw])
         raise ValueError(technique)
-    return wide.select("docID", comb.alias("score"), *[F.col(f"s_{i}") for i in range(n)])
+
+    return {d: (comb(cols), cols) for d, cols in per_doc.items()}
 
 
 def hybrid_raw_sum(clause_scores: list[DataFrame]) -> DataFrame:
@@ -293,7 +272,7 @@ def hybrid_batch_topk(
     NormalizationProcessor pipeline for offline eval sets and query logs.
     Per-request numbers are IEEE-identical to :func:`hybrid_search`: the
     pivot into fixed per-clause columns keeps the combine's add order
-    left-associated exactly like :func:`combine_clauses`, and absent
+    left-associated exactly like :func:`combine_scores`, and absent
     clauses zero-fill (they still count in the arithmetic-mean
     denominator, ``ScoreCombiner`` semantics).
 
@@ -315,24 +294,8 @@ def hybrid_batch_topk(
     if not rows:
         return local_table(spark, [], "qid int, docID long, score double")
     qt = F.broadcast(local_table(spark, rows, "qid int, cidx int, term string"))
-    postings, doclens, stats = engine.postings, engine.doclens, engine.stats
-    dfreq = (
-        postings.join(F.broadcast(qt.select("term").distinct()), "term")
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("ndoc"))
-    )
-    matched = (
-        postings.join(qt, "term")
-        .join(F.broadcast(dfreq), "term")
-        .join(doclens, "docID")
-    )
-    tf = F.col("tf").cast("double")
-    tf_norm = tf / (
-        tf
-        + F.lit(bm25.K1) * (F.lit(1.0 - bm25.B) + F.lit(bm25.B) * F.col("dlq") / F.lit(stats.avgdl))
-    )
-    clause_scores = matched.groupBy("qid", "cidx", "docID").agg(
-        F.sum(bm25.idf_col(stats.n_docs, F.col("ndoc")) * tf_norm).alias("score")
+    clause_scores = engine.postings.join(qt, "term").groupBy("qid", "cidx", "docID").agg(
+        F.sum(bm25.term_score_col(engine.stats)).alias("score")
     )
     if depth is not None:
         wd = Window.partitionBy("qid", "cidx").orderBy(
@@ -343,7 +306,16 @@ def hybrid_batch_topk(
             .where(F.col("_rn") <= int(depth))
             .drop("_rn")
         )
-    normalized = normalize_clause(clause_scores, "min_max", keys=("qid", "cidx"))
+    # min_max per (qid, clause), no bounds: normalize_scores' branch order
+    sc, w = F.col("score"), Window.partitionBy("qid", "cidx")
+    mn, mx = F.min(sc).over(w), F.max(sc).over(w)
+    raw = (sc - mn) / (mx - mn)
+    normalized = clause_scores.select(
+        "qid", "cidx", "docID",
+        F.when(mx == mn, F.lit(1.0))
+        .otherwise(F.when(raw == 0.0, F.lit(MIN_SCORE)).otherwise(raw))
+        .alias("nscore"),
+    )
     maxc = max(len(c) for c in batches.values())
     wide = normalized.groupBy("qid", "docID").agg(
         *[
@@ -353,20 +325,17 @@ def hybrid_batch_topk(
             for i in range(maxc)
         ]
     )
-    nclause = F.broadcast(
-        local_table(
-            spark,
-            [(int(qid), float(len(c))) for qid, c in sorted(batches.items())],
-            "qid int, _nc double",
-        )
+    # clauses per request, looked up in a map literal (no join)
+    nclause = F.create_map(
+        *[F.lit(x) for qid, c in sorted(batches.items()) for x in (int(qid), float(len(c)))]
     )
-    num = reduce(lambda a, b: a + b, [F.col(f"s_{i}") for i in range(maxc)])
+    num = reduce(add, [F.col(f"s_{i}") for i in range(maxc)])
     # round-then-cut: the per-qid window orders by the ROUNDED score so the
     # engine and the DuckDB oracle (which rounds before ORDER BY/LIMIT)
     # share one cut contract — same reasoning as bm25_batch_topk; cutting
     # on the unrounded score can pick different docs on 4dp boundary ties.
-    comb = wide.join(nclause, "qid").select(
-        "qid", "docID", F.round(num / F.col("_nc"), 4).alias("score")
+    comb = wide.select(
+        "qid", "docID", F.round(num / F.element_at(nclause, F.col("qid")), 4).alias("score")
     )
     wk = Window.partitionBy("qid").orderBy(
         F.col("score").desc(), F.col("docID").asc()
@@ -394,65 +363,86 @@ def hybrid_search(
 ) -> DataFrame:
     """Full hybrid pipeline over pre-scored clauses → top-k (docID, score).
 
+    Runs the clause plans when called: the per-clause depth cuts come to
+    the driver in one ``collect()`` (at most clauses × depth rows, else
+    ValueError), and normalize, combine, post_filter and the final (score
+    desc, docID asc) cut run there (:func:`normalize_scores`,
+    :func:`combine_scores`). The result is a JVM-local table of at most
+    ``k`` rows; with ``keep_clause_columns`` it also carries the
+    zero-filled normalized clause scores ``s_0..s_{n-1}``.
+
     ``clause_scores``: per-clause (docID, score) DataFrames (raw scores).
     ``depth``: required per-clause collection depth ≥ 1 — the reference's
     ``numHits = pagination_depth ?? size``; a missing one raises ValueError.
     ``post_filter_docs``: docID membership filter applied after scoring,
-    before the final cut (post_filter semantics).
+    before the final cut (post_filter semantics); its membership of the
+    cut docs is fetched in the same collect.
     ``lower_bounds``/``upper_bounds``: per-clause min_max bounds, one entry
     (or None) per clause (``MinMaxScoreNormalizationTechnique.java:52-64``).
     """
     from neural_search_spark import settings
 
+    n = len(clause_scores)
     max_sub = int(settings.get("hybrid_max_sub_queries"))
-    if not 1 <= len(clause_scores) <= max_sub:
+    if not 1 <= n <= max_sub:
         raise ValueError(f"hybrid query supports 1..{max_sub} sub-queries")
     validate_technique_pair(normalization, combination)
     if depth is None or depth < 1:
-        # normalize_clause's unpartitioned windows run the clause through
-        # one task, which is bounded only over a depth cut
+        # the driver collects clauses × depth rows: bounded only by a cut
         raise ValueError("hybrid_search requires a per-clause depth (numHits) >= 1")
-    # stats-API event counters (stats/events/EventStatName.java analog)
+    validate_weights(weights, n)
+    for bounds in (lower_bounds, upper_bounds):
+        if bounds is not None and len(bounds) != n:
+            raise ValueError("bounds list must have one entry per sub-query")
+    lbs, ubs = lower_bounds or [None] * n, upper_bounds or [None] * n
+    _check_bounds(normalization, *lbs, *ubs)
+    # stats-API event counters (stats/events/EventStatName.java analog):
+    # the normalization processor runs once per hybrid request; techniques
+    # map to their typed counters (rrf is the rank-based processor +
+    # comb_rrf pair in the reference)
     from neural_search_spark import stats as _stats
 
-    # EventStatName.java counters: the normalization processor runs once
-    # per hybrid request; techniques map to their typed counters (rrf is
-    # the rank-based processor + comb_rrf pair in the reference)
     _stats.record_event("hybrid_query_requests")
     if normalization == "rrf":
         _stats.record_event("rank_based_normalization_processor_executions")
     else:
         _stats.record_event("normalization_processor_executions")
         _stats.record_event(
-            {
-                "min_max": "norm_minmax_executions",
-                "l2": "norm_l2_executions",
-                "z_score": "norm_zscore_executions",
-            }[normalization]
+            {"min_max": "norm_minmax_executions", "l2": "norm_l2_executions",
+             "z_score": "norm_zscore_executions"}[normalization]
         )
     _stats.record_event(
-        {
-            "arithmetic_mean": "comb_arithmetic_executions",
-            "geometric_mean": "comb_geometric_executions",
-            "harmonic_mean": "comb_harmonic_executions",
-            "rrf": "comb_rrf_executions",
-        }[combination]
+        {"arithmetic_mean": "comb_arithmetic_executions", "geometric_mean": "comb_geometric_executions",
+         "harmonic_mean": "comb_harmonic_executions", "rrf": "comb_rrf_executions"}[combination]
     )
-    for bounds in (lower_bounds, upper_bounds):
-        if bounds is not None and len(bounds) != len(clause_scores):
-            raise ValueError("bounds list must have one entry per sub-query")
-    lbs = lower_bounds or [None] * len(clause_scores)
-    ubs = upper_bounds or [None] * len(clause_scores)
-    normalized = [
-        normalize_clause(
-            clause_depth_cut(df, depth), normalization, rank_constant, lower_bound=lb, upper_bound=ub
-        )
-        for df, lb, ub in zip(clause_scores, lbs, ubs)
-    ]
-    combined = combine_clauses(normalized, combination, weights)
+    cuts = reduce(
+        DataFrame.unionByName,
+        [
+            clause_depth_cut(df, depth).select(F.lit(i).alias("cidx"), "docID", "score")
+            for i, df in enumerate(clause_scores)
+        ],
+    )
     if post_filter_docs is not None:
-        combined = combined.join(post_filter_docs.select("docID"), "docID", "semi")
-    out_cols = ["docID", "score"] + (
-        [c for c in combined.columns if c.startswith("s_")] if keep_clause_columns else []
+        # membership as a flag on each cut row (a left join against the
+        # distinct members), so the collect stays clauses × depth rows
+        pf = post_filter_docs.select("docID").distinct().withColumn("_pf", F.lit(True))
+        cuts = cuts.join(pf, "docID", "left")
+    rows = cuts.collect()
+    if len(rows) > n * depth:
+        raise ValueError(f"hybrid_search collected {len(rows)} rows, over clauses × depth = {n * depth}")
+    normalized = [
+        normalize_scores([(r["docID"], r["score"]) for r in rows if r["cidx"] == i],
+                         normalization, rank_constant, lbs[i], ubs[i])
+        for i in range(n)
+    ]
+    combined = combine_scores(normalized, combination, weights)
+    if post_filter_docs is not None:
+        members = {r["docID"] for r in rows if r["_pf"]}
+        combined = {d: v for d, v in combined.items() if d in members}
+    top = sorted(combined.items(), key=lambda kv: (-kv[1][0], kv[0]))[:k]
+    cols = [f"s_{i}" for i in range(n)] if keep_clause_columns else []
+    return local_table(
+        clause_scores[0].sparkSession,
+        [(d, score, *s_i[: len(cols)]) for d, (score, s_i) in top],
+        ", ".join(["docID long", "score double"] + [f"{c} double" for c in cols]),
     )
-    return combined.select(*out_cols).orderBy(F.desc("score"), F.asc("docID")).limit(k)

@@ -232,8 +232,8 @@ def hybrid_sort_by_field(
     clauses that did not match — the collector's per-sub-query score
     arrays). No normalization/combination happens on the sort path.
 
-    Plan: clause unions pivot in ONE groupBy (same single-shuffle shape as
-    combine_clauses), join sort fields, TakeOrderedAndProject cut."""
+    Plan: clause unions pivot in ONE groupBy (a single shuffle for any
+    clause count), join sort fields, TakeOrderedAndProject cut."""
     from functools import reduce
 
     n = len(clause_scores)

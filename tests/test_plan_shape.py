@@ -75,14 +75,20 @@ def test_phrase_default_routes_through_positional_index(spark, entry):
 def test_delegate_raw_routes_are_artifact_bounded(spark, entry):
     """The delegate raw-type routes never join the corpus against itself:
     token_count is a filter over the per-doc length artifact (its one
-    exchange is the output sort), match_only_text is one broadcast join +
-    one agg ending in TakeOrderedAndProject."""
+    exchange is the output sort), match_only_text is a filter on the
+    cached postings + one agg ending in TakeOrderedAndProject (the
+    postings' own ``ndoc`` window exchange runs once, when the cache is
+    built)."""
+    from tools.plan_audit import query_time_nodes
+
     qmap = entry.queries()
     p = _plan(qmap["semantic_raw_token_count"](spark, SF_DIR))
     assert p.count(") Exchange") <= 1
     assert "Join" not in p
     p = _plan(qmap["semantic_raw_match_only_topk"](spark, SF_DIR))
-    assert p.count(") Exchange") <= 1
+    nodes = [n for _, n in query_time_nodes(p)]
+    assert sum(n.startswith("Exchange") for n in nodes) <= 1
+    assert not any("Join" in n for n in nodes)
     assert "SortMergeJoin" not in p
     assert "TakeOrderedAndProject" in p
 
@@ -96,15 +102,32 @@ def test_batched_quantized_ann_is_two_window_cuts(spark, entry):
     assert "SortMergeJoin" not in p
 
 
-def test_two_phase_spec_rescore_broadcasts_the_window(spark, entry):
+def test_two_phase_spec_rescore_broadcasts_the_window(spark, entry, monkeypatch):
     """The spec-path two-phase rescore joins the corpus-sized phase-1
     table only against BROADCAST window tables (≤ 10000 rows by the
     processor cap) — a sort-merge join here would re-sort the corpus per
-    query."""
-    for key in ("sparse_two_phase_spec", "sparse_two_phase_topk"):
-        p = _plan(entry.queries()[key](spark, SF_DIR))
-        assert "SortMergeJoin" not in p, key
-        assert "TakeOrderedAndProject" in p, key
+    query. The spec key's rescore is a hybrid clause, and ``hybrid_search``
+    runs its clause plans when called, so those are checked as
+    ``hybrid_search`` receives them, each with its depth cut."""
+    from neural_search_spark.search import spec
+    from neural_search_spark.search.hybrid import clause_depth_cut
+
+    p = _plan(entry.queries()["sparse_two_phase_topk"](spark, SF_DIR))
+    assert "SortMergeJoin" not in p
+    assert "TakeOrderedAndProject" in p
+    clauses, real = [], spec.hybrid_search
+
+    def capture(clause_scores, *a, **kw):
+        clauses.extend(clause_scores)
+        return real(clause_scores, *a, **kw)
+
+    monkeypatch.setattr(spec, "hybrid_search", capture)
+    entry.queries()["sparse_two_phase_spec"](spark, SF_DIR)
+    assert len(clauses) == 2
+    for c in clauses:
+        p = _plan(clause_depth_cut(c, 50))
+        assert "SortMergeJoin" not in p
+        assert "TakeOrderedAndProject" in p
 
 
 #: keys whose query-time plans used to read driver-side literal tables
@@ -224,12 +247,37 @@ def test_library_builds_no_python_list_tables():
     assert hits == {("corpus.py", "return spark.createDataFrame(pdf)")}
 
 
+def _without_initial_plans(plan: str) -> str:
+    """A formatted plan without the nodes of any adaptive ``== Initial Plan
+    ==`` section: once a cached relation with an exchange has run, the
+    plan prints its adaptive plan's final plan and, beside it, the initial
+    plan, which never executes."""
+    import re
+
+    skip, marker = set(), None  # marker: where the section's nodes start
+    for line in plan.splitlines():
+        depth = len(line) - len(line.lstrip(" :+-*"))
+        if "== Initial Plan ==" in line:
+            marker = depth
+            continue
+        if marker is not None and depth < marker:
+            marker = None
+        m = re.match(r"[ :+\-*]*\S.*? \((\d+)\)", line)
+        if marker is not None and m:
+            skip.add(int(m.group(1)))
+    blocks = re.split(r"\n(?=\(\d+\) )", plan)
+    return "\n".join(
+        b for b in blocks if not ((m := re.match(r"\((\d+)\) ", b)) and int(m.group(1)) in skip)
+    )
+
+
 def _analyzer_plan(df, what: str) -> str:
     """The plan runs the analyzer once and in the JVM: no Python eval node,
-    and ``regexp_extract_all`` evaluated exactly once."""
+    and ``regexp_extract_all`` evaluated exactly once (a plan served from a
+    cache of the same rows counts the cache's executed plan)."""
     plan = _plan(df)
     assert "EvalPython" not in plan, what
-    assert plan.count("regexp_extract_all(") == 1, what
+    assert _without_initial_plans(plan).count("regexp_extract_all(") == 1, what
     return plan
 
 
@@ -282,3 +330,47 @@ def test_one_spark_analyzer_in_the_library():
                 hits.add((rel, line.strip()))
     assert hits == set()
 
+
+@pytest.fixture(scope="module")
+def cached_engine(spark):
+    from neural_search_spark.corpus import corpus_from_documents
+    from neural_search_spark.search.bm25 import BM25Engine
+
+    eng = BM25Engine(spark, corpus_from_documents(spark, SF_DIR)).cache()
+    eng.postings.count()
+    eng.stats  # noqa: B018 - collects the corpus stats
+    return eng
+
+
+def test_match_clause_is_one_aggregation(cached_engine):
+    """A cached engine's ``match`` clause reads df and the quantized doc
+    length off its postings rows: at query time the plan is a filter on
+    the cached postings and one aggregation, with exactly one exchange,
+    no broadcast and no join."""
+    from tools.plan_audit import query_time_nodes
+
+    nodes = [n for _, n in query_time_nodes(_plan(cached_engine.match("table value spark")))]
+    assert sum(n.startswith("Exchange") for n in nodes) == 1, nodes
+    assert not any("BroadcastExchange" in n or "Join" in n for n in nodes), nodes
+    assert any(n.startswith("InMemoryTableScan") for n in nodes), nodes
+
+
+def test_lexical_hybrid_runs_at_most_four_jobs(spark, cached_engine):
+    """A 2-clause lexical ``hybrid_search``, called and collected, runs at
+    most 4 Spark jobs: the clause aggregations and one collect of the
+    depth cuts, then the collect of the local result table."""
+    from neural_search_spark.search.hybrid import hybrid_search
+
+    def request():
+        clauses = [cached_engine.match(t) for t in ("table value spark", "join merge hash window")]
+        return hybrid_search(clauses, "min_max", "arithmetic_mean", k=10, depth=50).collect()
+
+    sc = spark.sparkContext
+    want = request()  # warm: the first request may compile code
+    sc.setJobGroup("lexical-hybrid-guard", "2-clause lexical hybrid")
+    try:
+        assert request() == want
+        jobs = sc.statusTracker().getJobIdsForGroup("lexical-hybrid-guard")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert 1 <= len(jobs) <= 4, jobs

@@ -12,6 +12,9 @@ formula), so both sides move together.
 
 from __future__ import annotations
 
+import functools
+import inspect
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -52,56 +55,76 @@ NEURAL_MIN_SCORE = 0.05
 COLLAPSE_CLAUSE_DEPTH = 4  # tight depth: per-clause collapse visibly differs
 
 
-_ENGINES: dict[tuple[int, str], BM25Engine] = {}
-_INDEXES: dict[tuple[int, str], "object"] = {}
+#: every per-(session, corpus) artifact, keyed by (builder name, id(session),
+#: bound arguments); filled only through :func:`_artifact`
+_ARTIFACTS: dict[tuple, object] = {}
+
+
+def _artifact(build: Callable) -> Callable:
+    """Build an artifact once per (session, bound arguments) and hand the
+    same object to every later call — the reference's index/query split.
+    Defaults are applied before keying, so ``f(s, d)`` and
+    ``f(s, d, field="content")`` are one entry."""
+    sig = inspect.signature(build)
+
+    @functools.wraps(build)
+    def get(spark: SparkSession, *args, **kwargs):
+        bound = sig.bind(spark, *args, **kwargs)
+        bound.apply_defaults()
+        key = (build.__name__, id(spark), *list(bound.arguments.values())[1:])
+        if key not in _ARTIFACTS:
+            _ARTIFACTS[key] = build(spark, *args, **kwargs)
+        return _ARTIFACTS[key]
+
+    return get
+
 
 #: the sources whose code writes the /tmp index artifacts
 _BUILD_SOURCES = ("index/builder.py", "index/codec.py", "index/positions.py", "analysis/tokenizer.py")
 
 
 def _build_tag(sf_dir: str, src_root: str | None = None) -> str:
-    """Directory tag of a /tmp index artifact: a hash of the corpus path
-    and of the bytes of the build-path sources under ``src_root`` (the
-    package by default), so an artifact that other code built is never
-    read back."""
+    """Directory tag of a /tmp index artifact: a hash of the corpus path,
+    of each ``documents.parquet`` file's name, size and mtime, and of the
+    bytes of the build-path sources under ``src_root`` (the package by
+    default). So an artifact that other code built, or that was built
+    over data since regenerated in place, is never read back."""
     import hashlib
-    import os
 
     import neural_search_spark
 
     root = src_root or os.path.dirname(neural_search_spark.__file__)
     h = hashlib.sha1(sf_dir.encode())
+    src = os.path.join(sf_dir, "documents.parquet")
+    files = [os.path.join(src, n) for n in sorted(os.listdir(src))] if os.path.isdir(src) else [src]
+    for path in filter(os.path.exists, files):
+        st = os.stat(path)
+        h.update(f"{os.path.basename(path)}:{st.st_size}:{st.st_mtime_ns}".encode())
     for rel in _BUILD_SOURCES:
         with open(os.path.join(root, rel), "rb") as f:
             h.update(rel.encode() + b"\0" + f.read())
     return h.hexdigest()[:10]
 
 
+@_artifact
 def _index(spark: SparkSession, sf_dir: str):
     """Compressed block-max index per (session, corpus), built once under
     /tmp and reused — the persisted-index query path."""
-    import os
-
     from neural_search_spark.index.builder import build_index
     from neural_search_spark.search.wand import BlockMaxIndex
 
     from neural_search_spark.index.codec import FORMAT_VERSION
 
-    key = (id(spark), sf_dir)
-    if key not in _INDEXES:
-        # The cache dir is keyed by on-disk format version: an engine
-        # upgrade (FORMAT_VERSION bump) migrates by building fresh in a
-        # new dir instead of tripping the reader's BWC refusal on a
-        # stale-format cache left by an older engine.
-        d = os.path.join("/tmp", f"nss_index_v{FORMAT_VERSION}_{_build_tag(sf_dir)}")
-        build_index(spark, corpus_from_documents(spark, sf_dir), d, n_shards=8)
-        _INDEXES[key] = BlockMaxIndex(spark, d).cache()
-    return _INDEXES[key]
+    # The cache dir is keyed by on-disk format version: an engine
+    # upgrade (FORMAT_VERSION bump) migrates by building fresh in a
+    # new dir instead of tripping the reader's BWC refusal on a
+    # stale-format cache left by an older engine.
+    d = os.path.join("/tmp", f"nss_index_v{FORMAT_VERSION}_{_build_tag(sf_dir)}")
+    build_index(spark, corpus_from_documents(spark, sf_dir), d, n_shards=8)
+    return BlockMaxIndex(spark, d).cache()
 
 
-_UPDATED_INDEXES: dict[tuple[int, str], "object"] = {}
-
-
+@_artifact
 def _updated_index(spark: SparkSession, sf_dir: str):
     """Incremental-maintenance artifact: an index FIRST built over the even
     half of the corpus, then brought up to the FULL corpus by
@@ -114,32 +137,24 @@ def _updated_index(spark: SparkSession, sf_dir: str):
     ships without re-indexing the world. On a dir left complete by a
     previous process the build resumes as a no-op and the update finds
     zero dirty docs (idempotent by docmap)."""
-    import os
-
     from neural_search_spark.index.builder import build_index, update_index
     from neural_search_spark.index.codec import FORMAT_VERSION
     from neural_search_spark.search.wand import BlockMaxIndex
 
-    key = (id(spark), sf_dir)
-    if key not in _UPDATED_INDEXES:
-        d = os.path.join("/tmp", f"nss_index_upd_v{FORMAT_VERSION}_{_build_tag(sf_dir)}")
-        corpus = corpus_from_documents(spark, sf_dir)
-        build_index(spark, corpus.where(F.col("docID") % 2 == 0), d, n_shards=8)
-        update_index(spark, corpus, d)
-        _UPDATED_INDEXES[key] = BlockMaxIndex(spark, d).cache()
-    return _UPDATED_INDEXES[key]
+    d = os.path.join("/tmp", f"nss_index_upd_v{FORMAT_VERSION}_{_build_tag(sf_dir)}")
+    corpus = corpus_from_documents(spark, sf_dir)
+    build_index(spark, corpus.where(F.col("docID") % 2 == 0), d, n_shards=8)
+    update_index(spark, corpus, d)
+    return BlockMaxIndex(spark, d).cache()
 
 
+@_artifact
 def _engine(spark: SparkSession, sf_dir: str) -> BM25Engine:
     """One cached engine per (session, corpus): the index is built once and
     queried many times — the reference's index/query split."""
-    key = (id(spark), sf_dir)
-    if key not in _ENGINES:
-        eng = BM25Engine(
-            spark, corpus_from_documents(spark, sf_dir), text_col="content", id_col="docID"
-        ).cache()
-        _ENGINES[key] = eng
-    return _ENGINES[key]
+    return BM25Engine(
+        spark, corpus_from_documents(spark, sf_dir), text_col="content", id_col="docID"
+    ).cache()
 
 
 def _round_score(df: DataFrame) -> DataFrame:
@@ -183,7 +198,9 @@ def q_bm25_phrase_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     every composed phrase clause; sf1 ratio 1.16× vs the scan's 7.67×).
     The corpus-scan path remains available as the explicit
     ``bm25_phrase_scan_topk`` contract exhibit; both share one oracle
-    because the index is score-identical to the scan by contract."""
+    because the index is score-identical to the scan by contract. Also
+    registered as ``bm25_phrase_indexed_topk``, the positional-index
+    exhibit named beside the scan key."""
     pidx = _pos_index(spark, sf_dir)
     return _round_score(pidx.match_phrase_topk(Q_PHRASE, k=10))
 
@@ -198,53 +215,22 @@ def q_bm25_phrase_scan_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _round_score(topk(eng.match_phrase(Q_PHRASE), 10))
 
 
-_POS_INDEXES: dict = {}
-
-
+@_artifact
 def _pos_index(spark: SparkSession, sf_dir: str, field: str = "content"):
     """Positional postings table per (session, corpus, field), built once
     under /tmp — the index-backed phrase path (term-hash bucket pruning).
     Per-field instances use that field's doclens/stats (Lucene keeps
     positions per field inside the postings format, so every text field
     is phrase-queryable without re-reading stored text)."""
-    import hashlib
-    import os
-
     from neural_search_spark.index.positions import PositionalIndex, build_positions
 
-    key = (id(spark), sf_dir, field)
-    if key not in _POS_INDEXES:
-        eng = _engine(spark, sf_dir)
-        # Tag includes the build-source hash (_build_tag) and a corpus
-        # fingerprint (per-file size+mtime of the source parquet), not just
-        # the path: regenerating data in-place at the same
-        # path must invalidate the cached positional index, or the indexed
-        # phrase/span paths would silently diverge from the live-data oracle.
-        fp = hashlib.sha1(_build_tag(sf_dir).encode())
-        src = os.path.join(sf_dir, "documents.parquet")
-        if os.path.isdir(src):
-            for name in sorted(os.listdir(src)):
-                st = os.stat(os.path.join(src, name))
-                fp.update(f"{name}:{st.st_size}:{st.st_mtime_ns}".encode())
-        elif os.path.exists(src):
-            st = os.stat(src)
-            fp.update(f"{st.st_size}:{st.st_mtime_ns}".encode())
-        tag = fp.hexdigest()[:10]
-        suffix = "" if field == "content" else f"_{field}"
-        d = os.path.join("/tmp", f"nss_positions_{tag}{suffix}")
-        if not os.path.exists(os.path.join(d, "_SUCCESS")):
-            build_positions(spark, eng.corpus, d, text_col=field)
-        _, doclens, stats = eng.field_artifacts(field)
-        _POS_INDEXES[key] = PositionalIndex(spark, d, doclens, stats)
-    return _POS_INDEXES[key]
-
-
-def q_bm25_phrase_indexed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same phrase query through the positional postings table — must be
-    rank- and score-identical to the scan path, so it shares
-    bm25_phrase_topk's oracle (like bm25_wand_topk vs bm25_match_topk)."""
-    pidx = _pos_index(spark, sf_dir)
-    return _round_score(pidx.match_phrase_topk(Q_PHRASE, k=10))
+    eng = _engine(spark, sf_dir)
+    suffix = "" if field == "content" else f"_{field}"
+    d = os.path.join("/tmp", f"nss_positions_{_build_tag(sf_dir)}{suffix}")
+    if not os.path.exists(os.path.join(d, "_SUCCESS")):
+        build_positions(spark, eng.corpus, d, text_col=field)
+    _, doclens, stats = eng.field_artifacts(field)
+    return PositionalIndex(spark, d, doclens, stats)
 
 
 def q_prefix_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -528,20 +514,13 @@ def q_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _hybrid(spark, sf_dir, "rrf", "rrf", clauses=HYBRID_CLAUSES_3)
 
 
-_EMBEDDINGS_STUB: dict[tuple[int, str], DataFrame] = {}
-
-
+@_artifact
 def _doc_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stand-in text_embedding output (docID, embedding) — at scale this is
     the ingest-time embedding column; cached like the engine tables."""
     from neural_search_spark.pipeline.embedding import text_embedding_stub
 
-    key = (id(spark), sf_dir)
-    if key not in _EMBEDDINGS_STUB:
-        _EMBEDDINGS_STUB[key] = text_embedding_stub(
-            corpus_from_documents(spark, sf_dir)
-        ).cache()
-    return _EMBEDDINGS_STUB[key]
+    return text_embedding_stub(corpus_from_documents(spark, sf_dir)).cache()
 
 
 def q_hybrid_neural_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -563,9 +542,7 @@ def q_hybrid_neural_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _round_score(out)
 
 
-_DOC_IVF_ARTIFACTS: dict = {}
-
-
+@_artifact
 def _doc_ivf_artifacts(spark: SparkSession, sf_dir: str):
     """Ingest-time IVF artifacts (centroids + list assignment) over the
     DOC-embedding column (the 8-dim stand-in, distinct from the
@@ -575,20 +552,17 @@ def _doc_ivf_artifacts(spark: SparkSession, sf_dir: str):
     probe."""
     from neural_search_spark.pipeline.ann import ivf_assign, ivf_centroids
 
-    key = (id(spark), sf_dir)
-    if key not in _DOC_IVF_ARTIFACTS:
-        emb = _doc_embeddings(spark, sf_dir)
-        cents = ivf_centroids(emb, n_lists=8, id_col="docID", vec_col="embedding").cache()
-        # clustered by list_id before caching: the probe's literal isin
-        # predicate then prunes whole cached batches (at 100 TB: parquet
-        # written partitioned by list_id, probe prunes directories)
-        asg = (
-            ivf_assign(emb, cents, id_col="docID", vec_col="embedding")
-            .repartition(8, "list_id")
-            .cache()
-        )
-        _DOC_IVF_ARTIFACTS[key] = (cents, asg)
-    return _DOC_IVF_ARTIFACTS[key]
+    emb = _doc_embeddings(spark, sf_dir)
+    cents = ivf_centroids(emb, n_lists=8, id_col="docID", vec_col="embedding").cache()
+    # clustered by list_id before caching: the probe's literal isin
+    # predicate then prunes whole cached batches (at 100 TB: parquet
+    # written partitioned by list_id, probe prunes directories)
+    asg = (
+        ivf_assign(emb, cents, id_col="docID", vec_col="embedding")
+        .repartition(8, "list_id")
+        .cache()
+    )
+    return cents, asg
 
 
 def q_hybrid_ann_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -618,24 +592,19 @@ def q_hybrid_ann_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _round_score(out)
 
 
-_DOC_PQ_CODEBOOKS: dict = {}
-
-
+@_artifact
 def _doc_pq_codebooks(spark: SparkSession, sf_dir: str):
     """Ingest-time PQ codebooks over the DOC embeddings (8-dim stand-in:
     2 subspaces × 4 dims, 8 codes) — the write-time artifact of the k-NN
     `pq` encoder; queries only collect the O(M·K) LUT."""
     from neural_search_spark.pipeline.ann import pq_codebooks
 
-    key = (id(spark), sf_dir)
-    if key not in _DOC_PQ_CODEBOOKS:
-        cb = pq_codebooks(
-            _doc_embeddings(spark, sf_dir), n_sub=2, n_codes=8, subdim=4,
-            id_col="docID", vec_col="embedding",
-        ).cache()
-        cb.count()
-        _DOC_PQ_CODEBOOKS[key] = cb
-    return _DOC_PQ_CODEBOOKS[key]
+    cb = pq_codebooks(
+        _doc_embeddings(spark, sf_dir), n_sub=2, n_codes=8, subdim=4,
+        id_col="docID", vec_col="embedding",
+    ).cache()
+    cb.count()
+    return cb
 
 
 def q_hybrid_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1171,9 +1140,7 @@ def q_chunk_fixed_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SPARSE_POSTINGS: dict = {}
-
-
+@_artifact
 def _sparse_postings(spark: SparkSession, sf_dir: str, prune=None) -> DataFrame:
     """Sparse doc-side postings — an INGEST-time artifact in the reference
     (the sparse_encoding processor writes rank_features at index time), so
@@ -1185,13 +1152,10 @@ def _sparse_postings(spark: SparkSession, sf_dir: str, prune=None) -> DataFrame:
         sparse_postings,
     )
 
-    key = (id(spark), sf_dir, prune)
-    if key not in _SPARSE_POSTINGS:
-        feats = sparse_features_from_tf(corpus_from_documents(spark, sf_dir))
-        if prune is not None:
-            feats = prune_features(feats, *prune)
-        _SPARSE_POSTINGS[key] = sparse_postings(feats).cache()
-    return _SPARSE_POSTINGS[key]
+    feats = sparse_features_from_tf(corpus_from_documents(spark, sf_dir))
+    if prune is not None:
+        feats = prune_features(feats, *prune)
+    return sparse_postings(feats).cache()
 
 
 def q_sparse_score_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1600,13 +1564,12 @@ def q_hybrid_explain_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     from functools import reduce
 
     from neural_search_spark.search.hybrid import (
-        clause_depth_cut,
         describe_combination,
         describe_normalization,
     )
 
     eng = _engine(spark, sf_dir)
-    cut = [clause_depth_cut(eng.match(t), HYBRID_DEPTH) for t in HYBRID_CLAUSES]
+    cut = [topk(eng.match(t), HYBRID_DEPTH) for t in HYBRID_CLAUSES]
     n = len(cut)
     out = hybrid_search(
         cut,
@@ -1671,9 +1634,7 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return exact_dups(inject_duplicates(spark, sf_dir)).orderBy("docID")
 
 
-_MINHASH_PAIRS: dict = {}
-
-
+@_artifact
 def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Verified MinHash near-dup pairs, cached per (session, corpus): the
     pairs table feeds both the pair listing and the cluster closure — at
@@ -1681,12 +1642,7 @@ def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from neural_search_spark.corpus import inject_duplicates
     from neural_search_spark.pipeline.dedup import minhash_near_dups
 
-    key = (id(spark), sf_dir)
-    if key not in _MINHASH_PAIRS:
-        _MINHASH_PAIRS[key] = minhash_near_dups(
-            inject_duplicates(spark, sf_dir)
-        ).persist()
-    return _MINHASH_PAIRS[key]
+    return minhash_near_dups(inject_duplicates(spark, sf_dir)).persist()
 
 
 def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1782,22 +1738,17 @@ def q_ann_lsh_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_IVF_ARTIFACTS: dict = {}
-
-
+@_artifact
 def _ivf_artifacts(spark: SparkSession, sf_dir: str):
     """Ingest-time IVF artifacts per (session, corpus): centroids trained
     and list assignment materialized once; queries only probe."""
     from neural_search_spark.pipeline.ann import ivf_assign, ivf_centroids
 
-    key = (id(spark), sf_dir)
-    if key not in _IVF_ARTIFACTS:
-        emb = _embeddings(spark, sf_dir)
-        cents = ivf_centroids(emb).cache()
-        assigned = ivf_assign(emb, cents).cache()
-        assigned.count()
-        _IVF_ARTIFACTS[key] = (cents, assigned)
-    return _IVF_ARTIFACTS[key]
+    emb = _embeddings(spark, sf_dir)
+    cents = ivf_centroids(emb).cache()
+    assigned = ivf_assign(emb, cents).cache()
+    assigned.count()
+    return cents, assigned
 
 
 def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1858,34 +1809,21 @@ def q_ann_quantized_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PQ_CODEBOOKS: dict = {}
-_PQ_CODES: dict = {}
-
-
-def _pq_codebook_artifacts(spark: SparkSession, sf_dir: str):
+@_artifact
+def _pq_codebooks(spark: SparkSession, sf_dir: str):
     """Ingest-time PQ codebooks per (session, corpus): trained once (the
     write-time step of the Faiss/OpenSearch-kNN `pq` encoder); queries
-    only collect the O(M·K) table for the ADC literals. Building the
-    codebooks also materializes the STORED CODE table (the second half of
-    the write-time encoder — see :func:`_pq_code_artifacts`), so warming
-    this artifact warms the whole PQ index."""
-    _pq_code_artifacts(spark, sf_dir)
-    return _pq_codebooks(spark, sf_dir)
-
-
-def _pq_codebooks(spark: SparkSession, sf_dir: str):
-    """The one builder of the cached codebook table; both PQ artifact
-    accessors read the codebooks through it, so either may run first."""
+    only collect the O(M·K) table for the ADC literals. The code table
+    (:func:`_pq_code_artifacts`) reads its codebooks through here, so
+    either may be asked for first."""
     from neural_search_spark.pipeline.ann import pq_codebooks
 
-    key = (id(spark), sf_dir)
-    if key not in _PQ_CODEBOOKS:
-        cents = pq_codebooks(_embeddings(spark, sf_dir)).cache()
-        cents.count()
-        _PQ_CODEBOOKS[key] = cents
-    return _PQ_CODEBOOKS[key]
+    cents = pq_codebooks(_embeddings(spark, sf_dir)).cache()
+    cents.count()
+    return cents
 
 
+@_artifact
 def _pq_code_artifacts(spark: SparkSession, sf_dir: str):
     """Ingest-time PQ code table per (session, corpus): every vector's
     per-subspace code positions (``pq_encode``) stored WITH its IVF
@@ -1896,22 +1834,19 @@ def _pq_code_artifacts(spark: SparkSession, sf_dir: str):
     the ``pq`` encoder is realized in the plan, not just the docstring."""
     from neural_search_spark.pipeline.ann import pq_encode
 
-    key = (id(spark), sf_dir)
-    if key not in _PQ_CODES:
-        cents = _pq_codebooks(spark, sf_dir)
-        cb = {
-            (int(r["m"]), int(r["code"])): [float(x) for x in r["centroid"]]
-            for r in cents.collect()  # O(M·K) rows — bounded by design
-        }
-        _cents_ivf, assigned = _ivf_artifacts(spark, sf_dir)
-        codes = (
-            pq_encode(_embeddings(spark, sf_dir), cb)
-            .join(assigned.select("vec_id", "list_id"), "vec_id")
-            .cache()
-        )
-        codes.count()
-        _PQ_CODES[key] = codes
-    return _PQ_CODES[key]
+    cents = _pq_codebooks(spark, sf_dir)
+    cb = {
+        (int(r["m"]), int(r["code"])): [float(x) for x in r["centroid"]]
+        for r in cents.collect()  # O(M·K) rows — bounded by design
+    }
+    _cents_ivf, assigned = _ivf_artifacts(spark, sf_dir)
+    codes = (
+        pq_encode(_embeddings(spark, sf_dir), cb)
+        .join(assigned.select("vec_id", "list_id"), "vec_id")
+        .cache()
+    )
+    codes.count()
+    return codes
 
 
 def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1924,7 +1859,7 @@ def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return ann_pq_topk(
         _embeddings(spark, sf_dir), ANN_QUERY_ID, k=10, oversample=3,
-        codebooks=_pq_codebook_artifacts(spark, sf_dir),
+        codebooks=_pq_codebooks(spark, sf_dir),
         codes=_pq_code_artifacts(spark, sf_dir),
     )
 
@@ -1939,7 +1874,7 @@ def q_ann_pq_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return ann_pq_batch_topk(
         _embeddings(spark, sf_dir), ANN_BATCH_QUERY_IDS, k=5, oversample=3,
-        codebooks=_pq_codebook_artifacts(spark, sf_dir),
+        codebooks=_pq_codebooks(spark, sf_dir),
         codes=_pq_code_artifacts(spark, sf_dir),
     )
 
@@ -1958,7 +1893,7 @@ def q_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ann_ivfpq_topk(
         _embeddings(spark, sf_dir), ANN_QUERY_ID, k=10, oversample=3,
         centroids=cents, assigned=assigned,
-        codebooks=_pq_codebook_artifacts(spark, sf_dir),
+        codebooks=_pq_codebooks(spark, sf_dir),
         codes=_pq_code_artifacts(spark, sf_dir),
     )
 
@@ -2851,6 +2786,56 @@ def _sqs_oracle() -> str:
     return osql.simple_query_string_sql(p["should"], p["must_not"], k=10)
 
 
+def warm(spark: SparkSession, sf_dir: str) -> dict[str, float]:
+    """Build and materialize this session's index artifacts over
+    ``sf_dir`` before any query runs (the index half of the reference's
+    index/query split), and return each step's build seconds, in build
+    order. A second call finds every artifact in the registry.
+
+    Two artifacts stay lazy and are built inside the first key that asks
+    for them, so their build time is part of that key's time:
+    ``_doc_pq_codebooks`` (``hybrid_ann_pq``) and ``_minhash_pairs``
+    (``dedup_minhash_lsh``, ``dedup_clusters``)."""
+    import contextlib
+    import time
+
+    seconds: dict[str, float] = {}
+
+    @contextlib.contextmanager
+    def step(name: str):
+        t0 = time.perf_counter()
+        yield
+        seconds[name] = round(time.perf_counter() - t0, 4)
+
+    with step("engine"):
+        eng = _engine(spark, sf_dir)
+        eng.postings.count()
+        _ = eng.stats
+    with step("index"):
+        _index(spark, sf_dir)  # compressed block-max index (WAND path)
+    for fld in MULTI_MATCH_FIELDS:  # positional postings (phrase paths)
+        with step(f"pos_index:{fld}"):
+            _pos_index(spark, sf_dir, field=fld)
+    with step("ivf_artifacts"):
+        _ivf_artifacts(spark, sf_dir)  # IVF centroids + list assignment
+    with step("doc_embeddings"):
+        _doc_embeddings(spark, sf_dir)  # ingest-time embedding column
+    with step("doc_ivf_artifacts"):
+        _doc_ivf_artifacts(spark, sf_dir)  # doc-embedding IVF (hybrid_ann_dense)
+    with step("sparse_postings"):
+        _sparse_postings(spark, sf_dir).count()  # sparse ingest artifact
+    with step("pq_codebooks"):
+        _pq_codebooks(spark, sf_dir)  # PQ codebooks (ann_pq / ivfpq)
+    with step("pq_code_artifacts"):
+        _pq_code_artifacts(spark, sf_dir)  # stored PQ codes with their IVF list
+    with step("updated_index"):
+        _updated_index(spark, sf_dir)  # incremental-maintenance artifact
+    for fld in MULTI_MATCH_FIELDS:  # per-field indexes (multi_match)
+        with step(f"field_postings:{fld}"):
+            eng.field_artifacts(fld)[0].count()
+    return seconds
+
+
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001: hybrid BM25 two-clause
     min_max + arithmetic_mean (the reference's default pipeline)."""
@@ -2858,17 +2843,10 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Ordering is deliberate (driver checks the FIRST 50 dict entries per
-    # round): round 8 is the optimization round, so the keys whose
-    # operators were REWRITTEN for performance (bit-identical results,
-    # verified against the oracle locally) come first, then the 18 keys
-    # whose freshest driver row is round 4 (the planned r7 spill), then
-    # the oldest r5-stale keys up to position 50. After this round no
-    # key's freshest driver row is older than r5.
+    # bench.py times the keys in this order, and a key that first asks for
+    # a lazily built artifact (see warm) carries its build, so a reordering
+    # moves time between keys in the recorded BENCH trajectory.
     return {
-        # -- operators whose INTERNALS changed in round 8 (result-identical
-        # -- rewrites: vectorized kernels, stored PQ codes, broadcast joins)
-        # -- lead the window so the driver re-verifies them first --
         "dedup_embedding_cosine": q_dedup_embedding_cosine,
         "bm25_phrase_scan_topk": q_bm25_phrase_scan_topk,
         "ann_pq_topk": q_ann_pq_topk,
@@ -2890,8 +2868,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "hybrid_phrase_lex": q_hybrid_phrase_lex,
         "highlight_semantic": q_highlight_semantic,
         "neural_topk": q_neural_topk,
-        # -- freshest row r4 (the 16 remaining r4-stale keys; doc_keywords,
-        # -- text_decontaminate already above) --
         "events_json_prop": q_events_json_prop,
         "vocab_oov_rate": q_vocab_oov,
         "term_suggest": q_term_suggest,
@@ -2908,7 +2884,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "text_pii": q_text_pii,
         "domain_mixture": q_domain_mixture,
         "events_funnel": q_events_funnel,
-        # -- oldest r5-stale keys fill the 50-key driver window --
         "bm25_filtered_topk": q_bm25_filtered_topk,
         "bm25_wand_topk": q_bm25_wand_topk,
         "doclen_quantized": q_doclen_quantized,
@@ -2922,8 +2897,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "hybrid_rrf": q_hybrid_rrf,
         "hybrid_agg_by_repo": q_hybrid_agg_by_repo,
         "hybrid_agg_metrics": q_hybrid_agg_metrics,
-        # ---- driver window boundary (first 50 keys end here) ----
-        # -- remaining keys in prior order (r5 -> r6 -> r7 freshness tail) --
         "ann_lsh_multiprobe_topk": q_ann_lsh_multiprobe_topk,
         "sparse_two_phase_spec": q_sparse_two_phase_spec,
         "ann_quantized_batch_topk": q_ann_quantized_batch_topk,
@@ -3008,7 +2981,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ann_lsh_topk": q_ann_lsh_topk,
         "bm25_phrase_topk": q_bm25_phrase_topk,
         "bm25_multi_match_topk": q_bm25_multi_match_topk,
-        "bm25_phrase_indexed_topk": q_bm25_phrase_indexed_topk,
+        "bm25_phrase_indexed_topk": q_bm25_phrase_topk,
         "span_near_topk": q_span_near_topk,
         "prefix_topk": q_prefix_topk,
         "fuzzy_topk": q_fuzzy_topk,

@@ -34,21 +34,7 @@ def main() -> None:
     # Warm path: build + materialize the index once (the engine's index/query
     # split; BASELINE.md measures q/s on a warm index) and warm JVM/Python.
     t_idx0 = time.perf_counter()
-    eng = entry_mod._engine(spark, sf_dir)
-    eng.postings.count()
-    _ = eng.stats
-    entry_mod._index(spark, sf_dir)  # compressed block-max index (WAND path)
-    for fld in entry_mod.MULTI_MATCH_FIELDS:  # positional postings (phrase paths)
-        entry_mod._pos_index(spark, sf_dir, field=fld)
-    entry_mod._ivf_artifacts(spark, sf_dir)  # IVF centroids + list assignment
-    entry_mod._doc_embeddings(spark, sf_dir)  # ingest-time embedding column
-    entry_mod._doc_ivf_artifacts(spark, sf_dir)  # doc-embedding IVF (hybrid_ann_dense)
-    entry_mod._sparse_postings(spark, sf_dir).count()  # sparse ingest artifact
-    entry_mod._pq_codebook_artifacts(spark, sf_dir)  # PQ codebooks (ann_pq / ivfpq)
-    entry_mod._updated_index(spark, sf_dir)  # incremental-maintenance artifact
-    for fld in entry_mod.MULTI_MATCH_FIELDS:  # per-field indexes (multi_match)
-        p, _d, _s = eng.field_artifacts(fld)
-        p.count()
+    build_by_artifact = entry_mod.warm(spark, sf_dir)
     index_build = time.perf_counter() - t_idx0
 
     # stats API opt-in for the run: the bench emits the event-counter
@@ -119,6 +105,7 @@ def main() -> None:
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "queries_per_sec": round(len(timings) / total, 4) if total else None,
         "index_build_sec": round(index_build, 4),
+        "index_build_by_artifact": build_by_artifact,
         "cpus": int(cpus),
         "scaling": scaling,
         # plan-time event counters over the whole timed set (counts are

@@ -39,6 +39,7 @@ from operator import add
 
 from pyspark.sql import DataFrame, functions as F, Window
 
+from neural_search_spark.search.bm25 import term_score_col, topk
 from neural_search_spark.session import local_table
 
 # HybridQueryBuilder.java:67 — default; live value comes from the
@@ -106,12 +107,6 @@ def describe_combination(technique: str, weights: list[float] | None = None) -> 
         w = ", ".join(f"{float(x)!r}" for x in weights)
         return f"{technique}, weights [{w}] combination of:"
     return f"{technique} combination of:"
-
-
-def clause_depth_cut(scored: DataFrame, depth: int) -> DataFrame:
-    """Per-clause collection depth (numHits): keep top ``depth`` docs by
-    (score desc, docID asc)."""
-    return scored.orderBy(F.desc("score"), F.asc("docID")).limit(depth)
 
 
 def _effective_bound(bound, s, own, other, lower: bool) -> float:
@@ -280,7 +275,6 @@ def hybrid_batch_topk(
     postings join + one (qid, clause, docID) aggregation; everything
     after the depth cut is bounded by Q × clauses × depth rows."""
     from neural_search_spark import settings
-    from neural_search_spark.search import bm25
 
     max_sub = int(settings.get("hybrid_max_sub_queries"))
     rows = []
@@ -295,7 +289,7 @@ def hybrid_batch_topk(
         return local_table(spark, [], "qid int, docID long, score double")
     qt = F.broadcast(local_table(spark, rows, "qid int, cidx int, term string"))
     clause_scores = engine.postings.join(qt, "term").groupBy("qid", "cidx", "docID").agg(
-        F.sum(bm25.term_score_col(engine.stats)).alias("score")
+        F.sum(term_score_col(engine.stats)).alias("score")
     )
     if depth is not None:
         wd = Window.partitionBy("qid", "cidx").orderBy(
@@ -418,7 +412,7 @@ def hybrid_search(
     cuts = reduce(
         DataFrame.unionByName,
         [
-            clause_depth_cut(df, depth).select(F.lit(i).alias("cidx"), "docID", "score")
+            topk(df, depth).select(F.lit(i).alias("cidx"), "docID", "score")
             for i, df in enumerate(clause_scores)
         ],
     )

@@ -110,7 +110,7 @@ def test_two_phase_spec_rescore_broadcasts_the_window(spark, entry, monkeypatch)
     runs its clause plans when called, so those are checked as
     ``hybrid_search`` receives them, each with its depth cut."""
     from neural_search_spark.search import spec
-    from neural_search_spark.search.hybrid import clause_depth_cut
+    from neural_search_spark.search.bm25 import topk
 
     p = _plan(entry.queries()["sparse_two_phase_topk"](spark, SF_DIR))
     assert "SortMergeJoin" not in p
@@ -125,7 +125,7 @@ def test_two_phase_spec_rescore_broadcasts_the_window(spark, entry, monkeypatch)
     entry.queries()["sparse_two_phase_spec"](spark, SF_DIR)
     assert len(clauses) == 2
     for c in clauses:
-        p = _plan(clause_depth_cut(c, 50))
+        p = _plan(topk(c, 50))
         assert "SortMergeJoin" not in p
         assert "TakeOrderedAndProject" in p
 

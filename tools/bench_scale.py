@@ -11,7 +11,7 @@ and doc length stay distinct) and runs the top keys at both scales.
 Output: one JSON line per run in BENCH_SCALE_SF1.json with per-key medians
 at each scale and the sf1/sf0.1 wall ratio. Reading the ratios: ~1x =
 fixed-latency/index-pruned, ~10x = corpus-linear (expected for scan-path
-contract exhibits like bm25_phrase_topk), sublinear = the indexed path is
+contract exhibits like bm25_phrase_scan_topk), sublinear = the indexed path is
 doing its job. Dedup keys are excluded on purpose: replication multiplies
 near-duplicate density, so their sf1 pair count is not a plan signal.
 
@@ -26,7 +26,7 @@ import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF01 = "/root/testdata/sf0.1"
 SF1 = "/tmp/nss_scale_sf1"
@@ -35,8 +35,8 @@ REPLICAS = 10
 #: top-expensive retrieval/query keys from BENCH_LOCAL_R04_FULL.json, plus
 #: the scan-vs-indexed control pair and a cheap job-latency floor key.
 KEYS = [
-    "bm25_phrase_topk",          # scan-path contract exhibit (expect ~linear)
-    "bm25_phrase_indexed_topk",  # its indexed twin (expect sublinear)
+    "bm25_phrase_scan_topk",     # scan-path contract exhibit (expect ~linear)
+    "bm25_phrase_topk",          # its indexed twin (expect sublinear)
     "match_phrase_prefix_topk",
     "highlight_spec",
     "hybrid_spec_full",
@@ -115,23 +115,6 @@ def make_sf1() -> None:
         print(f"# built {SF1}/events.parquet: {n} events", file=sys.stderr)
 
 
-def warm(entry_mod, spark, sf_dir: str) -> float:
-    t0 = time.perf_counter()
-    eng = entry_mod._engine(spark, sf_dir)
-    eng.postings.count()
-    _ = eng.stats
-    entry_mod._index(spark, sf_dir)
-    for fld in entry_mod.MULTI_MATCH_FIELDS:
-        entry_mod._pos_index(spark, sf_dir, field=fld)
-        p, _d, _s = eng.field_artifacts(fld)
-        p.count()
-    # ingest-time artifacts for the dense/sparse clause families
-    entry_mod._doc_embeddings(spark, sf_dir).count()
-    entry_mod._doc_ivf_artifacts(spark, sf_dir)[1].count()
-    entry_mod._sparse_postings(spark, sf_dir).count()
-    return time.perf_counter() - t0
-
-
 def main(reps: int = 3, only: str | None = None) -> None:
     global KEYS
     if only:
@@ -151,7 +134,9 @@ def main(reps: int = 3, only: str | None = None) -> None:
     out: dict = {"metric": "sf1_vs_sf0.1_wall_ratio", "reps": reps, "keys": {}}
     walls: dict[str, dict[str, list[float]]] = {k: {"sf0.1": [], "sf1": []} for k in KEYS}
     for sf_label, sf_dir in (("sf0.1", SF01), ("sf1", SF1)):
-        w = warm(entry_mod, spark, sf_dir)
+        t0 = time.perf_counter()
+        entry_mod.warm(spark, sf_dir)
+        w = time.perf_counter() - t0
         out[f"warm_{sf_label}_s"] = round(w, 2)
         print(f"# warm {sf_label}: {w:.1f}s", file=sys.stderr)
         for rep in range(reps):

@@ -2294,10 +2294,7 @@ def q_match_phrase_prefix_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     100-TB vocabulary must not collect a vocabulary-scale list."""
     eng = _engine(spark, sf_dir)
     pidx = _pos_index(spark, sf_dir)
-    scored = pidx.match_phrase_prefix(
-        MPP_QUERY, eng.term_dict, max_expansions=50
-    )
-    return _round_score(topk(scored, 10))
+    return _round_score(topk(pidx.match_phrase_prefix(MPP_QUERY, eng.term_dict), 10))
 
 
 COMPOSITE_SIZE = 5

@@ -21,11 +21,16 @@ hand-rolled varint stream, and the whole extract is JVM-side
 (``regexp_extract_all`` + ``posexplode`` + ``collect_list``), no Python
 in the build.
 
-Adjacency at query time is pure whole-stage-codegen array algebra:
+Adjacency at query time is pure whole-stage-codegen array algebra, built
+once in ``PositionalIndex._phrase_freqs``:
 ``chain_{j+1} = array_intersect(transform(chain_j, x -> x+1), pos_{j+1})``
 — after the last term, ``size(chain)`` IS the exact-phrase frequency
 (overlapping occurrences included, duplicate phrase terms handled, since
-the chain is always a set of candidate end positions).
+the chain is always a set of candidate end positions). ``match_phrase``,
+``match_phrase_prefix`` (its last slot is the prefix's dictionary
+expansion) and ``span_near`` (a per-gap slop) are thin wrappers over that
+chain, and all three score through
+:func:`neural_search_spark.search.bm25.phrase_scores`.
 """
 
 from __future__ import annotations
@@ -33,10 +38,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from neural_search_spark.analysis.tokenizer import analyzed_tokens, tokenize_text
-from neural_search_spark.search.bm25 import B, K1, CorpusStats, idf_col, topk
+from neural_search_spark.search.bm25 import B, K1, CorpusStats, phrase_scores, topk
 from neural_search_spark.session import local_table
 
 N_BUCKETS = 64
+#: ``match_phrase_prefix`` expands its last slot to at most this many
+#: dictionary terms (Lucene's default ``max_expansions``), so the
+#: driver-side expansion ``collect()`` is bounded.
+MAX_EXPANSIONS = 50
 
 
 def _bucket_col(term_col) -> "F.Column":
@@ -101,135 +110,79 @@ class PositionalIndex:
         df = self.spark.read.parquet(self.pos_dir)
         return df.where(F.col("bucket").isin(buckets) & F.col("term").isin(terms))
 
+    def _phrase_freqs(
+        self, slots: list[tuple[str, ...]], slop: int = 0
+    ) -> tuple[DataFrame, DataFrame]:
+        """The position chain → (the slot terms' position rows, ``(docID,
+        ptf)``), where ``ptf`` counts the distinct end positions of in-order
+        runs over the slots with every gap 1..slop+1 tokens wide.
+
+        A slot is a set of terms: one term for a fixed position, the
+        expansion set for a prefix slot. Each distinct slot pivots into
+        one column of the doc's positions (a multi-term slot unions its
+        terms' lists: one term per position, so they are disjoint); a doc
+        missing any slot drops out. The chain is then
+        ``chain' = ∪_{d=1..slop+1} (transform(chain, x -> x+d) ∩ slot)``,
+        a plain ``array_intersect`` at slop 0 (already a set) and
+        ``array_distinct`` over the concatenated steps otherwise."""
+        pivot = sorted(set(slots))
+        col_of = {s: f"p{i}" for i, s in enumerate(pivot)}
+        rows = self._term_rows(sorted({t for s in pivot for t in s}))
+        per_slot, present = [], []
+        for s in pivot:
+            if len(s) == 1:
+                agg = F.first(F.when(F.col("term") == s[0], F.col("positions")), ignorenulls=True)
+                present.append(F.col(col_of[s]).isNotNull())
+            else:
+                agg = F.flatten(F.collect_list(F.when(F.col("term").isin(list(s)), F.col("positions"))))
+                present.append(F.size(col_of[s]) > 0)
+            per_slot.append(agg.alias(col_of[s]))
+        wide = rows.groupBy("docID").agg(*per_slot)
+        for cond in present:
+            wide = wide.where(cond)
+        chain = F.col(col_of[slots[0]])
+        for s in slots[1:]:
+            # a 1-arg lambda is mandatory: a second (defaulted) parameter
+            # makes Spark pass the element INDEX as the extra argument
+            steps = [
+                F.array_intersect(F.transform(chain, lambda x: x + d), F.col(col_of[s]))
+                for d in range(1, slop + 2)
+            ]
+            chain = steps[0] if slop == 0 else F.array_distinct(F.concat(*steps))
+        return rows, wide.select("docID", F.size(chain).alias("ptf")).where(F.col("ptf") > 0)
+
     def match_phrase(self, phrase: str, k1: float = K1, b: float = B) -> DataFrame:
         """(docID, score), identical by contract to the scan path
         ``BM25Engine.match_phrase`` (same formula, same tie-breaks) — the
         equivalence is pinned by tests and by sharing the driver oracle."""
-        terms = tokenize_text(phrase)
-        if not terms:
-            return local_table(self.spark, [], "docID long, score double")
-        distinct_terms = sorted(set(terms))
-        rows = self._term_rows(distinct_terms)
-        # index-wide document frequency per distinct term (one row per
-        # (term, doc) in the positions table)
-        dfreq = rows.groupBy("term").agg(F.count("*").alias("ndoc"))
-        pos_df = F.broadcast(
-            local_table(self.spark, list(enumerate(terms)), "pos int, term string")
-        )
-        qidf = pos_df.join(F.broadcast(dfreq), "term").agg(
-            F.sum(idf_col(self.stats.n_docs, F.col("ndoc"))).alias("qidf")
-        )
-        # pivot each doc's per-term position lists into columns; docs
-        # missing any term drop out (conjunctive containment)
-        per_term_cols = [
-            F.first(
-                F.when(F.col("term") == t, F.col("positions")), ignorenulls=True
-            ).alias(f"p{i}")
-            for i, t in enumerate(distinct_terms)
-        ]
-        wide = rows.groupBy("docID").agg(*per_term_cols)
-        for i in range(len(distinct_terms)):
-            wide = wide.where(F.col(f"p{i}").isNotNull())
-        # positional chain: intersect shifted position sets term by term
-        col_of = {t: f"p{i}" for i, t in enumerate(distinct_terms)}
-        chain = F.col(col_of[terms[0]])
-        for t in terms[1:]:
-            chain = F.array_intersect(
-                F.transform(chain, lambda x: x + 1), F.col(col_of[t])
-            )
-        verified = wide.select("docID", F.size(chain).alias("ptf")).where(
-            F.col("ptf") > 0
-        )
-        avgdl = F.lit(self.stats.avgdl)
-        ptf = F.col("ptf").cast("double")
-        tf_norm = ptf / (
-            ptf + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("dlq") / avgdl)
-        )
-        return (
-            verified.join(self.doclens, "docID")
-            .crossJoin(F.broadcast(qidf))
-            .select("docID", (F.col("qidf") * tf_norm).alias("score"))
-        )
+        return self.span_near(phrase, 0, k1, b)
 
     def match_phrase_prefix(
-        self,
-        phrase: str,
-        term_dict: DataFrame,
-        k1: float = K1,
-        b: float = B,
-        max_expansions: int | None = 50,
+        self, phrase: str, term_dict: DataFrame, k1: float = K1, b: float = B
     ) -> DataFrame:
-        """(docID, score) for ``match_phrase_prefix`` through the positional
-        index — score-identical by contract to the scan path
-        (:func:`neural_search_spark.search.bm25.match_phrase_prefix_scores`)
-        when the expansion is uncapped; ``max_expansions`` mirrors Lucene's
-        default 50 (first-in-dictionary-order wins, term asc).
+        """(docID, score) for ``match_phrase_prefix``: the fixed terms
+        match exactly, the last slot matches any of the first
+        :data:`MAX_EXPANSIONS` dictionary terms (term asc) that start with
+        the last analyzed term. The query weight is Σ idf over the FIXED
+        positions only: the open slot contributes none.
 
         Plan = Lucene's strategy verbatim: walk the terms dictionary for
-        the prefix (vocabulary-sized filter, O(max_expansions) driver
+        the prefix (vocabulary-sized filter, at most MAX_EXPANSIONS driver
         rows), then bucket-PRUNED positional lookups for fixed + expansion
-        terms only, per-doc position-chain intersect with the expansion
-        slots unioned. Nothing re-reads stored text."""
+        terms only, one position chain with the expansion as its last
+        slot. Nothing re-reads stored text."""
         terms = tokenize_text(phrase)
         if len(terms) < 2:
             raise ValueError("match_phrase_prefix needs >= 2 analyzed terms")
         fixed, prefix = terms[:-1], terms[-1]
         exp_df = term_dict.where(F.col("term").startswith(prefix)).orderBy("term")
-        if max_expansions is not None:
-            exp_df = exp_df.limit(int(max_expansions))
-        exp = [r["term"] for r in exp_df.collect()]  # O(max_expansions) rows
+        exp = [r["term"] for r in exp_df.limit(MAX_EXPANSIONS).collect()]
         if not exp:
             return local_table(self.spark, [], "docID long, score double")
-        distinct_fixed = sorted(set(fixed))
-        rows = self._term_rows(sorted(set(distinct_fixed) | set(exp)))
-        rows_f = rows.where(F.col("term").isin(distinct_fixed))
-        dfreq = rows_f.groupBy("term").agg(F.count("*").alias("ndoc"))
-        pos_df = F.broadcast(
-            local_table(self.spark, list(enumerate(fixed)), "pos int, term string")
-        )
-        qidf = pos_df.join(F.broadcast(dfreq), "term").agg(
-            F.sum(idf_col(self.stats.n_docs, F.col("ndoc"))).alias("qidf")
-        )
-        per_term_cols = [
-            F.first(
-                F.when(F.col("term") == t, F.col("positions")), ignorenulls=True
-            ).alias(f"p{i}")
-            for i, t in enumerate(distinct_fixed)
-        ]
-        wide = rows_f.groupBy("docID").agg(*per_term_cols)
-        for i in range(len(distinct_fixed)):
-            wide = wide.where(F.col(f"p{i}").isNotNull())
-        # expansion slot: the union of every expansion term's positions
-        # (positions are disjoint across terms — one term per position)
-        pe = (
-            rows.where(F.col("term").isin(exp))
-            .groupBy("docID")
-            .agg(F.flatten(F.collect_list("positions")).alias("pe"))
-        )
-        col_of = {t: f"p{i}" for i, t in enumerate(distinct_fixed)}
-        chain = F.col(col_of[fixed[0]])
-        for t in fixed[1:]:
-            chain = F.array_intersect(
-                F.transform(chain, lambda x: x + 1), F.col(col_of[t])
-            )
-        chain = F.array_intersect(
-            F.transform(chain, lambda x: x + 1), F.col("pe")
-        )
-        verified = (
-            wide.join(pe, "docID")
-            .select("docID", F.size(chain).alias("ptf"))
-            .where(F.col("ptf") > 0)
-        )
-        avgdl = F.lit(self.stats.avgdl)
-        ptf = F.col("ptf").cast("double")
-        tf_norm = ptf / (
-            ptf + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("dlq") / avgdl)
-        )
-        return (
-            verified.join(self.doclens, "docID")
-            .crossJoin(F.broadcast(qidf))
-            .select("docID", (F.col("qidf") * tf_norm).alias("score"))
-        )
+        rows, verified = self._phrase_freqs([(t,) for t in fixed] + [tuple(exp)])
+        # df over the fixed terms only: the open slot carries no weight
+        rows_f = rows.where(F.col("term").isin(sorted(set(fixed))))
+        return phrase_scores(verified, self.doclens, self.stats, rows_f, fixed, k1, b)
 
     def match_phrase_topk(self, phrase: str, k: int = 10) -> DataFrame:
         return topk(self.match_phrase(phrase), k)
@@ -244,58 +197,9 @@ class PositionalIndex:
         total-slop accounting, which budgets slop across the whole span):
         the slop here is PER GAP, and the frequency is the number of
         distinct END positions reachable — exactly ``match_phrase`` when
-        ``slop=0``. Scoring is the phrase formula with this frequency.
-
-        The chain step generalizes the phrase intersect to a union over
-        the allowed gap widths — still pure codegen array algebra:
-        ``chain' = distinct(∪_{d=1..slop+1} ((chain + d) ∩ pos_next))``.
-        """
+        ``slop=0``. Scoring is the phrase formula with this frequency."""
         terms = tokenize_text(phrase)
         if not terms:
             return local_table(self.spark, [], "docID long, score double")
-        distinct_terms = sorted(set(terms))
-        rows = self._term_rows(distinct_terms)
-        dfreq = rows.groupBy("term").agg(F.count("*").alias("ndoc"))
-        pos_df = F.broadcast(
-            local_table(self.spark, list(enumerate(terms)), "pos int, term string")
-        )
-        qidf = pos_df.join(F.broadcast(dfreq), "term").agg(
-            F.sum(idf_col(self.stats.n_docs, F.col("ndoc"))).alias("qidf")
-        )
-        per_term_cols = [
-            F.first(
-                F.when(F.col("term") == t, F.col("positions")), ignorenulls=True
-            ).alias(f"p{i}")
-            for i, t in enumerate(distinct_terms)
-        ]
-        wide = rows.groupBy("docID").agg(*per_term_cols)
-        for i in range(len(distinct_terms)):
-            wide = wide.where(F.col(f"p{i}").isNotNull())
-        col_of = {t: f"p{i}" for i, t in enumerate(distinct_terms)}
-        def _shift(expr, d: int):
-            # a 1-arg lambda is mandatory: a second (defaulted) parameter
-            # makes Spark pass the element INDEX as the extra argument
-            return F.transform(expr, lambda x: x + F.lit(d))
-
-        chain = F.col(col_of[terms[0]])
-        for t in terms[1:]:
-            steps = [
-                F.array_intersect(_shift(chain, d), F.col(col_of[t]))
-                for d in range(1, slop + 2)
-            ]
-            chain = F.array_distinct(
-                steps[0] if len(steps) == 1 else F.concat(*steps)
-            )
-        verified = wide.select("docID", F.size(chain).alias("ptf")).where(
-            F.col("ptf") > 0
-        )
-        avgdl = F.lit(self.stats.avgdl)
-        ptf = F.col("ptf").cast("double")
-        tf_norm = ptf / (
-            ptf + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("dlq") / avgdl)
-        )
-        return (
-            verified.join(self.doclens, "docID")
-            .crossJoin(F.broadcast(qidf))
-            .select("docID", (F.col("qidf") * tf_norm).alias("score"))
-        )
+        rows, verified = self._phrase_freqs([(t,) for t in terms], slop)
+        return phrase_scores(verified, self.doclens, self.stats, rows, terms, k1, b)

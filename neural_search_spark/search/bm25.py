@@ -104,11 +104,50 @@ def bm25_postings(corpus: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
+def tf_norm_col(tf, stats: CorpusStats, k1: float = K1, b: float = B) -> "F.Column":
+    """``tf / (tf + k1·(1 − b + b·dlq/avgdl))`` over a double ``tf`` column
+    and the row's ``dlq``: the one Spark spelling of Lucene's tfNorm."""
+    return tf / (tf + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("dlq") / F.lit(stats.avgdl)))
+
+
 def term_score_col(stats: CorpusStats, k1: float = K1, b: float = B) -> "F.Column":
     """``idf(ndoc) · tfNorm(tf, dlq)`` over a :func:`bm25_postings` row."""
-    tf = F.col("tf").cast("double")
-    tf_norm = tf / (tf + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("dlq") / F.lit(stats.avgdl)))
-    return idf_col(stats.n_docs, F.col("ndoc")) * tf_norm
+    return idf_col(stats.n_docs, F.col("ndoc")) * tf_norm_col(F.col("tf").cast("double"), stats, k1, b)
+
+
+def phrase_scores(
+    verified: DataFrame,
+    doclens: DataFrame,
+    stats: CorpusStats,
+    term_docs: DataFrame,
+    weight_terms: list[str],
+    k1: float = K1,
+    b: float = B,
+) -> DataFrame:
+    """Lucene ``PhraseWeight`` scoring: ``(docID, ptf)`` rows → ``(docID,
+    score)`` with
+
+        score = (Σ_j idf(weight_terms[j])) · tfNorm(ptf, dlq)
+
+    The idf sum runs over the phrase *positions*, duplicates included
+    (one ``TermStatistics`` per position). ``term_docs`` holds one row per
+    (term, doc) of the phrase's terms; its per-term count is the
+    index-wide document frequency. ``doclens`` supplies ``dlq``. Every
+    positional query (scan or index ``match_phrase``,
+    ``match_phrase_prefix``, ``span_near``) scores through here."""
+    dfreq = term_docs.groupBy("term").agg(F.count("*").alias("ndoc"))
+    pos_df = F.broadcast(
+        local_table(verified.sparkSession, list(enumerate(weight_terms)), "pos int, term string")
+    )
+    qidf = pos_df.join(F.broadcast(dfreq), "term").agg(
+        F.sum(idf_col(stats.n_docs, F.col("ndoc"))).alias("qidf")
+    )
+    tf_norm = tf_norm_col(F.col("ptf").cast("double"), stats, k1, b)
+    return (
+        verified.join(doclens, "docID")
+        .crossJoin(F.broadcast(qidf))
+        .select("docID", (F.col("qidf") * tf_norm).alias("score"))
+    )
 
 
 def bm25_clause_scores(
@@ -322,7 +361,6 @@ def phrase_freq_text_col(text_col, terms: list[str]):
 
 
 def match_phrase_scores(
-    spark,
     corpus: DataFrame,
     postings: DataFrame,
     doclens: DataFrame,
@@ -333,41 +371,26 @@ def match_phrase_scores(
     text_col: str = "content",
     id_col: str = "docID",
 ) -> DataFrame:
-    """``match_phrase`` query → (docID, score), Lucene ``PhraseQuery`` BM25:
-
-        score = (Σ_j idf(term_j)) * ptf / (ptf + k1·(1 − b + b·dlq/avgdl))
-
-    where ``ptf`` is the exact-phrase frequency and the idf sum runs over
-    the phrase's terms *in order, duplicates included* (Lucene
-    ``PhraseWeight`` builds one ``TermStatistics`` per phrase position).
-    Only docs with ``ptf > 0`` match.
+    """``match_phrase`` query → (docID, score), Lucene ``PhraseQuery`` BM25
+    (:func:`phrase_scores`) over the exact-phrase frequency ``ptf``. Only
+    docs with ``ptf > 0`` match.
 
     Plan = Lucene's two-step exact-phrase strategy, Spark-shaped:
     1. **postings intersection** — docs containing ALL distinct terms
-       (broadcast the tiny term list into the postings scan, one groupBy
-       over candidate rows only). At 10^12 files this is the index path:
-       nothing but rows for the phrase's terms ever moves.
+       (the ``term IN (...)`` filter of :func:`bm25_clause_scores`, one
+       groupBy over candidate rows only). At 10^12 files this is the
+       index path: nothing but rows for the phrase's terms ever moves.
     2. **positional verify** — re-analyze ONLY the intersected docs
        (semi-join pushed into the corpus scan) and count adjacent runs
-       with a codegen higher-order function. The corpus-wide tokenize
-       never happens; candidate cardinality is bounded by the rarest
-       term's document frequency.
+       in one ``regexp_count`` sweep. The corpus-wide tokenize never
+       happens; candidate cardinality is bounded by the rarest term's
+       document frequency.
     """
     terms = tokenize_text(phrase)
     if not terms:
-        return local_table(spark, [], "docID long, score double")
+        return local_table(postings.sparkSession, [], "docID long, score double")
     distinct_terms = sorted(set(terms))
-    qt = F.broadcast(local_table(spark, [(t,) for t in distinct_terms], "term string"))
-    matched = postings.join(qt, "term")
-    # index-wide document frequency per distinct term (Lucene stats are
-    # filter/candidate-independent)
-    dfreq = matched.groupBy("term").agg(F.count("*").alias("ndoc"))
-    # phrase idf: one row per phrase POSITION joined to its term's ndoc
-    pos_df = F.broadcast(local_table(spark, list(enumerate(terms)), "pos int, term string"))
-    qidf = (
-        pos_df.join(F.broadcast(dfreq), "term")
-        .agg(F.sum(idf_col(stats.n_docs, F.col("ndoc"))).alias("qidf"))
-    )
+    matched = postings.where(F.col("term").isin(distinct_terms))
     # conjunctive candidates: every distinct term present
     cand = (
         matched.groupBy("docID")
@@ -387,14 +410,7 @@ def match_phrase_scores(
         )
         .where(F.col("ptf") > 0)
     )
-    avgdl = F.lit(stats.avgdl)
-    ptf = F.col("ptf").cast("double")
-    tf_norm = ptf / (ptf + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("dlq") / avgdl))
-    return (
-        verified.join(doclens, "docID")
-        .crossJoin(F.broadcast(qidf))
-        .select("docID", (F.col("qidf") * tf_norm).alias("score"))
-    )
+    return phrase_scores(verified, doclens, stats, matched, terms, k1, b)
 
 
 def multi_match_scores(
@@ -447,7 +463,7 @@ def multi_match_scores(
         elif match_type == "phrase":
             postings, doclens, stats = engine.field_artifacts(fld)
             sc = match_phrase_scores(
-                engine.spark, engine.corpus, postings, doclens, stats,
+                engine.corpus, postings, doclens, stats,
                 query_text, k1=k1, b=b, text_col=fld, id_col=engine.id_col,
             )
         else:
@@ -851,7 +867,7 @@ class BM25Engine:
 
         _stats.record_event("match_phrase_query_requests")
         return match_phrase_scores(
-            self.spark, self.corpus, self.postings, self.doclens, self.stats,
+            self.corpus, self.postings, self.doclens, self.stats,
             phrase, k1=k1, b=b, text_col=self.text_col, id_col=self.id_col,
         )
 
@@ -1006,79 +1022,4 @@ def term_suggest(
         .orderBy(F.col("distance").asc(), F.col("freq").desc(), F.col("term").asc())
         .limit(int(size))
         .select("term", "distance", "freq")
-    )
-
-
-def match_phrase_prefix_scores(
-    spark,
-    corpus: DataFrame,
-    postings: DataFrame,
-    doclens: DataFrame,
-    stats: CorpusStats,
-    phrase: str,
-    k1: float = K1,
-    b: float = B,
-    text_col: str = "content",
-    id_col: str = "docID",
-) -> DataFrame:
-    """``match_phrase_prefix`` (Lucene ``MultiPhraseQuery`` from the
-    phrase-prefix rewrite): the last analyzed term matches as a PREFIX at
-    its position, the others exactly — the search-as-you-type query.
-    ptf counts positions where the fixed terms align and the final slot
-    starts with the prefix; the query weight is Σ idf over the FIXED
-    positions (the open prefix slot contributes no idf — its expansion is
-    unbounded, Lucene rewrites it to a multi-term position).
-
-    Plan mirrors :func:`match_phrase_scores`: postings intersection on
-    the fixed terms prunes candidates (the prefix slot adds a term-dict
-    LIKE expansion semi-join, bounded like prefix_query_scores); the
-    positional verify re-analyzes candidates only."""
-    terms = tokenize_text(phrase)
-    if len(terms) < 2:
-        raise ValueError("match_phrase_prefix needs >= 2 analyzed terms")
-    fixed, prefix = terms[:-1], terms[-1]
-    m = len(terms)
-    distinct_fixed = sorted(set(fixed))
-    qt = F.broadcast(local_table(spark, [(t,) for t in distinct_fixed], "term string"))
-    matched = postings.join(qt, "term")
-    dfreq = matched.groupBy("term").agg(F.count("*").alias("ndoc"))
-    pos_df = F.broadcast(local_table(spark, list(enumerate(fixed)), "pos int, term string"))
-    qidf = pos_df.join(F.broadcast(dfreq), "term").agg(
-        F.sum(idf_col(stats.n_docs, F.col("ndoc"))).alias("qidf")
-    )
-    cand_fixed = (
-        matched.groupBy("docID")
-        .agg(F.count("*").alias("nt"))
-        .where(F.col("nt") == len(distinct_fixed))
-        .select("docID")
-    )
-    toks = analyzed_tokens(text_col)
-    positions = F.sequence(F.lit(1), F.size("_toks") - (m - 1))
-
-    def _match_at(i):
-        cond = F.element_at(F.col("_toks"), i) == F.lit(fixed[0])
-        for j, t in enumerate(fixed[1:], start=1):
-            cond = cond & (F.element_at(F.col("_toks"), i + j) == F.lit(t))
-        return cond & F.element_at(F.col("_toks"), i + (m - 1)).startswith(prefix)
-
-    verified = (
-        corpus.join(cand_fixed, corpus[id_col] == cand_fixed["docID"], "left_semi")
-        .select(F.col(id_col).alias("docID"), toks.alias("_toks"))
-        .select(
-            "docID",
-            F.when(
-                F.size("_toks") >= m, F.size(F.filter(positions, _match_at))
-            )
-            .otherwise(F.lit(0))
-            .alias("ptf"),
-        )
-        .where(F.col("ptf") > 0)
-    )
-    avgdl = F.lit(stats.avgdl)
-    ptf = F.col("ptf").cast("double")
-    tf_norm = ptf / (ptf + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("dlq") / avgdl))
-    return (
-        verified.join(doclens, "docID")
-        .crossJoin(F.broadcast(qidf))
-        .select("docID", (F.col("qidf") * tf_norm).alias("score"))
     )

@@ -255,7 +255,14 @@ def test_positional_index_matches_scan_phrase(spark, tiny_corpus, tmp_path):
     from neural_search_spark.analysis.tokenizer import tokenize_text
 
     toks0 = tokenize_text(tiny_corpus.limit(1).collect()[0]["content"])
-    for phrase in [f"{toks0[0]} {toks0[1]}", f"{toks0[0]} {toks0[1]} {toks0[2]}", "import", "zzz missing"]:
+    phrases = [
+        f"{toks0[0]} {toks0[1]}",
+        f"{toks0[0]} {toks0[1]} {toks0[2]}",
+        f"{toks0[0]} {toks0[0]}",  # duplicate slots in one chain
+        "import",
+        "zzz missing",
+    ]
+    for phrase in phrases:
         scan = {(r["docID"], round(r["score"], 9)) for r in eng.match_phrase(phrase).collect()}
         idx = {(r["docID"], round(r["score"], 9)) for r in pidx.match_phrase(phrase).collect()}
         assert idx == scan, phrase
@@ -314,6 +321,29 @@ def test_positional_index_overlapping_and_duplicate_terms(spark, tmp_path):
         scan = {(r["docID"], round(r["score"], 9)) for r in eng.match_phrase(phrase).collect()}
         idx = {(r["docID"], round(r["score"], 9)) for r in pidx.match_phrase(phrase).collect()}
         assert idx == scan, phrase
+
+
+def test_phrase_prefix_slot_holding_a_fixed_term(spark, tmp_path):
+    """The prefix slot's expansion may contain a fixed term of the same
+    phrase: "a a" expands its last slot to {a, ab}, so one term's
+    positions feed both a fixed slot and the expansion slot."""
+    from neural_search_spark.index.positions import PositionalIndex, build_positions
+    from neural_search_spark.search.bm25 import BM25Engine
+
+    rows = [(0, "a ab a"), (1, "a a a"), (2, "ab a"), (3, "b ab"), (4, "a b")]
+    df = spark.createDataFrame(rows, "docID long, content string")
+    eng = BM25Engine(spark, df).cache()
+    d = str(tmp_path / "pos_prefix")
+    build_positions(spark, df, d)
+    pidx = PositionalIndex(spark, d, eng.doclens, eng.stats)
+    got = {r["docID"]: r["score"] for r in pidx.match_phrase_prefix("a a", eng.term_dict).collect()}
+    # "a" then {a, ab}: doc 0 at 1 ("a ab"), doc 1 at 1 and 2
+    assert set(got) == {0, 1}
+    # same ptf (2) as the phrase "a a" in doc 1, but the weight is Σ idf
+    # over the one fixed position: half of the phrase's two
+    mp = {r["docID"]: r["score"] for r in pidx.match_phrase("a a").collect()}
+    assert mp.keys() == {1}
+    assert got[1] == pytest.approx(mp[1] / 2)
 
 
 def test_positional_bucket_pruning(spark, tmp_path):

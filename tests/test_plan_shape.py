@@ -331,6 +331,28 @@ def test_one_spark_analyzer_in_the_library():
     assert hits == set()
 
 
+def test_one_phrase_scorer_in_the_library():
+    """Static guard: only ``search/bm25.py`` spells the Spark tfNorm
+    expression or calls ``idf_col`` (``search/wand.py``'s numpy kernels
+    are exempt), and ``index/positions.py`` builds its position chain in
+    one place."""
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent / "neural_search_spark"
+    hits = set()
+    for p in root.rglob("*.py"):
+        rel, src = p.relative_to(root).as_posix(), p.read_text()
+        if rel in ("search/bm25.py", "search/wand.py"):
+            continue
+        for line in src.splitlines():
+            if "1.0 - b" in line or "idf_col" in line:
+                hits.add((rel, line.strip()))
+    assert hits == set()
+    pos = (root / "index" / "positions.py").read_text()
+    assert pos.count("F.array_intersect(") == 1
+    assert pos.count("F.first(F.when(") == 1
+
+
 @pytest.fixture(scope="module")
 def cached_engine(spark):
     from neural_search_spark.corpus import corpus_from_documents

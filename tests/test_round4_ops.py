@@ -359,29 +359,33 @@ def test_token_ids_vocab_ranks_and_unk(spark):
     assert len(rows) == 9
 
 
-def test_match_phrase_prefix_matches_expansion(spark, tiny_corpus):
-    from neural_search_spark.search.bm25 import (
-        match_phrase_prefix_scores,
-        match_phrase_scores,
+def test_match_phrase_prefix_matches_expansion(spark, tiny_corpus, tmp_path):
+    from neural_search_spark.index.positions import (
+        MAX_EXPANSIONS,
+        PositionalIndex,
+        build_positions,
     )
 
     eng = _engine(spark, tiny_corpus)
-    out = match_phrase_prefix_scores(
-        spark, eng.corpus, eng.postings, eng.doclens, eng.stats, "ident0 pub"
-    )
-    got = {r["docID"] for r in out.collect()}
-    # membership must equal the union of full-phrase matches over the
-    # prefix's actual expansions in the dictionary
-    expansions = [
-        r["term"] for r in eng.term_dict.where("term LIKE 'pub%'").collect()
-    ]
-    want = set()
-    for t in expansions:
-        full = match_phrase_scores(
-            spark, eng.corpus, eng.postings, eng.doclens, eng.stats, f"ident0 {t}"
-        )
-        want |= {r["docID"] for r in full.collect()}
-    assert got == want and got, "phrase-prefix membership = union over expansions"
+    d = str(tmp_path / "pos")
+    build_positions(spark, tiny_corpus, d)
+    pidx = PositionalIndex(spark, d, eng.doclens, eng.stats)
+    # "ident0 ident0": the prefix expands to the phrase's own fixed term,
+    # so the prefix slot and the fixed slot pivot from the same rows
+    for fixed, prefix in [("ident0", "pub"), ("ident0", "ident0")]:
+        out = pidx.match_phrase_prefix(f"{fixed} {prefix}", eng.term_dict)
+        got = {r["docID"] for r in out.collect()}
+        # membership must equal the union of full-phrase matches over the
+        # prefix's actual expansions in the dictionary
+        expansions = [
+            r["term"]
+            for r in eng.term_dict.where(F.col("term").startswith(prefix))
+            .orderBy("term").limit(MAX_EXPANSIONS).collect()
+        ]
+        want = set()
+        for t in expansions:
+            want |= {r["docID"] for r in eng.match_phrase(f"{fixed} {t}").collect()}
+        assert got == want and got, ("phrase-prefix membership = union over expansions", prefix)
 
 
 def test_unigram_ppl_values(spark):

@@ -10,11 +10,12 @@ Usage: python tools/check_oracle.py [sf_dir]
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from neural_search_spark.session import get_spark  # noqa: E402

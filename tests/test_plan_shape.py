@@ -396,3 +396,26 @@ def test_lexical_hybrid_runs_at_most_four_jobs(spark, cached_engine):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert 1 <= len(jobs) <= 4, jobs
+
+
+def test_query_time_nodes_skip_a_cache_built_over_a_cache(cached_engine):
+    """A clause over a cache of the cached postings, collected: the
+    formatted plan prints the inner cache's adaptive sections at a
+    shallower column than its ``InMemoryRelation`` and tags query stages
+    with ``, Statistics(...)``. The query-time nodes are the outer final
+    plan's: its stages and aggregations, and no Exchange (the rows are
+    already placed by docID), none of the inner builds' nodes."""
+    from neural_search_spark.search.bm25 import bm25_clause_scores, topk
+    from tools.plan_audit import query_time_nodes
+
+    postings = cached_engine.postings.repartition(8, "docID").cache()
+    try:
+        clause = bm25_clause_scores(postings, cached_engine.stats, ["table", "value", "spark"])
+        df = topk(clause, 10)
+        df.collect()
+        nodes = [n for _, n in query_time_nodes(_plan(df))]
+        assert not any(n.startswith("Exchange") for n in nodes), nodes
+        assert not any(n.startswith(("Window", "Generate", "Scan parquet")) for n in nodes), nodes
+        assert "TableCacheQueryStage" in nodes and "TakeOrderedAndProject" in nodes, nodes
+    finally:
+        postings.unpersist()

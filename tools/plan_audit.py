@@ -19,19 +19,44 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def query_time_nodes(plan: str) -> list[tuple[int, str]]:
-    """(id, name) of each node in a formatted plan's tree, not counting
-    those under an ``InMemoryRelation`` (run once, when the cache is
-    built)."""
-    out, cached = [], None  # tree depth of the InMemoryRelation being skipped
+    """(id, name) of each node in a formatted plan's trees that runs on
+    every execution. Skipped: the nodes of a cached relation's plan (run
+    once, when the cache is built) and the top-level adaptive plan's
+    ``== Initial Plan ==`` section (replaced by the final plan, never run).
+
+    The cached nodes are found by operator id, not by indentation: the
+    formatted explain numbers an ``InMemoryRelation`` and then its cached
+    plan, whose root (the next tree line) takes the last id, so the cached
+    ids are those after the relation's up to its root's. Indentation does
+    not nest: a cache built over another cache prints the inner adaptive
+    plan's sections at a shallower column than its ``InMemoryRelation``."""
+    node_re = re.compile(r"([ :+\-*]*)(\S.*?) \((\d+)\)(?:, Statistics\(.*\)| \(.*\))?$")
+    out: list[tuple[int, str]] = []
+    cached: list[tuple[int, int]] = []  # (relation id, cached-plan root id)
+    relation = None  # id of an InMemoryRelation whose root is the next node
+    in_details = in_initial = False
     for line in plan.splitlines():
-        m = re.match(r"([ :+\-*]*)(\S.*?) \((\d+)\)( \(.*\))?$", line)
-        if not m or line.startswith("("):  # not a tree line
+        if not line.strip():  # a blank line ends a detail block or a tree
+            in_details = in_initial = False
             continue
-        depth, node = len(m.group(1)), m.group(2)
-        if cached is not None and depth > cached:
+        if re.match(r"\(\d+\) ", line):
+            in_details = True
+        if in_details:
             continue
-        cached = depth if node.startswith("InMemoryRelation") else None
-        out.append((int(m.group(3)), node))
+        if line.startswith("+- == Initial Plan =="):  # the top-level section only
+            in_initial = True
+        m = node_re.match(line)
+        if not m:
+            continue
+        op_id, node = int(m.group(3)), m.group(2)
+        if relation is not None:
+            cached.append((relation, op_id))
+            relation = None
+        if node.startswith("InMemoryRelation"):
+            relation = op_id
+        if in_initial or any(lo < op_id <= hi for lo, hi in cached):
+            continue
+        out.append((op_id, node))
     return out
 
 

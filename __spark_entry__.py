@@ -43,6 +43,7 @@ from neural_search_spark.mapping import (
 )
 from neural_search_spark.pipeline import params as P, sql as psql
 from neural_search_spark.pipeline.ann import (
+    _codebook,
     ann_ivf_batch_topk,
     ann_ivf_topk,
     ann_ivfpq_topk,
@@ -451,9 +452,9 @@ def _doc_ivf_artifacts(spark: SparkSession, sf_dir: str):
     probe."""
     emb = _doc_embeddings(spark, sf_dir)
     cents = ivf_centroids(emb, n_lists=8, id_col="docID", vec_col="embedding").cache()
-    # clustered by list_id before caching: the probe's literal isin
-    # predicate then prunes whole cached batches (at 100 TB: parquet
-    # written partitioned by list_id, probe prunes directories)
+    # clustered by list_id before caching, the layout of the 100 TB
+    # table: parquet written partitioned by list_id, where dynamic
+    # partition pruning on the broadcast probe join skips unprobed lists
     asg = (
         ivf_assign(emb, cents, id_col="docID", vec_col="embedding")
         .repartition(8, "list_id")
@@ -527,14 +528,11 @@ def _pq_code_artifacts(spark: SparkSession, sf_dir: str):
     float I/O, no per-query re-encode) and IVF×PQ's probed scan prunes it
     by ``list_id``. The r7 verdict's top item: the 32× I/O compression of
     the ``pq`` encoder is realized in the plan, not just the docstring."""
-    cents = _pq_codebooks(spark, sf_dir)
-    cb = {
-        (int(r["m"]), int(r["code"])): [float(x) for x in r["centroid"]]
-        for r in cents.collect()  # O(M·K) rows — bounded by design
-    }
+    emb = _embeddings(spark, sf_dir)
+    cb = _codebook(emb, _pq_codebooks(spark, sf_dir), P.PQ_M, P.PQ_K, P.PQ_SUBDIM)
     _cents_ivf, assigned = _ivf_artifacts(spark, sf_dir)
     codes = (
-        pq_encode(_embeddings(spark, sf_dir), cb)
+        pq_encode(emb, cb)
         .join(assigned.select("vec_id", "list_id"), "vec_id")
         .cache()
     )
@@ -719,8 +717,9 @@ def q_hybrid_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the `pq` encoder): probe-pruned candidate set, PQ-ADC coarse
     scoring from the collected codebook LUT (no float I/O), exact round6
     dot rescore over the k×oversample window. Together with
-    `hybrid_ann_dense` (IVF + int8-rescore) this closes the dense-clause
-    method-param surface at every compression tier."""
+    `hybrid_ann_dense` (`knn_method: ivf`, exact scores over the probed
+    lists) this closes the dense-clause method-param surface at every
+    compression tier."""
     eng = _engine(spark, sf_dir)
     emb = _doc_embeddings(spark, sf_dir)
     cents, asg = _doc_ivf_artifacts(spark, sf_dir)

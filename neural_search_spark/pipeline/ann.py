@@ -1,23 +1,27 @@
 """Similarity search over an embedding column (array<float>).
 
-Two paths:
+Every search here is one pipeline: **probe → coarse window → exact
+rescore**, each stage written once as a private helper and shared with
+the dense clause's ``knn_method`` (``search/neural.py``):
 
-- :func:`cosine_topk` — brute-force exact cosine top-k. The dot product
-  is an unrolled, left-associated column expression (params.dot_sql), so
-  it runs inside whole-stage codegen AND sums in the same order as the
-  DuckDB oracle → bit-identical doubles. The query vector is a one-row
-  broadcast join; the scan stays a single pass with no shuffle beyond
-  the final top-k (TakeOrderedAndProject).
-- :func:`ann_lsh_topk` — the scale path: random-hyperplane sign buckets
-  (params.HYPERPLANES) prune candidates to the query's bucket before the
-  exact cosine. At 100 TB the bucket column is precomputed at ingest and
-  the table is partitioned by it, turning a full scan into one partition.
-- :func:`ann_ivf_topk` — the IVF scale path: spherical-kmeans coarse
-  lists (deterministic seeding + one Lloyd step, params.IVF_N_LISTS),
-  query probes the params.IVF_NPROBE nearest lists only. At 100 TB the
-  centroids are trained on a sample and broadcast, list assignment is a
-  single codegen scan at ingest, and the table is written partitioned by
-  ``list_id`` so a query's scan prunes to nprobe/n_lists of the data.
+- probe: the candidate rows — the whole table (:func:`cosine_topk`, the
+  int8 and PQ paths), the query's LSH sign buckets (:func:`ann_lsh_topk`),
+  or the ``nprobe`` IVF lists nearest the query by (cosine desc, list_id
+  asc), broadcast-joined on ``list_id`` (:func:`_probed`). At 100 TB the
+  table is written partitioned by ``list_id``, and dynamic partition
+  pruning cuts the scan to nprobe/n_lists of the data.
+- coarse window (:func:`_window_rescore`): a cheap score over a compact
+  view — int8-dequantized vectors (:func:`_int8_view`) or PQ codes scored
+  by ADC from the collected codebooks (:func:`_codebook`) — keeps the
+  ``k × oversample`` best rows by (coarse score desc, vec_id asc).
+- exact rescore: the float vectors of the window only, through one
+  broadcast semi-join, scored exactly. Paths without a coarse score
+  score their candidates exactly at once.
+
+Dot products are sequential left folds (:func:`_dot`) that sum in the
+DuckDB oracle's order, so scores are bit-identical doubles. The
+``*_batch_topk`` functions run Q queries through one scan, with per-qid
+window cuts (``session.top_per_key``).
 """
 
 from __future__ import annotations
@@ -27,6 +31,7 @@ import math
 from pyspark.sql import DataFrame, Window, functions as F
 
 from neural_search_spark.pipeline import params as P
+from neural_search_spark.session import top_per_key
 
 
 def _dot(a, b) -> "F.Column":
@@ -60,6 +65,40 @@ def _cosine(a: str, b: str) -> "F.Column":
     return _dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b)))
 
 
+def _vectors(emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+    """(vec_id, v): the embedding table under the names every stage reads."""
+    return emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"))
+
+
+def _query_row(vecs: DataFrame, query_id: int) -> DataFrame:
+    """(qv): the one-row vector of ``query_id`` in a (vec_id, v) table."""
+    return vecs.where(F.col("vec_id") == query_id).select(F.col("v").alias("qv"))
+
+
+def _query_rows(vecs: DataFrame, ids: list[int]) -> DataFrame:
+    """(qid, qv): the broadcast vectors of ``ids`` in a (vec_id, v) table."""
+    return F.broadcast(
+        vecs.where(F.col("vec_id").isin(ids)).select(
+            F.col("vec_id").alias("qid"), F.col("v").alias("qv")
+        )
+    )
+
+
+def _cosine_to(rows: DataFrame, q: DataFrame, query_id: int, name: str = "score") -> DataFrame:
+    """(vec_id, name): round4 cosine of each row's ``v`` to the one-row
+    query ``q``, the query itself excluded."""
+    return (
+        rows.where(F.col("vec_id") != query_id)
+        .crossJoin(F.broadcast(q))
+        .select("vec_id", P.round4(_cosine("v", "qv")).alias(name))
+    )
+
+
+def _top(scored: DataFrame, k: int) -> DataFrame:
+    """The ``k`` best (vec_id, score) rows by (score desc, vec_id asc)."""
+    return scored.orderBy(F.desc("score"), F.asc("vec_id")).limit(k)
+
+
 def cosine_topk(
     emb: DataFrame,
     query_id: int,
@@ -71,16 +110,8 @@ def cosine_topk(
 
     Returns (vec_id, score) ordered score desc, vec_id asc.
     """
-    q = emb.where(F.col(id_col) == query_id).select(F.col(vec_col).alias("qv"))
-    base = emb.where(F.col(id_col) != query_id).select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v")
-    )
-    return (
-        base.crossJoin(F.broadcast(q))
-        .select("vec_id", P.round4(_cosine("v", "qv")).alias("score"))
-        .orderBy(F.desc("score"), F.asc("vec_id"))
-        .limit(k)
-    )
+    e = _vectors(emb, id_col, vec_col)
+    return _top(_cosine_to(e, _query_row(e, query_id), query_id), k)
 
 
 def lsh_buckets(
@@ -167,6 +198,44 @@ def ivf_assign(
     )
 
 
+def _ivf_tables(
+    emb: DataFrame,
+    centroids: DataFrame | None,
+    assigned: DataFrame | None,
+    n_lists: int,
+    id_col: str,
+    vec_col: str,
+) -> tuple[DataFrame, DataFrame]:
+    """(centroids, assigned): the ingest-time IVF artifacts when passed,
+    else trained and assigned on the fly."""
+    cents = centroids if centroids is not None else ivf_centroids(emb, n_lists, id_col, vec_col)
+    asg = assigned if assigned is not None else ivf_assign(emb, cents, id_col, vec_col)
+    return cents, asg
+
+
+def _probed(
+    rows: DataFrame,
+    cents: DataFrame,
+    qv,
+    nprobe: int,
+    q: DataFrame | None = None,
+) -> DataFrame:
+    """The ``rows`` (keyed by ``list_id``) of the ``nprobe`` lists nearest
+    the query by (cosine(centroid, query) desc, list_id asc). ``qv`` is the
+    query vector: a literal column, or ``"qv"`` of the one-row frame ``q``.
+    Centroids are means, not unit vectors, so the probe ranks by the full
+    cosine — the expression the oracle twins recompute. The probe set is
+    broadcast-joined, never collected to the driver."""
+    if q is not None:
+        cents = cents.crossJoin(F.broadcast(q))
+    probe = (
+        cents.orderBy(F.desc(_cosine("centroid", qv)), F.asc("list_id"))
+        .limit(int(nprobe))
+        .select("list_id")
+    )
+    return rows.join(F.broadcast(probe), "list_id")
+
+
 def ann_ivf_topk(
     emb: DataFrame,
     query_id: int,
@@ -190,23 +259,9 @@ def ann_ivf_topk(
     deployment shape — training and list assignment happen once at write
     time, queries only probe); derived on the fly when omitted.
     """
-    cents = centroids if centroids is not None else ivf_centroids(emb, n_lists, id_col, vec_col)
-    assigned = assigned if assigned is not None else ivf_assign(emb, cents, id_col, vec_col)
-    q = emb.where(F.col(id_col) == query_id).select(F.col(vec_col).alias("qv"))
-    probe = (
-        cents.crossJoin(F.broadcast(q))
-        .orderBy(F.desc(_cosine("centroid", "qv")), F.asc("list_id"))
-        .limit(nprobe)
-        .select("list_id")
-    )
-    return (
-        assigned.join(F.broadcast(probe), "list_id")
-        .where(F.col("vec_id") != query_id)
-        .crossJoin(F.broadcast(q))
-        .select("vec_id", P.round4(_cosine("v", "qv")).alias("score"))
-        .orderBy(F.desc("score"), F.asc("vec_id"))
-        .limit(k)
-    )
+    cents, asg = _ivf_tables(emb, centroids, assigned, n_lists, id_col, vec_col)
+    q = _query_row(_vectors(emb, id_col, vec_col), query_id)
+    return _top(_cosine_to(_probed(asg, cents, "qv", nprobe, q), q, query_id), k)
 
 
 def ann_ivf_batch_topk(
@@ -234,38 +289,20 @@ def ann_ivf_batch_topk(
     like bm25_batch_topk). Scores round4 BEFORE the per-qid cut
     (round-then-cut, the batch-path convention), self excluded.
     """
-    cents = (
-        centroids
-        if centroids is not None
-        else ivf_centroids(emb, n_lists, id_col, vec_col)
-    )
-    asg = assigned if assigned is not None else ivf_assign(emb, cents, id_col, vec_col)
-    qt = F.broadcast(
-        emb.where(F.col(id_col).isin([int(q) for q in query_ids])).select(
-            F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")
-        )
-    )
-    wp = Window.partitionBy("qid").orderBy(
-        F.desc(_cosine("c", "qv")), F.asc("list_id")
-    )
-    probe = (
-        qt.crossJoin(F.broadcast(cents.select("list_id", F.col("centroid").alias("c"))))
-        .withColumn("_rn", F.row_number().over(wp))
-        .where(F.col("_rn") <= int(nprobe))
-        .select("qid", "list_id")
-    )
+    cents, asg = _ivf_tables(emb, centroids, assigned, n_lists, id_col, vec_col)
+    qt = _query_rows(_vectors(emb, id_col, vec_col), [int(q) for q in query_ids])
+    probe = top_per_key(
+        qt.crossJoin(F.broadcast(cents.select("list_id", F.col("centroid").alias("c")))),
+        "qid", nprobe, score=_cosine("c", "qv"), id_col="list_id",
+    ).select("qid", "list_id")
     cand = (
         asg.join(F.broadcast(probe), "list_id")
         .join(qt, "qid")
         .where(F.col("vec_id") != F.col("qid"))
         .select("qid", "vec_id", P.round4(_cosine("v", "qv")).alias("score"))
     )
-    wk = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("vec_id"))
-    return (
-        cand.withColumn("_rn", F.row_number().over(wk))
-        .where(F.col("_rn") <= int(k))
-        .select("qid", "vec_id", "score")
-        .orderBy("qid", F.desc("score"), F.asc("vec_id"))
+    return top_per_key(cand, "qid", k, id_col="vec_id").orderBy(
+        "qid", F.desc("score"), F.asc("vec_id")
     )
 
 
@@ -299,6 +336,66 @@ def quantize_int8(
     return emb.select(F.col(id_col).alias("vec_id"), q.alias("qvec"))
 
 
+def _int8_view(emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"):
+    """((vec_id, v), dequantize): the int8-dequantized vectors — every
+    component through :func:`quantize_int8` over the global
+    :func:`quantization_stats` interval and back — and ``dequantize``, the
+    same round trip for a driver-side vector in the same double
+    operations (floor, then ``mn + code · scale``), so a literal query
+    lands on exactly the grid the table does."""
+    mn, mx = quantization_stats(emb, vec_col)
+    scale = (mx - mn) / 255.0 if mx > mn else 1.0
+    deq = F.transform(
+        F.col("qvec"), lambda x: F.lit(mn) + x.cast("double") * F.lit(scale)
+    )
+    view = quantize_int8(emb, mn, mx, id_col, vec_col).select("vec_id", deq.alias("v"))
+
+    def dequantize(vec: list[float]) -> list[float]:
+        return [mn + math.floor((float(v) - mn) / scale + 0.5) * scale for v in vec]
+
+    return view, dequantize
+
+
+def _window_rescore(
+    coarse: DataFrame,
+    k: int,
+    oversample: int,
+    exact: DataFrame,
+    score: "F.Column",
+    q: DataFrame | None = None,
+) -> DataFrame:
+    """(vec_id, score): the ``k × oversample`` best ``coarse`` (vec_id,
+    cscore) rows by (cscore desc, vec_id asc), rescored exactly. ``exact``
+    is the (vec_id, v) float table and ``score`` the exact score over ``v``
+    (and over ``qv`` of the one-row query ``q``, when given). Only the
+    window's float rows are read: a broadcast semi-join, so the float
+    table is never fully read at query time."""
+    window = (
+        coarse.orderBy(F.desc("cscore"), F.asc("vec_id"))
+        .limit(int(k) * int(oversample))
+        .select("vec_id")
+    )
+    rows = exact.join(F.broadcast(window), "vec_id", "semi")
+    if q is not None:
+        rows = rows.crossJoin(F.broadcast(q))
+    return rows.select("vec_id", score.alias("score"))
+
+
+def _batch_rescore(vecs: DataFrame, window: DataFrame, ids: list[int], k: int) -> DataFrame:
+    """(qid, vec_id, score): each query's ``window`` (qid, vec_id) rows
+    rescored by round4 exact cosine to that query's float vector in
+    ``vecs`` (vec_id, v), one pass over the window union, cut to ``k``
+    per qid."""
+    scored = (
+        vecs.join(window, "vec_id")
+        .join(_query_rows(vecs, ids), "qid")
+        .select("qid", "vec_id", P.round4(_cosine("v", "qv")).alias("score"))
+    )
+    return top_per_key(scored, "qid", k, id_col="vec_id").orderBy(
+        "qid", F.desc("score"), F.asc("vec_id")
+    )
+
+
 def ann_quantized_topk(
     emb: DataFrame,
     query_id: int,
@@ -311,21 +408,8 @@ def ann_quantized_topk(
     byte-compressed vector search, oracle-checkable bit-for-bit. At 100 TB
     the qvec column is materialized at ingest; this query is one scan of
     the byte table + TakeOrderedAndProject, no shuffle."""
-    mn, mx = quantization_stats(emb, vec_col)
-    scale = (mx - mn) / 255.0 if mx > mn else 1.0
-    qt = quantize_int8(emb, mn, mx, id_col, vec_col)
-    deq = F.transform(
-        F.col("qvec"), lambda x: F.lit(mn) + x.cast("double") * F.lit(scale)
-    )
-    d = qt.select("vec_id", deq.alias("v"))
-    q = d.where(F.col("vec_id") == query_id).select(F.col("v").alias("qv"))
-    return (
-        d.where(F.col("vec_id") != query_id)
-        .crossJoin(F.broadcast(q))
-        .select("vec_id", P.round4(_cosine("v", "qv")).alias("score"))
-        .orderBy(F.desc("score"), F.asc("vec_id"))
-        .limit(k)
-    )
+    d, _ = _int8_view(emb, id_col, vec_col)
+    return _top(_cosine_to(d, _query_row(d, query_id), query_id), k)
 
 
 def ann_quantized_rescore_topk(
@@ -347,30 +431,12 @@ def ann_quantized_rescore_topk(
     float32) ending in TakeOrderedAndProject; the exact pass touches
     ``k × oversample`` rows via a broadcast-able semi-join — the raw float
     table is never fully read at query time."""
-    mn, mx = quantization_stats(emb, vec_col)
-    scale = (mx - mn) / 255.0 if mx > mn else 1.0
-    qt = quantize_int8(emb, mn, mx, id_col, vec_col)
-    deq = F.transform(
-        F.col("qvec"), lambda x: F.lit(mn) + x.cast("double") * F.lit(scale)
-    )
-    d = qt.select("vec_id", deq.alias("v"))
-    cq = d.where(F.col("vec_id") == query_id).select(F.col("v").alias("qv"))
-    window = (
-        d.where(F.col("vec_id") != query_id)
-        .crossJoin(F.broadcast(cq))
-        .select("vec_id", P.round4(_cosine("v", "qv")).alias("cscore"))
-        .orderBy(F.desc("cscore"), F.asc("vec_id"))
-        .limit(k * oversample)
-        .select("vec_id")
-    )
-    e = emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"))
-    rq = e.where(F.col("vec_id") == query_id).select(F.col("v").alias("qv"))
-    return (
-        e.join(window, "vec_id", "semi")
-        .crossJoin(F.broadcast(rq))
-        .select("vec_id", P.round4(_cosine("v", "qv")).alias("score"))
-        .orderBy(F.desc("score"), F.asc("vec_id"))
-        .limit(k)
+    d, _ = _int8_view(emb, id_col, vec_col)
+    coarse = _cosine_to(d, _query_row(d, query_id), query_id, "cscore")
+    e = _vectors(emb, id_col, vec_col)
+    q = _query_row(e, query_id)
+    return _top(
+        _window_rescore(coarse, k, oversample, e, P.round4(_cosine("v", "qv")), q), k
     )
 
 
@@ -397,43 +463,16 @@ def ann_quantized_batch_topk(
     cost one byte-table scan + Q × k × oversample exact rescores instead
     of Q scans."""
     ids = [int(q) for q in query_ids]
-    mn, mx = quantization_stats(emb, vec_col)
-    scale = (mx - mn) / 255.0 if mx > mn else 1.0
-    qt = quantize_int8(emb, mn, mx, id_col, vec_col)
-    deq = F.transform(
-        F.col("qvec"), lambda x: F.lit(mn) + x.cast("double") * F.lit(scale)
-    )
-    d = qt.select("vec_id", deq.alias("v"))
-    qb = F.broadcast(
-        d.where(F.col("vec_id").isin(ids)).select(
-            F.col("vec_id").alias("qid"), F.col("v").alias("qv")
-        )
-    )
-    ww = Window.partitionBy("qid").orderBy(F.desc("cscore"), F.asc("vec_id"))
-    window = (
-        d.crossJoin(qb)
+    d, _ = _int8_view(emb, id_col, vec_col)
+    coarse = (
+        d.crossJoin(_query_rows(d, ids))
         .where(F.col("vec_id") != F.col("qid"))
         .select("qid", "vec_id", P.round4(_cosine("v", "qv")).alias("cscore"))
-        .withColumn("_rn", F.row_number().over(ww))
-        .where(F.col("_rn") <= int(k) * int(oversample))
-        .select("qid", "vec_id")
     )
-    e = emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"))
-    rq = F.broadcast(
-        e.where(F.col("vec_id").isin(ids)).select(
-            F.col("vec_id").alias("qid"), F.col("v").alias("qv")
-        )
-    )
-    wk = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("vec_id"))
-    return (
-        e.join(window, "vec_id")
-        .join(rq, "qid")
-        .select("qid", "vec_id", P.round4(_cosine("v", "qv")).alias("score"))
-        .withColumn("_rn", F.row_number().over(wk))
-        .where(F.col("_rn") <= int(k))
-        .select("qid", "vec_id", "score")
-        .orderBy("qid", F.desc("score"), F.asc("vec_id"))
-    )
+    window = top_per_key(
+        coarse, "qid", int(k) * int(oversample), score="cscore", id_col="vec_id"
+    ).select("qid", "vec_id")
+    return _batch_rescore(_vectors(emb, id_col, vec_col), window, ids, k)
 
 
 def ann_lsh_topk(
@@ -470,13 +509,12 @@ def ann_lsh_topk(
     cond = F.col("bucket") == F.col("qbucket")
     for j in range(int(multi_probe)):
         cond = cond | (F.col("bucket") == F.col("qbucket").bitwiseXOR(F.lit(1 << j)))
-    return (
+    return _top(
         b.where(F.col("vec_id") != query_id)
         .crossJoin(F.broadcast(q))
         .where(cond)
-        .select("vec_id", P.round4(_cosine("v", "qv")).alias("score"))
-        .orderBy(F.desc("score"), F.asc("vec_id"))
-        .limit(k)
+        .select("vec_id", P.round4(_cosine("v", "qv")).alias("score")),
+        k,
     )
 
 
@@ -571,6 +609,7 @@ def _fold_dot(a: list[float], b: list[float]) -> float:
     return acc
 
 
+
 def _code_pos_exprs(
     cb: dict[tuple[int, int], list[float]],
     n_sub: int,
@@ -584,8 +623,7 @@ def _code_pos_exprs(
     simply don't compete — exactly like the oracle, whose codebook rows
     don't exist for them."""
     out = []
-    for mm in range(n_sub):
-        codes_m = sorted(c for (m2, c) in cb if m2 == mm)
+    for mm, codes_m in enumerate(_codes_by_sub(cb, n_sub)):
         sub = F.slice(F.col("v"), mm * subdim + 1, subdim)
         # one 2-D centroid literal + transform instead of K unrolled L2
         # chains: the loop body compiles ONCE (the unrolled form built
@@ -606,6 +644,7 @@ def _codes_by_sub(cb: dict[tuple[int, int], list[float]], n_sub: int) -> list[li
     """Per subspace, the trained code ids ascending — the shared ordering
     every position column / literal lookup array is built in."""
     return [sorted(c for (m2, c) in cb if m2 == mm) for mm in range(n_sub)]
+
 
 
 def pq_encode(
@@ -646,10 +685,11 @@ def _adc_lookup(
     qv: list[float],
     positions: list[tuple[list[int], "F.Column"]],
     subdim: int,
-) -> tuple["F.Column", "F.Column", float]:
-    """(adot, an2, qnorm) for ONE query vector given the shared per-subspace
-    code positions: literal per-(m, code) partial-dot / squared-norm
-    lookups accumulated left-to-right across subspaces."""
+) -> "F.Column":
+    """The round4 ADC coarse score of ONE query vector given the shared
+    per-subspace code positions: approximate cosine = Σ_m dot(q_m, c_m) /
+    (‖q‖ · sqrt(Σ_m ‖c_m‖²)), from literal per-(m, code) partial-dot and
+    squared-norm lookups accumulated left-to-right across subspaces."""
     # math.sqrt is correctly rounded on every platform (pow(x, 0.5) is
     # not guaranteed to be), matching the oracle's sqrt() bit-for-bit
     qnorm = math.sqrt(_fold_dot(qv, qv))
@@ -666,19 +706,60 @@ def _adc_lookup(
         )
         adot = pd if adot is None else (adot + pd)
         an2 = pn if an2 is None else (an2 + pn)
-    return adot, an2, qnorm
+    return P.round4(adot / (F.lit(qnorm) * F.sqrt(an2)))
 
 
-def _adc_exprs(
+def _adc_score(
     cb: dict[tuple[int, int], list[float]],
     qv: list[float],
     n_sub: int,
     subdim: int,
-) -> tuple["F.Column", "F.Column", float]:
-    """(adot, an2, qnorm): the ADC scoring expressions over the raw vector
-    column ``v`` — the single-query composition of :func:`_code_pos_exprs`
-    and :func:`_adc_lookup`."""
-    return _adc_lookup(cb, qv, _code_pos_exprs(cb, n_sub, subdim), subdim)
+    stored: bool = False,
+) -> "F.Column":
+    """The round4 ADC coarse score of one query: over the stored ``pos``
+    code column (``stored``, see :func:`pq_encode`) or over codes encoded
+    inline from the raw vector column ``v``."""
+    positions = _stored_positions(cb, n_sub) if stored else _code_pos_exprs(cb, n_sub, subdim)
+    return _adc_lookup(cb, qv, positions, subdim)
+
+
+def _codebook(
+    emb: DataFrame,
+    codebooks: DataFrame | None,
+    n_sub: int,
+    n_codes: int,
+    subdim: int,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> dict[tuple[int, int], list[float]]:
+    """The ``(m, code) → centroid`` table the ADC literals are built from:
+    ``codebooks`` (trained by :func:`pq_codebooks` when None) collected
+    with a bound of ``n_sub × n_codes`` rows. Each entry is checked
+    against the ``n_sub × subdim`` layout: a codebook trained for another
+    layout raises ValueError instead of scoring wrongly (``zip_with``
+    truncates a short subvector, and a subspace past ``n_sub`` is never
+    looked up)."""
+    if codebooks is None:
+        codebooks = pq_codebooks(emb, n_sub, n_codes, subdim, id_col, vec_col)
+    bound = int(n_sub) * int(n_codes)
+    rows = codebooks.collect()
+    if len(rows) > bound:
+        raise ValueError(
+            f"codebook has {len(rows)} rows, over n_sub × n_codes = {bound} — it "
+            "was trained for another layout"
+        )
+    cb: dict[tuple[int, int], list[float]] = {}
+    for r in rows:
+        mm, code, cent = int(r["m"]), int(r["code"]), [float(x) for x in r["centroid"]]
+        if len(cent) != subdim or not 0 <= mm < n_sub:
+            raise ValueError(
+                f"codebook entry (m={mm}, code={code}) has subvector length "
+                f"{len(cent)}, expected {subdim} over {n_sub} subspaces — a "
+                "codebook trained for another layout would silently produce "
+                "wrong ADC scores (zip_with truncates)"
+            )
+        cb[(mm, code)] = cent
+    return cb
 
 
 def ann_pq_topk(
@@ -699,61 +780,35 @@ def ann_pq_topk(
     (M=8 one-byte codes over 64 float32 dims; 64× at M=4).
 
     Coarse pass: each vector's code word (per-subspace L2 argmin against
-    the codebooks, ties to the smaller code — computed inline here; at
-    scale it is a stored byte column) is scored via ADC: approximate
+    the codebooks, ties to the smaller code — read from the stored
+    ``codes`` table, the write-time :func:`pq_encode` artifact, or
+    computed inline) is scored via ADC: approximate
     cosine = Σ_m dot(q_m, c_{m,code_m}) / (‖q‖ · sqrt(Σ_m ‖c_{m,code_m}‖²)),
     with the per-(m, code) partial dots and squared norms DRIVER-computed
     from the collected codebooks — O(M·K) literals, the probe-list lesson:
     a bounded driver table beats a join because the scan stays one
     zero-shuffle codegen pass ending in TakeOrderedAndProject. Exact pass:
     float cosine over the k×oversample window via a semi-join; the float
-    table is never fully read at query time.
+    table is never fully read at query time. The stored and the inline
+    code positions are the same ints, so the rows are the same.
 
     Deterministic contract (oracle-checkable): round4 coarse score,
     vec_id-asc tie-break, window = k×oversample, exact rescore round4 with
     the same tie-break, self excluded. Every sum (codebook training means,
     ADC partials, score accumulation) is left-associated in both engines.
     """
-    cents = (
-        codebooks
-        if codebooks is not None
-        else pq_codebooks(emb, n_sub, n_codes, subdim, id_col, vec_col)
+    cb = _codebook(emb, codebooks, n_sub, n_codes, subdim, id_col, vec_col)
+    e = _vectors(emb, id_col, vec_col)
+    q = _query_row(e, query_id)
+    qv = [float(x) for x in q.head()[0]]
+    stored = codes is not None
+    coarse = (
+        (codes if stored else e)
+        .where(F.col("vec_id") != query_id)
+        .select("vec_id", _adc_score(cb, qv, n_sub, subdim, stored).alias("cscore"))
     )
-    cb: dict[tuple[int, int], list[float]] = {
-        (int(r["m"]), int(r["code"])): [float(x) for x in r["centroid"]]
-        for r in cents.collect()  # O(M·K) rows — bounded by design
-    }
-    qv = [
-        float(x)
-        for x in emb.where(F.col(id_col) == query_id).select(vec_col).head()[0]
-    ]
-    if codes is not None:
-        # coarse pass over the STORED code table (write-time pq_encode
-        # artifact): no float I/O, no re-encode — positions are the exact
-        # ints the inline expressions produced, so every ADC score (and
-        # therefore the window and the final rows) is unchanged.
-        adot, an2, qnorm = _adc_lookup(cb, qv, _stored_positions(cb, n_sub), subdim)
-        base = codes.where(F.col("vec_id") != query_id)
-    else:
-        adot, an2, qnorm = _adc_exprs(cb, qv, n_sub, subdim)
-        base = emb.where(F.col(id_col) != query_id).select(
-            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v")
-        )
-    cscore = P.round4(adot / (F.lit(qnorm) * F.sqrt(an2)))
-    window = (
-        base.select("vec_id", cscore.alias("cscore"))
-        .orderBy(F.desc("cscore"), F.asc("vec_id"))
-        .limit(int(k) * int(oversample))
-        .select("vec_id")
-    )
-    e = emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"))
-    rq = e.where(F.col("vec_id") == query_id).select(F.col("v").alias("qv"))
-    return (
-        e.join(F.broadcast(window), "vec_id", "semi")
-        .crossJoin(F.broadcast(rq))
-        .select("vec_id", P.round4(_cosine("v", "qv")).alias("score"))
-        .orderBy(F.desc("score"), F.asc("vec_id"))
-        .limit(k)
+    return _top(
+        _window_rescore(coarse, k, oversample, e, P.round4(_cosine("v", "qv")), q), k
     )
 
 
@@ -785,7 +840,10 @@ def ann_ivfpq_topk(
     (:func:`ann_pq_topk` / :func:`ann_quantized_rescore_topk` coarse passes
     scan the whole byte table by definition): here the scan itself is
     probe-bounded, so query cost tracks nprobe/n_lists of the corpus —
-    the sublinear plan the 100-TB deployment runs.
+    the sublinear plan the 100-TB deployment runs. Stored ``codes`` with a
+    ``list_id`` column (Faiss keeps PQ codes inside the IVF lists the same
+    way) are probed in place of the assignment table, so the probed scan
+    reads only code rows.
 
     Deterministic contract: probe lists and codebooks exactly as in
     :func:`ann_ivf_topk` / :func:`ann_pq_topk` (PQ trains on raw
@@ -793,60 +851,19 @@ def ann_ivfpq_topk(
     simplification); ADC score round4, vec_id-asc tie-break, self
     excluded; window k×oversample; exact rescore round4 same tie-break.
     """
-    cents = (
-        centroids
-        if centroids is not None
-        else ivf_centroids(emb, n_lists, id_col, vec_col)
+    cents, asg = _ivf_tables(emb, centroids, assigned, n_lists, id_col, vec_col)
+    cb = _codebook(emb, codebooks, n_sub, n_codes, subdim, id_col, vec_col)
+    e = _vectors(emb, id_col, vec_col)
+    q = _query_row(e, query_id)
+    qv = [float(x) for x in q.head()[0]]
+    stored = codes is not None and "list_id" in codes.columns
+    coarse = (
+        _probed(codes if stored else asg, cents, "qv", nprobe, q)
+        .where(F.col("vec_id") != query_id)
+        .select("vec_id", _adc_score(cb, qv, n_sub, subdim, stored).alias("cscore"))
     )
-    asg = assigned if assigned is not None else ivf_assign(emb, cents, id_col, vec_col)
-    pq = (
-        codebooks
-        if codebooks is not None
-        else pq_codebooks(emb, n_sub, n_codes, subdim, id_col, vec_col)
-    )
-    cb: dict[tuple[int, int], list[float]] = {
-        (int(r["m"]), int(r["code"])): [float(x) for x in r["centroid"]]
-        for r in pq.collect()  # O(M·K) rows — bounded by design
-    }
-    qv = [
-        float(x)
-        for x in emb.where(F.col(id_col) == query_id).select(vec_col).head()[0]
-    ]
-    q = emb.where(F.col(id_col) == query_id).select(F.col(vec_col).alias("qv"))
-    probe = (
-        cents.crossJoin(F.broadcast(q))
-        .orderBy(F.desc(_cosine("centroid", "qv")), F.asc("list_id"))
-        .limit(nprobe)
-        .select("list_id")
-    )
-    if codes is not None and "list_id" in codes.columns:
-        # stored codes in the list-partitioned layout (Faiss stores PQ
-        # codes inside the IVF lists the same way): the probed scan reads
-        # only code rows, never the float column
-        adot, an2, qnorm = _adc_lookup(cb, qv, _stored_positions(cb, n_sub), subdim)
-        cand = codes.join(F.broadcast(probe), "list_id").where(
-            F.col("vec_id") != query_id
-        )
-    else:
-        adot, an2, qnorm = _adc_exprs(cb, qv, n_sub, subdim)
-        cand = asg.join(F.broadcast(probe), "list_id").where(
-            F.col("vec_id") != query_id
-        )
-    cscore = P.round4(adot / (F.lit(qnorm) * F.sqrt(an2)))
-    window = (
-        cand.select("vec_id", cscore.alias("cscore"))
-        .orderBy(F.desc("cscore"), F.asc("vec_id"))
-        .limit(int(k) * int(oversample))
-        .select("vec_id")
-    )
-    e = emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"))
-    rq = e.where(F.col("vec_id") == query_id).select(F.col("v").alias("qv"))
-    return (
-        e.join(F.broadcast(window), "vec_id", "semi")
-        .crossJoin(F.broadcast(rq))
-        .select("vec_id", P.round4(_cosine("v", "qv")).alias("score"))
-        .orderBy(F.desc("score"), F.asc("vec_id"))
-        .limit(k)
+    return _top(
+        _window_rescore(coarse, k, oversample, e, P.round4(_cosine("v", "qv")), q), k
     )
 
 
@@ -868,78 +885,50 @@ def ann_pq_batch_topk(
     the PQ tier (bm25 / dense / hybrid / ivf / int8 shipped r5–r7).
 
     The expensive per-row work — the per-subspace L2 argmin that turns a
-    raw vector into its code word (a stored byte column at scale) — is
-    computed ONCE per vector in a single projection; each of the Q queries
-    then costs only M literal-array lookups on the shared code positions,
-    emitted as Q (qid, cscore) rows per vector from the same scan
-    (explode of a literal-built struct array — no join, no re-encode).
-    Per-qid round4-then-cut k×oversample windows (the single-query
-    contract per qid), one exact-rescore pass over the window union via a
-    broadcast (qid, vec_id) join, self excluded. Amortization is the
-    batch win: Q queries cost one encode scan + Q·k·oversample exact
-    rescores instead of Q scans."""
+    raw vector into its code word (the stored ``codes`` table, or computed
+    inline) — is done ONCE per vector in a single projection; each of the
+    Q queries then costs only M literal-array lookups on the shared code
+    positions, emitted as Q (qid, cscore) rows per vector from the same
+    scan (explode of a literal-built struct array — no join, no
+    re-encode). Per-qid round4-then-cut k×oversample windows (the
+    single-query contract per qid), one exact-rescore pass over the window
+    union via a broadcast (qid, vec_id) join, self excluded. Amortization
+    is the batch win: Q queries cost one encode scan + Q·k·oversample
+    exact rescores instead of Q scans."""
     ids = [int(q) for q in query_ids]
-    cents = (
-        codebooks
-        if codebooks is not None
-        else pq_codebooks(emb, n_sub, n_codes, subdim, id_col, vec_col)
-    )
-    cb: dict[tuple[int, int], list[float]] = {
-        (int(r["m"]), int(r["code"])): [float(x) for x in r["centroid"]]
-        for r in cents.collect()  # O(M·K) rows — bounded by design
-    }
-    qvs: dict[int, list[float]] = {
-        int(r["qid"]): [float(x) for x in r["qv"]]
-        for r in emb.where(F.col(id_col).isin(ids))
-        .select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qv"))
-        .collect()  # Q rows — bounded by design
-    }
+    cb = _codebook(emb, codebooks, n_sub, n_codes, subdim, id_col, vec_col)
+    e = _vectors(emb, id_col, vec_col)
+    rows = _query_rows(e, ids).collect()
+    if len(rows) > len(ids):
+        raise ValueError(
+            f"collected {len(rows)} query vectors for {len(ids)} query ids — "
+            f"{id_col} is not unique"
+        )
+    qvs = {int(r["qid"]): [float(x) for x in r["qv"]] for r in rows}
     if codes is not None:
-        # the stored-code artifact IS the shared encode scan (write-time
-        # pq_encode): Q queries read M ints per vector, zero float I/O
-        enc = codes.select("vec_id", "pos")
-        shared = _stored_positions(cb, n_sub)
+        enc, shared = codes.select("vec_id", "pos"), _stored_positions(cb, n_sub)
     else:
-        base = emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"))
         pos_exprs = _code_pos_exprs(cb, n_sub, subdim)
-        enc = base.select(
+        enc = e.select(
             "vec_id",
             *[pos.alias(f"_p{mm}") for mm, (_codes, pos) in enumerate(pos_exprs)],
         )
         shared = [
             (codes_m, F.col(f"_p{mm}")) for mm, (codes_m, _p) in enumerate(pos_exprs)
         ]
-    structs = []
-    for qid in ids:
-        adot, an2, qnorm = _adc_lookup(cb, qvs[qid], shared, subdim)
-        structs.append(
-            F.struct(
-                F.lit(qid).alias("qid"),
-                P.round4(adot / (F.lit(qnorm) * F.sqrt(an2))).alias("cscore"),
-            )
+    structs = [
+        F.struct(
+            F.lit(qid).alias("qid"),
+            _adc_lookup(cb, qvs[qid], shared, subdim).alias("cscore"),
         )
-    ww = Window.partitionBy("qid").orderBy(F.desc("cscore"), F.asc("vec_id"))
-    window = (
+        for qid in ids
+    ]
+    coarse = (
         enc.select("vec_id", F.explode(F.array(*structs)).alias("s"))
         .select("vec_id", F.col("s.qid").alias("qid"), F.col("s.cscore").alias("cscore"))
         .where(F.col("vec_id") != F.col("qid"))
-        .withColumn("_rn", F.row_number().over(ww))
-        .where(F.col("_rn") <= int(k) * int(oversample))
-        .select("qid", "vec_id")
     )
-    e = emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"))
-    rq = F.broadcast(
-        e.where(F.col("vec_id").isin(ids)).select(
-            F.col("vec_id").alias("qid"), F.col("v").alias("qv")
-        )
-    )
-    wk = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("vec_id"))
-    return (
-        e.join(F.broadcast(window), "vec_id")
-        .join(rq, "qid")
-        .select("qid", "vec_id", P.round4(_cosine("v", "qv")).alias("score"))
-        .withColumn("_rn", F.row_number().over(wk))
-        .where(F.col("_rn") <= int(k))
-        .select("qid", "vec_id", "score")
-        .orderBy("qid", F.desc("score"), F.asc("vec_id"))
-    )
+    window = top_per_key(
+        coarse, "qid", int(k) * int(oversample), score="cscore", id_col="vec_id"
+    ).select("qid", "vec_id")
+    return _batch_rescore(e, window, ids, k)

@@ -41,7 +41,7 @@ from neural_search_spark.analysis.tokenizer import (
     term_freqs,
     tokenize_text,
 )
-from neural_search_spark.session import local_table
+from neural_search_spark.session import local_table, top_per_key
 
 K1 = 1.2
 B = 0.75
@@ -300,18 +300,9 @@ def bm25_batch_topk(
     (never a global sort — each query's heap is independent, exactly the
     per-shard collector model). Round-then-cut (score round4, docID asc)
     so the cut is reproducible across engines."""
-    from pyspark.sql import Window
-
     scored = bm25_batch_scores(engine.spark, engine.postings, engine.stats, queries)
-    r4 = F.round(F.col("score"), 4)
-    w = Window.partitionBy("qid").orderBy(r4.desc(), F.col("docID").asc())
-    return (
-        scored.select("qid", "docID", r4.alias("score"))
-        .withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= int(k))
-        .select("qid", "docID", "score")
-        .orderBy("qid", F.col("score").desc(), "docID")
-    )
+    rounded = scored.select("qid", "docID", F.round(F.col("score"), 4).alias("score"))
+    return top_per_key(rounded, "qid", k).orderBy("qid", F.col("score").desc(), "docID")
 
 
 def phrase_freq_col(toks_col, terms: list[str]):

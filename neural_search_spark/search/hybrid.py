@@ -40,7 +40,7 @@ from operator import add
 from pyspark.sql import DataFrame, functions as F, Window
 
 from neural_search_spark.search.bm25 import term_score_col, topk
-from neural_search_spark.session import local_table
+from neural_search_spark.session import local_table, top_per_key
 
 # HybridQueryBuilder.java:67 — default; live value comes from the
 # settings surface ("hybrid_max_sub_queries")
@@ -292,14 +292,7 @@ def hybrid_batch_topk(
         F.sum(term_score_col(engine.stats)).alias("score")
     )
     if depth is not None:
-        wd = Window.partitionBy("qid", "cidx").orderBy(
-            F.col("score").desc(), F.col("docID").asc()
-        )
-        clause_scores = (
-            clause_scores.withColumn("_rn", F.row_number().over(wd))
-            .where(F.col("_rn") <= int(depth))
-            .drop("_rn")
-        )
+        clause_scores = top_per_key(clause_scores, ["qid", "cidx"], depth)
     # min_max per (qid, clause), no bounds: normalize_scores' branch order
     sc, w = F.col("score"), Window.partitionBy("qid", "cidx")
     mn, mx = F.min(sc).over(w), F.max(sc).over(w)
@@ -331,15 +324,7 @@ def hybrid_batch_topk(
     comb = wide.select(
         "qid", "docID", F.round(num / F.element_at(nclause, F.col("qid")), 4).alias("score")
     )
-    wk = Window.partitionBy("qid").orderBy(
-        F.col("score").desc(), F.col("docID").asc()
-    )
-    return (
-        comb.withColumn("_rn", F.row_number().over(wk))
-        .where(F.col("_rn") <= int(k))
-        .select("qid", "docID", "score")
-        .orderBy("qid", F.col("score").desc(), "docID")
-    )
+    return top_per_key(comb, "qid", k).orderBy("qid", F.col("score").desc(), "docID")
 
 
 def hybrid_search(

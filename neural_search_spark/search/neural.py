@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame, functions as F
 from neural_search_spark.analysis.tokenizer import tokenize_text
 from neural_search_spark.pipeline import params as P
 from neural_search_spark.pipeline.embedding import N_DIMS
-from neural_search_spark.session import local_table
+from neural_search_spark.session import local_table, top_per_key
 
 
 def query_embedding_stub(query_text: str, n_dims: int = N_DIMS) -> list[float]:
@@ -148,165 +148,48 @@ def neural_clause_scores_ann(
     desc, docID asc). ``candidate_docs``/``min_score`` apply after pruning,
     exactly like the brute clause.
     """
-    from neural_search_spark.pipeline.ann import (
-        _cosine,
-        _dot,
-        ivf_assign,
-        ivf_centroids,
-        quantization_stats,
-        quantize_int8,
-    )
-
     from neural_search_spark import stats as _stats
+    from neural_search_spark.pipeline import ann
 
     if k is None:
         raise ValueError("ANN dense clause requires k (the kNN candidate count)")
     _stats.record_event("neural_query_requests")
     _stats.record_event("neural_query_against_knn_requests")
     qv = F.array(*[F.lit(float(v)) for v in query_vector])
+    docs = ann._vectors(doc_embeddings, "docID", vec_col)
+    exact = P.round6(ann._dot("v", qv))
+    if method in ("ivf", "ivfpq"):
+        cents, asg = ann._ivf_tables(
+            doc_embeddings, centroids, assigned,
+            n_lists if n_lists is not None else P.IVF_N_LISTS, "docID", vec_col,
+        )
+        probed = ann._probed(
+            asg, cents, qv, nprobe if nprobe is not None else P.IVF_NPROBE
+        )
     if method == "ivf":
-        n_lists = n_lists if n_lists is not None else P.IVF_N_LISTS
-        nprobe = nprobe if nprobe is not None else P.IVF_NPROBE
-        cents = (
-            centroids
-            if centroids is not None
-            else ivf_centroids(doc_embeddings, n_lists, id_col="docID", vec_col=vec_col)
-        )
-        asg = (
-            assigned
-            if assigned is not None
-            else ivf_assign(doc_embeddings, cents, id_col="docID", vec_col=vec_col)
-        )
-        # centroids are means (not unit vectors) — the probe ranks by the
-        # full cosine, the exact expression the oracle twin recomputes.
-        # Probe-list selection is DRIVER-SIDE (O(nprobe) rows — every IVF
-        # system picks probe lists at the coordinator): the resulting
-        # LITERAL isin predicate statically prunes the assignment table —
-        # cached-batch pruning here, parquet list_id partition pruning at
-        # 100 TB — which a join-shaped restriction cannot do.
-        probe_ids = [
-            r["list_id"]
-            for r in cents.orderBy(
-                F.desc(_cosine(F.col("centroid"), qv)), F.asc("list_id")
-            )
-            .limit(int(nprobe))
-            .select("list_id")
-            .collect()
-        ]
-        scored = asg.where(F.col("list_id").isin(probe_ids)).select(
-            F.col("vec_id").alias("docID"),
-            P.round6(_dot(F.col("v"), qv)).alias("score"),
-        )
+        scored = probed.select("vec_id", exact.alias("score"))
     elif method == "quantized_rescore":
-        # coarse pass: both sides through the SAME global-interval int8
-        # quantizer (the query quantizes driver-side — two exact extremes
-        # fetched once, the ann_quantized convention), 4-dp rounded
-        # dequantized cosine cuts a k×oversample window; exact pass:
-        # round6 dot of the ORIGINAL floats over that window only
-        mn, mx = quantization_stats(doc_embeddings, vec_col)
-        scale = (mx - mn) / 255.0 if mx > mn else 1.0
-        dqv = [
-            mn + math.floor((float(v) - mn) / scale + 0.5) * scale
-            for v in query_vector
-        ]
-        cqv = F.array(*[F.lit(float(v)) for v in dqv])
-        qt = quantize_int8(doc_embeddings, mn, mx, id_col="docID", vec_col=vec_col)
-        deq = F.transform(
-            F.col("qvec"), lambda x: F.lit(mn) + x.cast("double") * F.lit(scale)
-        )
-        window = (
-            qt.select("vec_id", deq.alias("v"))
-            .select("vec_id", P.round4(_cosine(F.col("v"), cqv)).alias("cscore"))
-            .orderBy(F.desc("cscore"), F.asc("vec_id"))
-            .limit(int(k) * int(oversample))
-            .select("vec_id")
-        )
-        scored = (
-            doc_embeddings.select(
-                F.col("docID").alias("vec_id"), F.col(vec_col).alias("v")
-            )
-            .join(F.broadcast(window), "vec_id", "semi")
-            .select(
-                F.col("vec_id").alias("docID"),
-                P.round6(_dot(F.col("v"), qv)).alias("score"),
-            )
-        )
+        # both sides through the same global-interval int8 quantizer; the
+        # 4-dp dequantized cosine cuts the window, the round6 dot of the
+        # original floats rescores it
+        view, dequantize = ann._int8_view(doc_embeddings, "docID", vec_col)
+        cqv = F.array(*[F.lit(v) for v in dequantize(query_vector)])
+        coarse = view.select("vec_id", P.round4(ann._cosine("v", cqv)).alias("cscore"))
+        scored = ann._window_rescore(coarse, k, oversample, docs, exact)
     elif method == "ivfpq":
-        # IVF probe (driver-side literal isin, as in "ivf") prunes the
-        # candidate scan; PQ-ADC scores only the probed rows from the
-        # collected codebook LUT; exact round6 dot rescores the window.
-        from neural_search_spark.pipeline.ann import _adc_exprs, pq_codebooks
-
-        n_lists = n_lists if n_lists is not None else P.IVF_N_LISTS
-        nprobe = nprobe if nprobe is not None else P.IVF_NPROBE
         dim = len(query_vector)
         if dim % int(pq_m):
             raise ValueError(f"pq_m {pq_m} must divide the embedding dim {dim}")
         subdim = dim // int(pq_m)
-        cents = (
-            centroids
-            if centroids is not None
-            else ivf_centroids(doc_embeddings, n_lists, id_col="docID", vec_col=vec_col)
+        cb = ann._codebook(
+            doc_embeddings, codebooks, int(pq_m), int(pq_codes), subdim, "docID", vec_col
         )
-        asg = (
-            assigned
-            if assigned is not None
-            else ivf_assign(doc_embeddings, cents, id_col="docID", vec_col=vec_col)
-        )
-        pq = (
-            codebooks
-            if codebooks is not None
-            else pq_codebooks(
-                doc_embeddings, int(pq_m), int(pq_codes), subdim,
-                id_col="docID", vec_col=vec_col,
-            )
-        )
-        cb = {
-            (int(r["m"]), int(r["code"])): [float(x) for x in r["centroid"]]
-            for r in pq.collect()  # O(M·K) rows — bounded by design
-        }
-        for (mm, code), cent in cb.items():
-            if len(cent) != subdim or not (0 <= mm < int(pq_m)):
-                raise ValueError(
-                    f"codebook entry (m={mm}, code={code}) has subvector length "
-                    f"{len(cent)}, expected {subdim} over {pq_m} subspaces — a "
-                    "codebook trained with a different pq_m would silently "
-                    "produce wrong ADC scores (zip_with truncates)"
-                )
-        probe_ids = [
-            r["list_id"]
-            for r in cents.orderBy(
-                F.desc(_cosine(F.col("centroid"), qv)), F.asc("list_id")
-            )
-            .limit(int(nprobe))
-            .select("list_id")
-            .collect()
-        ]
-        adot, an2, qnorm = _adc_exprs(
-            cb, [float(v) for v in query_vector], int(pq_m), subdim
-        )
-        window = (
-            asg.where(F.col("list_id").isin(probe_ids))
-            .select(
-                "vec_id",
-                P.round4(adot / (F.lit(qnorm) * F.sqrt(an2))).alias("cscore"),
-            )
-            .orderBy(F.desc("cscore"), F.asc("vec_id"))
-            .limit(int(k) * int(oversample))
-            .select("vec_id")
-        )
-        scored = (
-            doc_embeddings.select(
-                F.col("docID").alias("vec_id"), F.col(vec_col).alias("v")
-            )
-            .join(F.broadcast(window), "vec_id", "semi")
-            .select(
-                F.col("vec_id").alias("docID"),
-                P.round6(_dot(F.col("v"), qv)).alias("score"),
-            )
-        )
+        cscore = ann._adc_score(cb, [float(v) for v in query_vector], int(pq_m), subdim)
+        coarse = probed.select("vec_id", cscore.alias("cscore"))
+        scored = ann._window_rescore(coarse, k, oversample, docs, exact)
     else:
         raise ValueError(f"unknown knn_method {method!r}")
+    scored = scored.withColumnRenamed("vec_id", "docID")
     if candidate_docs is not None:
         scored = scored.join(candidate_docs.select("docID"), "docID", "semi")
     if min_score is not None:
@@ -335,7 +218,6 @@ def neural_batch_topk(
     the embedding column itself is read once. The ANN keys (IVF/LSH/
     quantized) remain the scale path when Q×corpus exceeds budget."""
     from neural_search_spark.pipeline.ann import _dot
-    from pyspark.sql import Window
 
     rows = [
         (int(qid), [float(v) for v in qv])
@@ -347,15 +229,7 @@ def neural_batch_topk(
     scored = doc_embeddings.crossJoin(qt).select(
         "qid", "docID", P.round6(_dot(F.col(vec_col), F.col("qv"))).alias("score")
     )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("score").desc(), F.col("docID").asc()
-    )
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= int(k))
-        .select("qid", "docID", "score")
-        .orderBy("qid", F.col("score").desc(), "docID")
-    )
+    return top_per_key(scored, "qid", k).orderBy("qid", F.col("score").desc(), "docID")
 
 
 def neural_nested_scores(

@@ -20,7 +20,7 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 from pyspark.sql.types import ArrayType, StructType, _parse_datatype_string
 
 
@@ -101,3 +101,21 @@ def local_table(spark: SparkSession, rows: list[tuple], schema: str | StructType
             for f in st.fields
         )
     )
+
+
+def top_per_key(
+    df: DataFrame,
+    key: str | list[str],
+    k: int,
+    score: str | Column = "score",
+    id_col: str = "docID",
+) -> DataFrame:
+    """The rows of ``df`` ranked 1..``k`` within each ``key`` by (``score``
+    desc, ``id_col`` asc): ``row_number()`` over a window partitioned by
+    ``key`` — never a global sort, each key's heap is independent (the
+    per-shard collector model). ``score`` may be an expression."""
+    s = F.col(score) if isinstance(score, str) else score
+    w = Window.partitionBy(*([key] if isinstance(key, str) else key)).orderBy(
+        s.desc(), F.col(id_col).asc()
+    )
+    return df.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") <= int(k)).drop("_rn")

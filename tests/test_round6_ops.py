@@ -102,6 +102,57 @@ class TestAnnDenseClause:
         # rescored window scores are the exact float scores (not coarse)
         assert all(brute[r["docID"]] == r["score"] for r in rows)
 
+    def test_quantized_rescore_keeps_the_top_of_the_coarse_window(self, doc_emb):
+        """``knn_method="quantized_rescore"``, which no oracle key runs: the
+        window is the k×oversample best docs by the round4 cosine of the
+        int8-dequantized vectors (query dequantized the same way, docID-asc
+        tie-break), and the clause returns exactly the top-k of that window
+        by the round6 exact dot."""
+        import math
+
+        from neural_search_spark.pipeline import params as P
+        from neural_search_spark.pipeline.ann import (
+            _cosine,
+            _dot,
+            quantization_stats,
+            quantize_int8,
+        )
+        from neural_search_spark.search.neural import (
+            neural_clause_scores_ann,
+            query_embedding_stub,
+        )
+
+        k, oversample = 5, 3
+        for text in ("customer stream window partition", "import data", "return value"):
+            qv_list = query_embedding_stub(text)
+            mn, mx = quantization_stats(doc_emb)
+            scale = (mx - mn) / 255.0 if mx > mn else 1.0
+            dq = [mn + math.floor((v - mn) / scale + 0.5) * scale for v in qv_list]
+            deq = F.transform(
+                F.col("qvec"), lambda x: F.lit(mn) + x.cast("double") * F.lit(scale)
+            )
+            coarse = quantize_int8(doc_emb, mn, mx, id_col="docID").select(
+                "vec_id",
+                P.round4(
+                    _cosine(deq, F.array(*[F.lit(v) for v in dq]))
+                ).alias("cscore"),
+            )
+            ranked = sorted((-r["cscore"], r["vec_id"]) for r in coarse.collect())
+            window = {d for _, d in ranked[: k * oversample]}
+            qv = F.array(*[F.lit(float(v)) for v in qv_list])
+            exact = doc_emb.select(
+                "docID", P.round6(_dot(F.col("embedding"), qv)).alias("score")
+            )
+            want = sorted(
+                (-r["score"], r["docID"]) for r in exact.collect() if r["docID"] in window
+            )[:k]
+            got = neural_clause_scores_ann(
+                doc_emb, qv_list, method="quantized_rescore", k=k, oversample=oversample
+            ).collect()
+            assert [(r["docID"], r["score"]) for r in got] == [
+                (d, -s) for s, d in want
+            ], text
+
     def test_k_required_and_unknown_method_rejected(self, doc_emb):
         from neural_search_spark.search.neural import neural_clause_scores_ann
 

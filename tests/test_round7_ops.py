@@ -826,6 +826,72 @@ class TestAnnPQBatch:
             assert rows == sorted(rows), qid
 
 
+class TestPQCodebookLayout:
+    """A codebook trained for another subspace layout raises ValueError on
+    every PQ path instead of scoring wrongly: ``zip_with`` truncates a
+    short subvector, so a mismatched codebook used to return a different
+    top-k without an error."""
+
+    @pytest.fixture(scope="class")
+    def doc_emb(self, spark, tiny_corpus):
+        from neural_search_spark.pipeline.embedding import text_embedding_stub
+
+        return text_embedding_stub(tiny_corpus).cache()
+
+    @pytest.fixture(scope="class")
+    def cb_4x2(self, doc_emb):
+        from neural_search_spark.pipeline.ann import pq_codebooks
+
+        # 8-dim stand-in: 4 subspaces × 2 dims, 8 codes → 32 rows
+        return pq_codebooks(
+            doc_emb, n_sub=4, n_codes=8, subdim=2, id_col="docID"
+        ).cache()
+
+    def _calls(self, doc_emb, cb, **layout):
+        from neural_search_spark.pipeline.ann import (
+            ann_ivfpq_topk,
+            ann_pq_batch_topk,
+            ann_pq_topk,
+        )
+
+        kw = dict(id_col="docID", codebooks=cb, **layout)
+        return [
+            lambda: ann_pq_topk(doc_emb, 30, k=5, **kw).collect(),
+            lambda: ann_ivfpq_topk(doc_emb, 30, k=5, n_lists=4, **kw).collect(),
+            lambda: ann_pq_batch_topk(doc_emb, [30, 14], k=5, **kw).collect(),
+        ]
+
+    def test_subvector_length_mismatch_raises(self, doc_emb, cb_4x2):
+        for call in self._calls(doc_emb, cb_4x2, n_sub=2, n_codes=16, subdim=4):
+            with pytest.raises(ValueError, match="subvector length 2, expected 4"):
+                call()
+
+    def test_subspace_out_of_range_raises(self, doc_emb, cb_4x2):
+        for call in self._calls(doc_emb, cb_4x2, n_sub=2, n_codes=16, subdim=2):
+            with pytest.raises(ValueError, match="over 2 subspaces"):
+                call()
+
+    def test_rows_over_the_bound_raise(self, doc_emb, cb_4x2):
+        for call in self._calls(doc_emb, cb_4x2, n_sub=4, n_codes=4, subdim=2):
+            with pytest.raises(ValueError, match="32 rows, over n_sub × n_codes = 16"):
+                call()
+
+    def test_default_layout_called_as_trained(self, doc_emb, cb_4x2):
+        """Trained with n_sub=4/subdim=2, called with n_sub=2/subdim=4 and
+        the default code count: this call used to return a different top-5
+        without an error."""
+        from neural_search_spark.pipeline.ann import ann_pq_topk
+
+        with pytest.raises(ValueError, match="another layout"):
+            ann_pq_topk(
+                doc_emb, 30, k=5, n_sub=2, subdim=4, id_col="docID", codebooks=cb_4x2
+            ).collect()
+
+    def test_matching_layout_runs(self, doc_emb, cb_4x2):
+        for call in self._calls(doc_emb, cb_4x2, n_sub=4, n_codes=8, subdim=2):
+            assert 0 < len(call()) <= 10
+
+
 class TestMultiProbeLSH:
     """Multi-probe LSH (Lv et al. 2007): Hamming-1 neighbor buckets."""
 

@@ -452,9 +452,9 @@ def _doc_ivf_artifacts(spark: SparkSession, sf_dir: str):
     probe."""
     emb = _doc_embeddings(spark, sf_dir)
     cents = ivf_centroids(emb, n_lists=8, id_col="docID", vec_col="embedding").cache()
-    # clustered by list_id before caching, the layout of the 100 TB
-    # table: parquet written partitioned by list_id, where dynamic
-    # partition pruning on the broadcast probe join skips unprobed lists
+    # clustered by list_id before caching: the probe's literal isin
+    # predicate then prunes whole cached batches (at 100 TB: parquet
+    # written partitioned by list_id, probe prunes directories)
     asg = (
         ivf_assign(emb, cents, id_col="docID", vec_col="embedding")
         .repartition(8, "list_id")

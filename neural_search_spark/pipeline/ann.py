@@ -7,16 +7,17 @@ the dense clause's ``knn_method`` (``search/neural.py``):
 - probe: the candidate rows — the whole table (:func:`cosine_topk`, the
   int8 and PQ paths), the query's LSH sign buckets (:func:`ann_lsh_topk`),
   or the ``nprobe`` IVF lists nearest the query by (cosine desc, list_id
-  asc), broadcast-joined on ``list_id`` (:func:`_probed`). At 100 TB the
-  table is written partitioned by ``list_id``, and dynamic partition
-  pruning cuts the scan to nprobe/n_lists of the data.
-- coarse window (:func:`_window_rescore`): a cheap score over a compact
+  asc), collected to the driver and applied as a literal ``isin`` on
+  ``list_id`` (:func:`_probed`). At 100 TB the table is written
+  partitioned by ``list_id``, and the literal predicate prunes the scan
+  to nprobe/n_lists of the data.
+- coarse window (:func:`_window`): a cheap score over a compact
   view — int8-dequantized vectors (:func:`_int8_view`) or PQ codes scored
   by ADC from the collected codebooks (:func:`_codebook`) — keeps the
   ``k × oversample`` best rows by (coarse score desc, vec_id asc).
-- exact rescore: the float vectors of the window only, through one
-  broadcast semi-join, scored exactly. Paths without a coarse score
-  score their candidates exactly at once.
+- exact rescore: the float vectors of the window only, read through one
+  broadcast semi-join (:func:`_window`), scored exactly. Paths without a
+  coarse score score their candidates exactly at once.
 
 Dot products are sequential left folds (:func:`_dot`) that sum in the
 DuckDB oracle's order, so scores are bit-identical doubles. The
@@ -73,6 +74,15 @@ def _vectors(emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding")
 def _query_row(vecs: DataFrame, query_id: int) -> DataFrame:
     """(qv): the one-row vector of ``query_id`` in a (vec_id, v) table."""
     return vecs.where(F.col("vec_id") == query_id).select(F.col("v").alias("qv"))
+
+
+def _query_vector(vecs: DataFrame, query_id: int) -> list[float]:
+    """The float vector of ``query_id`` in a (vec_id, v) table, fetched to
+    the driver (one row); ValueError when the id is not in the table."""
+    row = _query_row(vecs, query_id).head()
+    if row is None:
+        raise ValueError(f"query id {query_id} is not in the table")
+    return [float(x) for x in row[0]]
 
 
 def _query_rows(vecs: DataFrame, ids: list[int]) -> DataFrame:
@@ -213,27 +223,25 @@ def _ivf_tables(
     return cents, asg
 
 
-def _probed(
-    rows: DataFrame,
-    cents: DataFrame,
-    qv,
-    nprobe: int,
-    q: DataFrame | None = None,
-) -> DataFrame:
-    """The ``rows`` (keyed by ``list_id``) of the ``nprobe`` lists nearest
-    the query by (cosine(centroid, query) desc, list_id asc). ``qv`` is the
-    query vector: a literal column, or ``"qv"`` of the one-row frame ``q``.
-    Centroids are means, not unit vectors, so the probe ranks by the full
-    cosine — the expression the oracle twins recompute. The probe set is
-    broadcast-joined, never collected to the driver."""
-    if q is not None:
-        cents = cents.crossJoin(F.broadcast(q))
-    probe = (
-        cents.orderBy(F.desc(_cosine("centroid", qv)), F.asc("list_id"))
+def _probed(rows: DataFrame, cents: DataFrame, qv, nprobe: int) -> DataFrame:
+    """The ``rows`` (keyed by ``list_id``) of the ``nprobe`` lists of
+    ``cents`` nearest the query ``qv`` (a literal array column) by
+    (cosine(centroid, qv) desc, list_id asc). Centroids are means, not
+    unit vectors, so the probe ranks by the full cosine — the expression
+    the oracle twins recompute. Probe-list selection is driver-side
+    (O(nprobe) rows — every IVF system picks probe lists at the
+    coordinator): the resulting LITERAL isin predicate statically prunes
+    the assignment table — cached-batch pruning here, parquet list_id
+    partition pruning at 100 TB — which a join-shaped restriction cannot
+    do."""
+    ids = [
+        r["list_id"]
+        for r in cents.orderBy(F.desc(_cosine("centroid", qv)), F.asc("list_id"))
         .limit(int(nprobe))
         .select("list_id")
-    )
-    return rows.join(F.broadcast(probe), "list_id")
+        .collect()
+    ]
+    return rows.where(F.col("list_id").isin(ids))
 
 
 def ann_ivf_topk(
@@ -260,8 +268,14 @@ def ann_ivf_topk(
     time, queries only probe); derived on the fly when omitted.
     """
     cents, asg = _ivf_tables(emb, centroids, assigned, n_lists, id_col, vec_col)
-    q = _query_row(_vectors(emb, id_col, vec_col), query_id)
-    return _top(_cosine_to(_probed(asg, cents, "qv", nprobe, q), q, query_id), k)
+    e = _vectors(emb, id_col, vec_col)
+    qv = F.array(*[F.lit(x) for x in _query_vector(e, query_id)])
+    return _top(
+        _probed(asg, cents, qv, nprobe)
+        .where(F.col("vec_id") != query_id)
+        .select("vec_id", P.round4(_cosine("v", qv)).alias("score")),
+        k,
+    )
 
 
 def ann_ivf_batch_topk(
@@ -356,18 +370,10 @@ def _int8_view(emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding
     return view, dequantize
 
 
-def _window_rescore(
-    coarse: DataFrame,
-    k: int,
-    oversample: int,
-    exact: DataFrame,
-    score: "F.Column",
-    q: DataFrame | None = None,
-) -> DataFrame:
-    """(vec_id, score): the ``k × oversample`` best ``coarse`` (vec_id,
-    cscore) rows by (cscore desc, vec_id asc), rescored exactly. ``exact``
-    is the (vec_id, v) float table and ``score`` the exact score over ``v``
-    (and over ``qv`` of the one-row query ``q``, when given). Only the
+def _window(coarse: DataFrame, k: int, oversample: int, exact: DataFrame) -> DataFrame:
+    """The rows of ``exact`` (the (vec_id, v) float table) in the
+    ``k × oversample`` best ``coarse`` (vec_id, cscore) rows by (cscore
+    desc, vec_id asc) — the window the exact score rescores. Only the
     window's float rows are read: a broadcast semi-join, so the float
     table is never fully read at query time."""
     window = (
@@ -375,10 +381,7 @@ def _window_rescore(
         .limit(int(k) * int(oversample))
         .select("vec_id")
     )
-    rows = exact.join(F.broadcast(window), "vec_id", "semi")
-    if q is not None:
-        rows = rows.crossJoin(F.broadcast(q))
-    return rows.select("vec_id", score.alias("score"))
+    return exact.join(F.broadcast(window), "vec_id", "semi")
 
 
 def _batch_rescore(vecs: DataFrame, window: DataFrame, ids: list[int], k: int) -> DataFrame:
@@ -434,10 +437,8 @@ def ann_quantized_rescore_topk(
     d, _ = _int8_view(emb, id_col, vec_col)
     coarse = _cosine_to(d, _query_row(d, query_id), query_id, "cscore")
     e = _vectors(emb, id_col, vec_col)
-    q = _query_row(e, query_id)
-    return _top(
-        _window_rescore(coarse, k, oversample, e, P.round4(_cosine("v", "qv")), q), k
-    )
+    window = _window(coarse, k, oversample, e)
+    return _top(_cosine_to(window, _query_row(e, query_id), query_id), k)
 
 
 def ann_quantized_batch_topk(
@@ -609,7 +610,6 @@ def _fold_dot(a: list[float], b: list[float]) -> float:
     return acc
 
 
-
 def _code_pos_exprs(
     cb: dict[tuple[int, int], list[float]],
     n_sub: int,
@@ -644,7 +644,6 @@ def _codes_by_sub(cb: dict[tuple[int, int], list[float]], n_sub: int) -> list[li
     """Per subspace, the trained code ids ascending — the shared ordering
     every position column / literal lookup array is built in."""
     return [sorted(c for (m2, c) in cb if m2 == mm) for mm in range(n_sub)]
-
 
 
 def pq_encode(
@@ -707,20 +706,6 @@ def _adc_lookup(
         adot = pd if adot is None else (adot + pd)
         an2 = pn if an2 is None else (an2 + pn)
     return P.round4(adot / (F.lit(qnorm) * F.sqrt(an2)))
-
-
-def _adc_score(
-    cb: dict[tuple[int, int], list[float]],
-    qv: list[float],
-    n_sub: int,
-    subdim: int,
-    stored: bool = False,
-) -> "F.Column":
-    """The round4 ADC coarse score of one query: over the stored ``pos``
-    code column (``stored``, see :func:`pq_encode`) or over codes encoded
-    inline from the raw vector column ``v``."""
-    positions = _stored_positions(cb, n_sub) if stored else _code_pos_exprs(cb, n_sub, subdim)
-    return _adc_lookup(cb, qv, positions, subdim)
 
 
 def _codebook(
@@ -799,17 +784,15 @@ def ann_pq_topk(
     """
     cb = _codebook(emb, codebooks, n_sub, n_codes, subdim, id_col, vec_col)
     e = _vectors(emb, id_col, vec_col)
-    q = _query_row(e, query_id)
-    qv = [float(x) for x in q.head()[0]]
-    stored = codes is not None
-    coarse = (
-        (codes if stored else e)
-        .where(F.col("vec_id") != query_id)
-        .select("vec_id", _adc_score(cb, qv, n_sub, subdim, stored).alias("cscore"))
+    q, qv = _query_row(e, query_id), _query_vector(e, query_id)
+    if codes is not None:
+        cand, positions = codes, _stored_positions(cb, n_sub)
+    else:
+        cand, positions = e, _code_pos_exprs(cb, n_sub, subdim)
+    coarse = cand.where(F.col("vec_id") != query_id).select(
+        "vec_id", _adc_lookup(cb, qv, positions, subdim).alias("cscore")
     )
-    return _top(
-        _window_rescore(coarse, k, oversample, e, P.round4(_cosine("v", "qv")), q), k
-    )
+    return _top(_cosine_to(_window(coarse, k, oversample, e), q, query_id), k)
 
 
 def ann_ivfpq_topk(
@@ -854,17 +837,17 @@ def ann_ivfpq_topk(
     cents, asg = _ivf_tables(emb, centroids, assigned, n_lists, id_col, vec_col)
     cb = _codebook(emb, codebooks, n_sub, n_codes, subdim, id_col, vec_col)
     e = _vectors(emb, id_col, vec_col)
-    q = _query_row(e, query_id)
-    qv = [float(x) for x in q.head()[0]]
-    stored = codes is not None and "list_id" in codes.columns
+    q, qv = _query_row(e, query_id), _query_vector(e, query_id)
+    if codes is not None and "list_id" in codes.columns:
+        cand, positions = codes, _stored_positions(cb, n_sub)
+    else:
+        cand, positions = asg, _code_pos_exprs(cb, n_sub, subdim)
     coarse = (
-        _probed(codes if stored else asg, cents, "qv", nprobe, q)
+        _probed(cand, cents, F.array(*[F.lit(x) for x in qv]), nprobe)
         .where(F.col("vec_id") != query_id)
-        .select("vec_id", _adc_score(cb, qv, n_sub, subdim, stored).alias("cscore"))
+        .select("vec_id", _adc_lookup(cb, qv, positions, subdim).alias("cscore"))
     )
-    return _top(
-        _window_rescore(coarse, k, oversample, e, P.round4(_cosine("v", "qv")), q), k
-    )
+    return _top(_cosine_to(_window(coarse, k, oversample, e), q, query_id), k)
 
 
 def ann_pq_batch_topk(

@@ -157,7 +157,7 @@ def neural_clause_scores_ann(
     _stats.record_event("neural_query_against_knn_requests")
     qv = F.array(*[F.lit(float(v)) for v in query_vector])
     docs = ann._vectors(doc_embeddings, "docID", vec_col)
-    exact = P.round6(ann._dot("v", qv))
+    exact = P.round6(ann._dot("v", qv)).alias("score")
     if method in ("ivf", "ivfpq"):
         cents, asg = ann._ivf_tables(
             doc_embeddings, centroids, assigned,
@@ -167,7 +167,7 @@ def neural_clause_scores_ann(
             asg, cents, qv, nprobe if nprobe is not None else P.IVF_NPROBE
         )
     if method == "ivf":
-        scored = probed.select("vec_id", exact.alias("score"))
+        scored = probed.select("vec_id", exact)
     elif method == "quantized_rescore":
         # both sides through the same global-interval int8 quantizer; the
         # 4-dp dequantized cosine cuts the window, the round6 dot of the
@@ -175,7 +175,7 @@ def neural_clause_scores_ann(
         view, dequantize = ann._int8_view(doc_embeddings, "docID", vec_col)
         cqv = F.array(*[F.lit(v) for v in dequantize(query_vector)])
         coarse = view.select("vec_id", P.round4(ann._cosine("v", cqv)).alias("cscore"))
-        scored = ann._window_rescore(coarse, k, oversample, docs, exact)
+        scored = ann._window(coarse, k, oversample, docs).select("vec_id", exact)
     elif method == "ivfpq":
         dim = len(query_vector)
         if dim % int(pq_m):
@@ -184,9 +184,12 @@ def neural_clause_scores_ann(
         cb = ann._codebook(
             doc_embeddings, codebooks, int(pq_m), int(pq_codes), subdim, "docID", vec_col
         )
-        cscore = ann._adc_score(cb, [float(v) for v in query_vector], int(pq_m), subdim)
+        cscore = ann._adc_lookup(
+            cb, [float(v) for v in query_vector], ann._code_pos_exprs(cb, int(pq_m), subdim),
+            subdim,
+        )
         coarse = probed.select("vec_id", cscore.alias("cscore"))
-        scored = ann._window_rescore(coarse, k, oversample, docs, exact)
+        scored = ann._window(coarse, k, oversample, docs).select("vec_id", exact)
     else:
         raise ValueError(f"unknown knn_method {method!r}")
     scored = scored.withColumnRenamed("vec_id", "docID")

@@ -217,6 +217,20 @@ def test_ann_ivf_full_probe_equals_exact(vecs):
     assert ivf == exact
 
 
+def test_single_query_ann_raises_on_a_missing_query_id(vecs):
+    """The single-query paths that fetch the query vector to the driver
+    name the missing id instead of failing on a None row."""
+    from neural_search_spark.pipeline.ann import ann_ivf_topk, ann_ivfpq_topk, ann_pq_topk
+
+    for call in (
+        lambda: ann_ivf_topk(vecs, 999, k=5, n_lists=4, nprobe=2),
+        lambda: ann_pq_topk(vecs, 999, k=5, n_codes=4),
+        lambda: ann_ivfpq_topk(vecs, 999, k=5, n_lists=4, n_codes=4),
+    ):
+        with pytest.raises(ValueError, match="query id 999 is not in the table"):
+            call().collect()
+
+
 def test_lang_id(spark):
     from neural_search_spark.pipeline.textstats import lang_id
 

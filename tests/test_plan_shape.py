@@ -357,23 +357,24 @@ def test_one_ann_pipeline_in_the_library():
     """Static guard: every ANN stage is written once, in ``pipeline/ann.py``
     (probe, int8 view, codebook load, coarse window plus exact rescore),
     and the dense clause's ``knn_method`` (``search/neural.py``) only calls
-    it: it collects nothing to the driver and spells no int8 round trip."""
+    it: it collects nothing itself and spells no int8 round trip."""
     import pathlib
 
     root = pathlib.Path(__file__).resolve().parent.parent
     lib = root / "neural_search_spark"
     neural = (lib / "search" / "neural.py").read_text()
     ann = (lib / "pipeline" / "ann.py").read_text()
-    assert ".collect(" not in neural
+    assert ".collect(" not in neural and ".isin(" not in neural
     for spelling in ("quantization_stats(", "quantize_int8(", '"qvec"', "math.floor(", "* scale"):
         assert spelling not in neural, spelling
     assert ann.count("quantization_stats(") == 2  # its definition and one call
     assert ann.count('F.col("qvec")') == 1  # one dequantize
     assert ann.count('_cosine("centroid"') == 1  # one probe
+    assert ann.count('F.col("list_id").isin(') == 1  # one literal probe predicate
     assert ann.count('"semi"') == 1  # one exact-rescore semi-join
-    # three driver collects: the quantization interval, the codebook rows
-    # and the batch PQ query vectors
-    assert ann.count(".collect()") == 3
+    # four driver collects: the quantization interval, the probe ids, the
+    # codebook rows and the batch PQ query vectors
+    assert ann.count(".collect()") == 4
     assert ann.count("codebooks.collect()") == 1
     # the (m, code) -> centroid table is built in one place, entry included
     srcs = [p.read_text() for p in lib.rglob("*.py")] + [(root / "__spark_entry__.py").read_text()]

@@ -1506,22 +1506,20 @@ def q_hybrid_agg_significant_text(spark: SparkSession, sf_dir: str) -> DataFrame
     """significant_text under hybrid (§2.7): TERMS over-represented in the
     hit set vs the whole index (JLH, like significant_terms but over the
     analyzed text) — fg counts from the cached postings semi-joined to
-    the hit set, bg counts one vocabulary-sized agg over the same cached
-    postings, 1-row fg-total broadcast."""
+    the hit set, bg counts the same rows' ``ndoc`` (the term's document
+    count over the corpus), 1-row fg-total broadcast."""
     eng = _engine(spark, sf_dir)
     hits = _hybrid_raw(spark, sf_dir).select("docID")
     fg = (
         eng.postings.join(hits, "docID", "semi")
         .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("doc_count"))
+        .agg(F.count(F.lit(1)).alias("doc_count"), F.max("ndoc").alias("bg_count"))
     )
     fgt = hits.agg(F.count(F.lit(1)).cast("double").alias("_fgt"))
-    bg = eng.postings.groupBy("term").agg(F.count(F.lit(1)).alias("bg_count"))
     fgp = F.col("doc_count").cast("double") / F.col("_fgt")
     bgp = F.col("bg_count").cast("double") / F.lit(float(eng.stats.n_docs))
     return (
-        fg.join(bg, "term")
-        .crossJoin(F.broadcast(fgt))
+        fg.crossJoin(F.broadcast(fgt))
         .where(fgp > bgp)
         .select(
             "term",

@@ -48,6 +48,12 @@ N_BUCKETS = 64
 MAX_EXPANSIONS = 50
 
 
+def _doc_freqs(rows: DataFrame) -> DataFrame:
+    """``(term, ndoc)`` over position rows, one per (term, doc): position
+    rows carry no ``ndoc``, so the phrase's df is counted from them."""
+    return rows.groupBy("term").agg(F.count("*").alias("ndoc"))
+
+
 def _bucket_col(term_col) -> "F.Column":
     """hash32(term) % N_BUCKETS — the same md5-prefix hash32 contract as
     pipeline/params.py, so any engine (or the oracle) can re-derive the
@@ -182,7 +188,7 @@ class PositionalIndex:
         rows, verified = self._phrase_freqs([(t,) for t in fixed] + [tuple(exp)])
         # df over the fixed terms only: the open slot carries no weight
         rows_f = rows.where(F.col("term").isin(sorted(set(fixed))))
-        return phrase_scores(verified, self.doclens, self.stats, rows_f, fixed, k1, b)
+        return phrase_scores(verified, self.doclens, self.stats, _doc_freqs(rows_f), fixed, k1, b)
 
     def match_phrase_topk(self, phrase: str, k: int = 10) -> DataFrame:
         return topk(self.match_phrase(phrase), k)
@@ -202,4 +208,4 @@ class PositionalIndex:
         if not terms:
             return local_table(self.spark, [], "docID long, score double")
         rows, verified = self._phrase_freqs([(t,) for t in terms], slop)
-        return phrase_scores(verified, self.doclens, self.stats, rows, terms, k1, b)
+        return phrase_scores(verified, self.doclens, self.stats, _doc_freqs(rows), terms, k1, b)

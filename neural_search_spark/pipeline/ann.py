@@ -32,7 +32,7 @@ import math
 from pyspark.sql import DataFrame, Window, functions as F
 
 from neural_search_spark.pipeline import params as P
-from neural_search_spark.session import top_per_key
+from neural_search_spark.session import local_table, top_per_key
 
 
 def _dot(a, b) -> "F.Column":
@@ -888,6 +888,8 @@ def ann_pq_batch_topk(
             f"{id_col} is not unique"
         )
     qvs = {int(r["qid"]): [float(x) for x in r["qv"]] for r in rows}
+    if not qvs:  # no query id is in the table: no rows, as the int8 twin
+        return local_table(emb.sparkSession, [], "qid long, vec_id long, score double")
     if codes is not None:
         enc, shared = codes.select("vec_id", "pos"), _stored_positions(cb, n_sub)
     else:
@@ -905,6 +907,7 @@ def ann_pq_batch_topk(
             _adc_lookup(cb, qvs[qid], shared, subdim).alias("cscore"),
         )
         for qid in ids
+        if qid in qvs  # an id not in the table has no rows
     ]
     coarse = (
         enc.select("vec_id", F.explode(F.array(*structs)).alias("s"))

@@ -20,9 +20,11 @@ Plan shape (scale notes):
   row carries its doc's quantized length and its term's corpus-wide
   document count (Lucene reads docFreq from the terms dictionary and
   norms from the index), computed once when the postings are built.
+- the postings are hash-partitioned by ``docID``, one partition per core
+  (a partition ≈ a shard of the reference: it holds all of its docs' rows).
 - a clause is a ``term IN (...)`` filter on the postings, then one
-  ``groupBy(docID)`` sum of ``idf(ndoc) · tfNorm(tf, dlq)``: one shuffle
-  over the query terms' rows only, no broadcast and no join.
+  ``groupBy(docID)`` sum of ``idf(ndoc) · tfNorm(tf, dlq)``: each
+  partition scores its own docs, with no shuffle, no broadcast and no join.
 
 Tie-break on equal scores is docID ascending — the reference's
 coordinator merge comparator (``processor/combination/ScoreCombiner.java:43-56``).
@@ -93,7 +95,15 @@ def bm25_postings(corpus: DataFrame, text_col: str, id_col: str) -> DataFrame:
     row per distinct (doc, term), carrying everything a BM25 clause reads.
     ``dlq`` is quantized once per doc, before the explode; ``ndoc`` is the
     term's document count over the whole corpus, one ``count(*) over
-    (partition by term)`` when the postings are built."""
+    (partition by term)`` when the postings are built.
+
+    Layout: hash-partitioned by ``docID``, one partition per core
+    (``defaultParallelism``). The ``ndoc`` window leaves its rows placed
+    by term, so one more exchange at build time places every doc's rows
+    in one partition; a clause's ``groupBy(docID)`` (and any docID join
+    or ``(…, docID)`` aggregation) over the cached rows then needs no
+    query-time shuffle. More partitions than cores only adds tasks per
+    query."""
     docs = corpus.select(
         F.col(id_col).alias("docID"), term_freqs(text_col).alias("_tf")
     ).withColumn("dlq", quantize_length_col("_tf.dl"))
@@ -101,7 +111,7 @@ def bm25_postings(corpus: DataFrame, text_col: str, id_col: str) -> DataFrame:
     return rows.select(
         "docID", "term", "tf", "dlq",
         F.count(F.lit(1)).over(Window.partitionBy("term")).alias("ndoc"),
-    )
+    ).repartition(corpus.sparkSession.sparkContext.defaultParallelism, "docID")
 
 
 def tf_norm_col(tf, stats: CorpusStats, k1: float = K1, b: float = B) -> "F.Column":
@@ -119,7 +129,7 @@ def phrase_scores(
     verified: DataFrame,
     doclens: DataFrame,
     stats: CorpusStats,
-    term_docs: DataFrame,
+    doc_freqs: DataFrame,
     weight_terms: list[str],
     k1: float = K1,
     b: float = B,
@@ -130,16 +140,15 @@ def phrase_scores(
         score = (Σ_j idf(weight_terms[j])) · tfNorm(ptf, dlq)
 
     The idf sum runs over the phrase *positions*, duplicates included
-    (one ``TermStatistics`` per position). ``term_docs`` holds one row per
-    (term, doc) of the phrase's terms; its per-term count is the
-    index-wide document frequency. ``doclens`` supplies ``dlq``. Every
-    positional query (scan or index ``match_phrase``,
-    ``match_phrase_prefix``, ``span_near``) scores through here."""
-    dfreq = term_docs.groupBy("term").agg(F.count("*").alias("ndoc"))
+    (one ``TermStatistics`` per position). ``doc_freqs`` holds one
+    ``(term, ndoc)`` row per weighted term: its index-wide document
+    frequency. ``doclens`` supplies ``dlq``. Every positional query (scan
+    or index ``match_phrase``, ``match_phrase_prefix``, ``span_near``)
+    scores through here."""
     pos_df = F.broadcast(
         local_table(verified.sparkSession, list(enumerate(weight_terms)), "pos int, term string")
     )
-    qidf = pos_df.join(F.broadcast(dfreq), "term").agg(
+    qidf = pos_df.join(F.broadcast(doc_freqs), "term").agg(
         F.sum(idf_col(stats.n_docs, F.col("ndoc"))).alias("qidf")
     )
     tf_norm = tf_norm_col(F.col("ptf").cast("double"), stats, k1, b)
@@ -164,9 +173,10 @@ def bm25_clause_scores(
 
     ``postings`` are :func:`bm25_postings` rows ``(docID, term, tf, dlq,
     ndoc)``. The plan is a ``term IN (terms)`` filter, the optional
-    candidate semi-join, and one ``groupBy(docID)`` sum: one shuffle, no
-    broadcast, no join. ``candidate_docs`` (optional, one ``docID``
-    column) restricts *membership* only: ``ndoc`` was counted over the
+    candidate semi-join, and one ``groupBy(docID)`` sum: over the cached
+    docID-partitioned postings, no shuffle, no broadcast, no join.
+    ``candidate_docs`` (optional, one ``docID`` column) restricts
+    *membership* only: ``ndoc`` was counted over the
     whole corpus, so a pushed filter never changes idf/avgdl
     (``HybridQueryBuilder.java:107-122`` pushes filters into clauses;
     Lucene stats stay index-wide).
@@ -279,7 +289,8 @@ def bm25_batch_scores(
     same :func:`bm25_postings` rows.
 
     Scale shape: the query table broadcasts (it is query-log-sized, not
-    corpus-sized); postings shuffle once keyed by (qid, docID). A term
+    corpus-sized); the (qid, docID) aggregation runs inside each docID
+    partition of the postings, with no shuffle. A term
     shared by q queries fans its postings rows out q times — that IS the
     semantics (each query must see the term's postings)."""
     pairs = sorted(
@@ -401,7 +412,9 @@ def match_phrase_scores(
         )
         .where(F.col("ptf") > 0)
     )
-    return phrase_scores(verified, doclens, stats, matched, terms, k1, b)
+    # every postings row carries its term's corpus-wide ndoc
+    doc_freqs = matched.select("term", "ndoc").distinct()
+    return phrase_scores(verified, doclens, stats, doc_freqs, terms, k1, b)
 
 
 def multi_match_scores(
@@ -798,11 +811,12 @@ class BM25Engine:
 
     @property
     def term_dict(self) -> DataFrame:
-        """Distinct-term dictionary (one row per vocabulary term) — the
-        expansion target for prefix/fuzzy rewrites (Lucene's terms dict).
-        Vocabulary-sized, so cached whenever the engine is."""
+        """Distinct-term dictionary ``(term, ndoc)``, one row per vocabulary
+        term with its document count — the expansion target for
+        prefix/fuzzy rewrites and the suggester's frequencies (Lucene's
+        terms dict). Vocabulary-sized, so cached whenever the engine is."""
         if self._term_dict is None:
-            td = self.postings.select("term").distinct()
+            td = self.postings.select("term", "ndoc").distinct()
             self._term_dict = td.cache() if self._cached else td
         return self._term_dict
 
@@ -991,25 +1005,20 @@ def term_suggest(
     integer-exact ordering, so the cut reproduces across engines).
 
     Scale shape: the dictionary scan is vocabulary-sized (Lucene bounds it
-    with an FST automaton; the term-dict filter is the Spark analog), the
-    frequency lookup a broadcast-pruned postings semi-join over only the
-    surviving candidates."""
+    with an FST automaton; the term-dict filter is the Spark analog), and
+    the frequency is the dictionary row's ``ndoc``: no postings read."""
     from neural_search_spark import stats as _stats
 
     _stats.record_event("term_suggest_requests")
     q = F.lit(text.lower())
-    cand = (
+    return (
         engine.term_dict.where(F.levenshtein(F.col("term"), q) <= int(max_edits))
         .where(F.col("term") != q)
-        .select("term", F.levenshtein(F.col("term"), q).cast("int").alias("distance"))
-    )
-    freqs = (
-        engine.postings.join(F.broadcast(cand.select("term")), "term", "semi")
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).cast("long").alias("freq"))
-    )
-    return (
-        cand.join(freqs, "term")
+        .select(
+            "term",
+            F.levenshtein(F.col("term"), q).cast("int").alias("distance"),
+            F.col("ndoc").alias("freq"),
+        )
         .orderBy(F.col("distance").asc(), F.col("freq").desc(), F.col("term").asc())
         .limit(int(size))
         .select("term", "distance", "freq")

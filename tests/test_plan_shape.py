@@ -392,23 +392,42 @@ def cached_engine(spark):
     return eng
 
 
-def test_match_clause_is_one_aggregation(cached_engine):
-    """A cached engine's ``match`` clause reads df and the quantized doc
-    length off its postings rows: at query time the plan is a filter on
-    the cached postings and one aggregation, with exactly one exchange,
-    no broadcast and no join."""
+def _query_time_exchanges(df) -> list[str]:
+    from tools.plan_audit import query_time_nodes
+
+    return [n for _, n in query_time_nodes(_plan(df)) if n.startswith("Exchange")]
+
+
+def test_match_clause_runs_without_a_shuffle(cached_engine):
+    """A cached engine's postings are hash-partitioned by docID, so a
+    ``match`` clause reads df and the quantized doc length off rows that
+    its own partition holds: at query time the plan is a filter on the
+    cached postings and one aggregation, with no exchange, no broadcast
+    and no join. A ``multi_match`` field's postings plan the same way, and
+    the batch scorer's ``(qid, docID)`` aggregation over its broadcast
+    query table needs no exchange either."""
+    from neural_search_spark.search.bm25 import bm25_batch_scores, bm25_clause_scores
     from tools.plan_audit import query_time_nodes
 
     nodes = [n for _, n in query_time_nodes(_plan(cached_engine.match("table value spark")))]
-    assert sum(n.startswith("Exchange") for n in nodes) == 1, nodes
+    assert not any(n.startswith("Exchange") for n in nodes), nodes
     assert not any("BroadcastExchange" in n or "Join" in n for n in nodes), nodes
     assert any(n.startswith("InMemoryTableScan") for n in nodes), nodes
+    path_postings, _, path_stats = cached_engine.field_artifacts("path")
+    path_postings.count()  # a cache not yet built plans with unknown partitioning
+    assert _query_time_exchanges(bm25_clause_scores(path_postings, path_stats, ["src", "main"])) == []
+    batch = bm25_batch_scores(
+        cached_engine.spark, cached_engine.postings, cached_engine.stats,
+        {1: ["table", "value"], 2: ["spark", "value"]},
+    )
+    assert _query_time_exchanges(batch) == []
 
 
-def test_lexical_hybrid_runs_at_most_four_jobs(spark, cached_engine):
+def test_lexical_hybrid_runs_at_most_two_jobs(spark, cached_engine):
     """A 2-clause lexical ``hybrid_search``, called and collected, runs at
-    most 4 Spark jobs: the clause aggregations and one collect of the
-    depth cuts, then the collect of the local result table."""
+    most 2 Spark jobs: one collect of the clauses' depth cuts (each clause
+    scores its cached partitions in place, no shuffle stage), then the
+    collect of the local result table."""
     from neural_search_spark.search.hybrid import hybrid_search
 
     def request():
@@ -423,7 +442,7 @@ def test_lexical_hybrid_runs_at_most_four_jobs(spark, cached_engine):
         jobs = sc.statusTracker().getJobIdsForGroup("lexical-hybrid-guard")
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert 1 <= len(jobs) <= 4, jobs
+    assert 1 <= len(jobs) <= 2, jobs
 
 
 def test_query_time_nodes_skip_a_cache_built_over_a_cache(cached_engine):

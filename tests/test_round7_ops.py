@@ -825,6 +825,17 @@ class TestAnnPQBatch:
         for qid, rows in per.items():
             assert rows == sorted(rows), qid
 
+    def test_batch_twins_agree_on_a_missing_id(self, spark, emb):
+        """An id that is not in the table gets no rows from either batch
+        twin; the ids that are there keep theirs."""
+        from neural_search_spark.pipeline.ann import ann_pq_batch_topk, ann_quantized_batch_topk
+
+        pq = dict(n_sub=self.N_SUB, n_codes=self.N_CODES, subdim=self.SUBDIM)
+        for ids, want in (([7, 999], {7}), ([999], set())):
+            got_pq = {r["qid"] for r in ann_pq_batch_topk(emb, ids, k=5, **pq).collect()}
+            got_int8 = {r["qid"] for r in ann_quantized_batch_topk(emb, ids, k=5).collect()}
+            assert got_pq == got_int8 == want, ids
+
 
 class TestPQCodebookLayout:
     """A codebook trained for another subspace layout raises ValueError on

@@ -355,7 +355,9 @@ def _artifact(build: Callable) -> Callable:
 
 
 #: the sources whose code writes the /tmp index artifacts
-_BUILD_SOURCES = ("index/builder.py", "index/codec.py", "index/positions.py", "analysis/tokenizer.py")
+_BUILD_SOURCES = (
+    "index/builder.py", "index/codec.py", "index/positions.py", "analysis/tokenizer.py", "search/bm25.py",
+)
 
 
 def _build_tag(sf_dir: str, src_root: str | None = None) -> str:

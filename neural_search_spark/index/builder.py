@@ -6,7 +6,8 @@ Layout written under ``out_dir``:
   ``(term, df, doc_bytes, tf_bytes, blk_last, blk_maxtf, blk_mindlq,
   blk_docend, blk_tfend)`` (parallel block-metadata arrays; see
   :mod:`neural_search_spark.index.codec`).
-- ``doclens/shard=S/*.parquet`` — ``(docID, dl, dlq)`` per doc.
+- ``doclens/shard=S/*.parquet`` — ``(docID, dl, dlq)`` for every docmap
+  doc (a doc with no tokens has ``dl = 0``).
 - ``stats.json`` — ``{n_docs, total_tokens, n_shards, block_size}``.
 - ``manifest.jsonl`` — per-partition lineage: one line per completed unit
   ``{stage, shards, rows, terms, bytes, wall_s}`` — the checkpoint/resume
@@ -53,8 +54,8 @@ from neural_search_spark.index.codec import (
     FORMAT_VERSION,
     encode_posting_list,
 )
-from neural_search_spark.analysis.tokenizer import explode_term_freqs, term_freqs
-from neural_search_spark.search.bm25 import quantize_length_col
+from neural_search_spark.analysis.tokenizer import explode_term_freqs
+from neural_search_spark.search.bm25 import corpus_stats_from_doclens, doc_lengths, doc_term_freqs
 
 POSTINGS_SCHEMA = StructType(
     [
@@ -176,21 +177,22 @@ def _encode_stream_factory(block_size: int):
     return encode_stream
 
 
+def _shard_col(id_col: str, n_shards: int):
+    """``shard = xxhash64(docID) % n_shards``: the salt, a pure function of
+    the doc id."""
+    return F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_shards)).cast("int").alias("shard")
+
+
 def _compact_docs(corpus: DataFrame, n_shards: int, text_col: str, id_col: str) -> DataFrame:
-    """corpus → (docID, shard, _tf, dlq): one row per doc, with the
-    analyzer's ``term_freqs`` struct (tf_map, dl) and the SmallFloat
-    quantized length. Quantized per doc, BEFORE the explode: after it, the
-    same value would be computed once per posting row."""
-    return corpus.select(
-        F.col(id_col).alias("docID"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_shards)).cast("int").alias("shard"),
-        term_freqs(text_col).alias("_tf"),
-    ).withColumn("dlq", quantize_length_col("_tf.dl"))
+    """corpus → (docID, shard, _tf, dl, dlq): one row per doc, the engine's
+    per-doc projection (:func:`neural_search_spark.search.bm25.doc_term_freqs`)
+    plus the shard."""
+    return doc_term_freqs(corpus, text_col, id_col, _shard_col(id_col, n_shards))
 
 
 def _postings_of(compact: DataFrame) -> DataFrame:
     """compact doc rows → (docID, shard, dl, dlq, term, tf)."""
-    return explode_term_freqs(compact, "docID", "shard", F.col("_tf.dl").alias("dl"), "dlq")
+    return explode_term_freqs(compact, "docID", "shard", "dl", "dlq")
 
 
 def raw_postings(corpus: DataFrame, n_shards: int, text_col: str = "content", id_col: str = "docID") -> DataFrame:
@@ -230,11 +232,7 @@ def _docmap(corpus: DataFrame, n_shards: int, text_col: str, id_col: str) -> Dat
         if "content_sha256" in corpus.columns
         else F.sha2(F.col(text_col), 256)
     )
-    return corpus.select(
-        F.col(id_col).alias("docID"),
-        sha.alias("sha"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_shards)).cast("int").alias("shard"),
-    )
+    return corpus.select(F.col(id_col).alias("docID"), sha.alias("sha"), _shard_col(id_col, n_shards))
 
 
 def build_index(
@@ -302,29 +300,19 @@ def build_index(
         if docmap_err:
             raise docmap_err[0]
         t_docmap = time.perf_counter()
-        # doclens: distinct per doc, cheap projection of the same raw rows
-        spark.read.parquet(raw_dir).groupBy("docID", "shard").agg(
-            F.first("dl").alias("dl"), F.first("dlq").alias("dlq")
-        ).select("docID", "dl", "dlq", "shard").repartition(
+        # doclens: the raw rows' tf summed onto every docmap id, so a doc
+        # with no tokens keeps its dl = 0 row
+        doc_ids = spark.read.parquet(os.path.join(out_dir, "docmap")).select("docID", "shard")
+        doc_lengths(spark.read.parquet(raw_dir), doc_ids).repartition(
             n_shards, "shard"
         ).write.partitionBy("shard").mode("overwrite").parquet(
             os.path.join(out_dir, "doclens")
         )
         t_doclens = time.perf_counter()
-        dstats = (
-            spark.read.parquet(os.path.join(out_dir, "doclens"))
-            .agg(F.count("*").alias("n"), F.sum("dl").alias("tot"))
-            .collect()[0]
+        _write_stats(
+            spark, out_dir,
+            {"n_shards": n_shards, "block_size": block_size, "format_version": FORMAT_VERSION},
         )
-        stats = {
-            "n_docs": int(dstats["n"]),
-            "total_tokens": int(dstats["tot"] or 0),
-            "n_shards": n_shards,
-            "block_size": block_size,
-            "format_version": FORMAT_VERSION,
-        }
-        with open(os.path.join(out_dir, "stats.json"), "w") as f:
-            json.dump(stats, f)
         nrows = spark.read.parquet(raw_dir).count()
         _append_manifest(
             out_dir,
@@ -350,6 +338,16 @@ def build_index(
     with open(os.path.join(out_dir, "stats.json")) as f:
         stats = json.load(f)
     stats["build_wall_s"] = round(time.perf_counter() - t0, 3)
+    return stats
+
+
+def _write_stats(spark: SparkSession, out_dir: str, stats: dict) -> dict:
+    """Write ``stats.json``: ``stats`` with ``n_docs``/``total_tokens``
+    reduced from the index's doclens; returns what it wrote."""
+    cs = corpus_stats_from_doclens(spark.read.parquet(os.path.join(out_dir, "doclens")))
+    stats = {**stats, "n_docs": cs.n_docs, "total_tokens": cs.total_tokens}
+    with open(os.path.join(out_dir, "stats.json"), "w") as f:
+        json.dump(stats, f)
     return stats
 
 
@@ -683,32 +681,17 @@ def update_index(
     )
     _swap_shard_partitions(merged_raw, raw_dir, shards, out_dir=out_dir)
 
-    new_doclens = (
-        spark.read.parquet(raw_dir)
-        .where(F.col("shard").isin(shards))
-        .groupBy("docID", "shard")
-        .agg(F.first("dl").alias("dl"), F.first("dlq").alias("dlq"))
-        .select("docID", "dl", "dlq", "shard")
+    # the dirty shards' docmap rows: every doc their doclens must cover
+    merged_map = kept(spark.read.parquet(docmap_dir)).unionByName(
+        new_map.join(F.broadcast(dirty_ids), "docID", "semi")
     )
-    _swap_shard_partitions(new_doclens, doclens_dir, shards, out_dir=out_dir)
+    new_raw_rows = spark.read.parquet(raw_dir).where(F.col("shard").isin(shards))
     _swap_shard_partitions(
-        kept(spark.read.parquet(docmap_dir)).unionByName(
-            new_map.join(F.broadcast(dirty_ids), "docID", "semi")
-        ),
-        docmap_dir,
-        shards,
-        out_dir=out_dir,
+        doc_lengths(new_raw_rows, merged_map.select("docID", "shard")),
+        doclens_dir, shards, out_dir=out_dir,
     )
-
-    dstats = (
-        spark.read.parquet(doclens_dir)
-        .agg(F.count("*").alias("n"), F.sum("dl").alias("tot"))
-        .collect()[0]
-    )
-    stats["n_docs"] = int(dstats["n"])
-    stats["total_tokens"] = int(dstats["tot"] or 0)
-    with open(os.path.join(out_dir, "stats.json"), "w") as f:
-        json.dump(stats, f)
+    _swap_shard_partitions(merged_map, docmap_dir, shards, out_dir=out_dir)
+    stats = _write_stats(spark, out_dir, stats)
 
     _encode_shards(spark, out_dir, raw_dir, shards, stats["block_size"])
     _clear_emptied_postings(spark, out_dir, raw_dir, shards)

@@ -223,26 +223,22 @@ def minhash_near_dups(
     text_col: str = "content",
     id_col: str = "docID",
     threshold: float = P.MINHASH_JACCARD_THRESHOLD,
-    persist: bool = True,
 ) -> DataFrame:
     """MinHash-LSH candidates verified by exact shingle Jaccard.
 
     Result contract (deterministic, oracle-checkable): pairs that share
     >= 1 LSH band AND have exact Jaccard >= threshold.
 
-    ``persist`` (default on) caches the shingle and signature tables:
-    downstream they feed BOTH sides of the band self-join plus the
-    verification joins (up to 5 references), and without a cache Spark
-    re-runs the tokenize+explode+agg lineage per reference. On a cluster
-    run over 100 TB the equivalent move is checkpointing both tables to
+    The shingle and signature tables are persisted: downstream they feed
+    BOTH sides of the band self-join plus the verification joins (up to 5
+    references), and without a cache Spark re-runs the
+    tokenize+explode+agg lineage per reference. On a cluster run over
+    100 TB the equivalent move is checkpointing both tables to
     parquet/Iceberg between stages (same plan cut, spill-safe) — cache is
     the local[n] stand-in.
     """
-    sh = doc_shingles(df, text_col, id_col)
-    sigs = minhash_signatures(sh)
-    if persist:
-        sh = sh.persist()
-        sigs = sigs.persist()
+    sh = doc_shingles(df, text_col, id_col).persist()
+    sigs = minhash_signatures(sh).persist()
     pairs = lsh_candidate_pairs(sigs)
     return verify_jaccard(sh, pairs, threshold).select(
         "docA", "docB", P.round4(F.col("jaccard")).alias("jaccard")
@@ -454,7 +450,6 @@ def simhash_near_dups(
     text_col: str = "content",
     id_col: str = "docID",
     max_hamming: int = P.SIMHASH_MAX_HAMMING,
-    persist: bool = True,
 ) -> DataFrame:
     """(docA, docB, hamming) pairs with 64-bit Hamming <= max_hamming.
 
@@ -463,16 +458,14 @@ def simhash_near_dups(
     equals the brute-force all-pairs answer while shuffling only on band
     keys — 65,536 buckets per band keeps bucket occupancy ~n/65k per band
     value at 100× corpus (the scale fix over the old 8-bit bands).
-    ``persist`` caches the fingerprints feeding both self-join sides (the
+    The fingerprints feeding both self-join sides are persisted (the
     cluster-scale equivalent is a parquet checkpoint)."""
     if max_hamming >= P.SIMHASH_BANDS:
         raise ValueError(
             f"band prefilter is exact only for max_hamming < {P.SIMHASH_BANDS} "
             f"(got {max_hamming}); add bands or verify exhaustively"
         )
-    fp = simhash(df, text_col, id_col)
-    if persist:
-        fp = fp.persist()
+    fp = simhash(df, text_col, id_col).persist()
     bands = simhash_band_rows(fp)
     x, y = bands.alias("x"), bands.alias("y")
     ham = F.bit_count(F.col("x.sim_lo").bitwiseXOR(F.col("y.sim_lo"))) + F.bit_count(
@@ -506,21 +499,18 @@ def ngram_jaccard_pairs(
     text_col: str = "content",
     id_col: str = "docID",
     threshold: float = P.NGRAM_JACCARD_THRESHOLD,
-    persist: bool = True,
 ) -> DataFrame:
     """Exact shingle-Jaccard pairs within a blocking key (e.g. lang).
 
     The blocking key bounds the self-join; at 10^12 scale you'd compose
     this after an LSH prefilter (see minhash_near_dups) rather than rely
-    on blocking alone. ``persist`` caches the shingle table — it feeds
+    on blocking alone. The shingle table is persisted: it feeds
     both self-join sides plus the per-doc size aggregate (3 references),
     and the tokenize+hash lineage would otherwise re-run per reference.
     """
     sh = doc_shingles(df, text_col, id_col).join(
         df.select(F.col(id_col).alias("docID"), F.col(block_col).alias("blk")), "docID"
-    )
-    if persist:
-        sh = sh.persist()
+    ).persist()
     sa = sh.select(F.col("docID").alias("docA"), "sh", "blk")
     sb = sh.select(F.col("docID").alias("docB"), "sh", "blk")
     inter = (

@@ -26,6 +26,16 @@ Plan shape (scale notes):
   ``groupBy(docID)`` sum of ``idf(ndoc) · tfNorm(tf, dlq)``: each
   partition scores its own docs, with no shuffle, no broadcast and no join.
 
+Doc lengths (one rule for both lexical engines, :func:`doc_lengths`): a
+doc's ``dl`` is the sum of its postings' ``tf``, taken over EVERY corpus
+id, so a doc with no tokens keeps a ``dl = 0`` row; ``dlq`` is its
+SmallFloat length and :func:`corpus_stats_from_doclens` the one reducer to
+``n_docs``/``total_tokens``. The DataFrame engine, its per-field
+artifacts, ``build_index`` and ``update_index`` all derive them here.
+DOCUMENTED DEVIATION: every corpus doc counts in ``n_docs``, as the DuckDB
+oracle does; Lucene's ``docCount`` skips docs that have no term in the
+field.
+
 Tie-break on equal scores is docID ascending — the reference's
 coordinator merge comparator (``processor/combination/ScoreCombiner.java:43-56``).
 """
@@ -38,7 +48,6 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from neural_search_spark.analysis.tokenizer import (
     TOKEN_RE,
-    analyzed_tokens,
     explode_term_freqs,
     term_freqs,
     tokenize_text,
@@ -59,17 +68,6 @@ class CorpusStats:
         return self.total_tokens / self.n_docs if self.n_docs else 0.0
 
 
-def quantized_doc_lengths(corpus: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """corpus → (docID, dl, dlq). dl is the analyzer's token count; the
-    SmallFloat quantization runs JVM-side too (bin/shift built-ins), so no
-    step leaves the JVM."""
-    dl = corpus.select(
-        F.col(id_col).alias("docID"),
-        F.size(analyzed_tokens(text_col)).alias("dl"),
-    )
-    return dl.withColumn("dlq", quantize_length_col("dl"))
-
-
 def quantize_length_col(dl_col_name: str):
     """SmallFloat byte4 round-trip as a Spark SQL expression (no UDF; the
     identical string runs on DuckDB for the oracle gate)."""
@@ -78,7 +76,34 @@ def quantize_length_col(dl_col_name: str):
     return F.expr(quantize_length_sql(dl_col_name))
 
 
+def doc_term_freqs(corpus: DataFrame, text_col: str, id_col: str, *keep) -> DataFrame:
+    """corpus → one row per doc ``(docID, *keep, _tf, dl, dlq)``: the
+    analyzer's :func:`term_freqs` struct, its token count and the SmallFloat
+    length, quantized once per doc, BEFORE any explode (after it, the same
+    value would be computed once per posting row)."""
+    return corpus.select(
+        F.col(id_col).alias("docID"), *keep, term_freqs(text_col).alias("_tf")
+    ).withColumn("dl", F.col("_tf.dl")).withColumn("dlq", quantize_length_col("_tf.dl"))
+
+
+def doc_lengths(postings: DataFrame, doc_ids: DataFrame) -> DataFrame:
+    """``(docID, tf)`` postings rows plus one row per corpus doc
+    (``doc_ids``: ``docID`` and any columns to carry, e.g. ``shard``) →
+    ``(docID, dl, dlq, *carried)``. ``dl`` is the sum of the doc's postings'
+    ``tf``; a doc with no postings keeps its row with ``dl = 0``. Every
+    doclens table is derived here, from postings that already exist, so
+    the analyzer never runs a second time per corpus."""
+    dl = postings.groupBy("docID").agg(F.sum("tf").cast("int").alias("dl"))
+    carried = [c for c in doc_ids.columns if c != "docID"]
+    return (
+        doc_ids.join(dl, "docID", "left")
+        .withColumn("dl", F.coalesce(F.col("dl"), F.lit(0)))
+        .select("docID", "dl", quantize_length_col("dl").alias("dlq"), *carried)
+    )
+
+
 def corpus_stats_from_doclens(doclens: DataFrame) -> CorpusStats:
+    """The one reducer from a doclens table to :class:`CorpusStats`."""
     row = doclens.agg(
         F.count("*").alias("n"), F.sum("dl").alias("tot")
     ).collect()[0]
@@ -104,10 +129,7 @@ def bm25_postings(corpus: DataFrame, text_col: str, id_col: str) -> DataFrame:
     or ``(…, docID)`` aggregation) over the cached rows then needs no
     query-time shuffle. More partitions than cores only adds tasks per
     query."""
-    docs = corpus.select(
-        F.col(id_col).alias("docID"), term_freqs(text_col).alias("_tf")
-    ).withColumn("dlq", quantize_length_col("_tf.dl"))
-    rows = explode_term_freqs(docs, "docID", "dlq")
+    rows = explode_term_freqs(doc_term_freqs(corpus, text_col, id_col), "docID", "dlq")
     return rows.select(
         "docID", "term", "tf", "dlq",
         F.count(F.lit(1)).over(Window.partitionBy("term")).alias("ndoc"),
@@ -787,7 +809,7 @@ class BM25Engine:
         self.text_col = text_col
         self.id_col = id_col
         self.postings = bm25_postings(corpus, text_col, id_col)
-        self.doclens = quantized_doc_lengths(corpus, text_col, id_col)
+        self.doclens = self._doclens(self.postings)
         self._stats: CorpusStats | None = None
         self._term_dict: DataFrame | None = None
         self._cached = False
@@ -799,9 +821,17 @@ class BM25Engine:
         """Materialize derived tables once for repeated queries (query-time
         hot path; at scale this is the persisted postings index instead)."""
         self.postings = self.postings.cache()
-        self.doclens = self.doclens.cache()
+        self.doclens = self._doclens(self.postings).cache()
         self._cached = True
         return self
+
+    def _doclens(self, postings: DataFrame) -> DataFrame:
+        """:func:`doc_lengths` of every corpus doc, read off ``postings``."""
+        return doc_lengths(postings, self.corpus.select(F.col(self.id_col).alias("docID")))
+
+    def _kept(self, df: DataFrame) -> DataFrame:
+        """``df``, cached whenever the engine is."""
+        return df.cache() if self._cached else df
 
     @property
     def stats(self) -> CorpusStats:
@@ -816,8 +846,7 @@ class BM25Engine:
         prefix/fuzzy rewrites and the suggester's frequencies (Lucene's
         terms dict). Vocabulary-sized, so cached whenever the engine is."""
         if self._term_dict is None:
-            td = self.postings.select("term", "ndoc").distinct()
-            self._term_dict = td.cache() if self._cached else td
+            self._term_dict = self._kept(self.postings.select("term", "ndoc").distinct())
         return self._term_dict
 
     def field_artifacts(self, field: str) -> tuple[DataFrame, DataFrame, CorpusStats]:
@@ -828,10 +857,8 @@ class BM25Engine:
         if field == self.text_col:
             return self.postings, self.doclens, self.stats
         if field not in self._field_artifacts:
-            p = bm25_postings(self.corpus, field, self.id_col)
-            d = quantized_doc_lengths(self.corpus, field, self.id_col)
-            if self._cached:
-                p, d = p.cache(), d.cache()
+            p = self._kept(bm25_postings(self.corpus, field, self.id_col))
+            d = self._kept(self._doclens(p))
             self._field_artifacts[field] = (p, d, corpus_stats_from_doclens(d))
         return self._field_artifacts[field]
 
@@ -905,23 +932,19 @@ def more_like_this_scores(
     break differently.
 
     Scale shape: the seed side is ONE document's postings (pushed-down
-    docID filter on the postings scan), its df lookup a broadcast
-    semi-join pruned to those terms; the collect fetches
-    ≤ max_query_terms rows. Scoring reuses the standard clause path."""
+    docID filter on the postings scan); each row carries its term's
+    corpus-wide df (``ndoc``), so no df is recounted and nothing joins;
+    the collect fetches ≤ max_query_terms rows. Scoring reuses the
+    standard clause path."""
     from neural_search_spark import stats as _stats
 
     _stats.record_event("mlt_query_requests")
-    seed = engine.postings.where(
-        (F.col("docID") == int(seed_doc)) & (F.col("tf") >= int(min_term_freq))
-    ).select("term", "tf")
-    dfc = (
-        engine.postings.join(F.broadcast(seed.select("term")), "term", "semi")
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("ndoc"))
-    )
     cand = (
-        seed.join(dfc, "term")
-        .where(F.col("ndoc") >= int(min_doc_freq))
+        engine.postings.where(
+            (F.col("docID") == int(seed_doc))
+            & (F.col("tf") >= int(min_term_freq))
+            & (F.col("ndoc") >= int(min_doc_freq))
+        )
         .orderBy(F.col("tf").desc(), F.col("ndoc").asc(), F.col("term").asc())
         .limit(int(max_query_terms))
     )

@@ -42,9 +42,6 @@ from pyspark.sql import DataFrame, functions as F, Window
 from neural_search_spark.search.bm25 import term_score_col, topk
 from neural_search_spark.session import local_table, top_per_key
 
-# HybridQueryBuilder.java:67 — default; live value comes from the
-# settings surface ("hybrid_max_sub_queries")
-MAX_SUB_QUERIES = 5
 MIN_SCORE = 0.001  # MinMaxScoreNormalizationTechnique.java MIN_SCORE
 MAX_SCORE = 1.0  # MinMaxScoreNormalizationTechnique.java MAX_SCORE
 
@@ -251,6 +248,16 @@ def hybrid_raw_sum(clause_scores: list[DataFrame]) -> DataFrame:
     return long.groupBy("docID").agg(F.sum("score").alias("score"))
 
 
+def check_sub_query_count(n: int) -> None:
+    """Raise unless ``1 ≤ n ≤`` the live ``hybrid_max_sub_queries`` setting
+    (``HybridQueryBuilder.java:67``, default 5)."""
+    from neural_search_spark import settings
+
+    max_sub = int(settings.get("hybrid_max_sub_queries"))
+    if not 1 <= n <= max_sub:
+        raise ValueError(f"hybrid query supports 1..{max_sub} sub-queries")
+
+
 def hybrid_batch_topk(
     engine,
     batches: dict[int, list[list[str]]],
@@ -274,13 +281,9 @@ def hybrid_batch_topk(
     Scale shape: query tables broadcast; the corpus-sized work is one
     postings join + one (qid, clause, docID) aggregation; everything
     after the depth cut is bounded by Q × clauses × depth rows."""
-    from neural_search_spark import settings
-
-    max_sub = int(settings.get("hybrid_max_sub_queries"))
     rows = []
     for qid, clauses in sorted(batches.items()):
-        if not 1 <= len(clauses) <= max_sub:
-            raise ValueError(f"hybrid query supports 1..{max_sub} sub-queries")
+        check_sub_query_count(len(clauses))
         for ci, terms in enumerate(clauses):
             for t in sorted(set(terms)):
                 rows.append((int(qid), ci, t))
@@ -359,12 +362,8 @@ def hybrid_search(
     ``lower_bounds``/``upper_bounds``: per-clause min_max bounds, one entry
     (or None) per clause (``MinMaxScoreNormalizationTechnique.java:52-64``).
     """
-    from neural_search_spark import settings
-
     n = len(clause_scores)
-    max_sub = int(settings.get("hybrid_max_sub_queries"))
-    if not 1 <= n <= max_sub:
-        raise ValueError(f"hybrid query supports 1..{max_sub} sub-queries")
+    check_sub_query_count(n)
     validate_technique_pair(normalization, combination)
     if depth is None or depth < 1:
         # the driver collects clauses × depth rows: bounded only by a cut

@@ -39,7 +39,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame
 
-from neural_search_spark.search.hybrid import MAX_SUB_QUERIES, hybrid_search
+from neural_search_spark.search.hybrid import check_sub_query_count, hybrid_search
 from neural_search_spark.session import local_table
 
 LEXICAL_TYPES = ("match", "term", "match_phrase")
@@ -166,8 +166,6 @@ def _score_clause_impl(engine, clause: dict, filter_expr: str | None) -> DataFra
     (ctype, body), = clause.items()
     if ctype not in CLAUSE_TYPES:
         raise ValueError(f"unsupported clause type: {ctype}")
-    if ctype == "hybrid":  # unreachable via CLAUSE_TYPES; kept for clarity
-        raise ValueError("hybrid query cannot be nested inside hybrid")
     if ctype == "bool":
         # OpenSearch-core bool composition as a hybrid sub-clause
         # (HybridQueryIT.java:139-141 builds from arbitrary QueryBuilders).
@@ -727,8 +725,7 @@ def parse_hybrid_spec(
         # clauses BEFORE scoring (NeuralSparseTwoPhaseProcessor.java)
         spec = apply_two_phase_processor(spec, two_phase_cfg, k)
     clauses = spec.get("queries", [])
-    if not 1 <= len(clauses) <= MAX_SUB_QUERIES:
-        raise ValueError(f"hybrid query supports 1..{MAX_SUB_QUERIES} sub-queries")
+    check_sub_query_count(len(clauses))
     for clause in clauses:
         (ctype, _), = clause.items()
         if ctype == "hybrid":

@@ -36,7 +36,7 @@ from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from neural_search_spark.analysis.tokenizer import tokenize_text
 from neural_search_spark.index.codec import decode_posting_list
-from neural_search_spark.search.bm25 import B, K1
+from neural_search_spark.search.bm25 import B, K1, CorpusStats
 from neural_search_spark.session import local_table
 
 SCORE_SCHEMA = StructType(
@@ -171,12 +171,9 @@ class BlockMaxIndex:
         with open(os.path.join(index_dir, "stats.json")) as f:
             self.stats = json.load(f)
         check_format_version(self.stats, index_dir)  # BWC gate: refuse stale
+        self.corpus_stats = CorpusStats(self.stats["n_docs"], self.stats["total_tokens"])
         self.postings = spark.read.parquet(os.path.join(index_dir, "postings"))
         self.doclens = spark.read.parquet(os.path.join(index_dir, "doclens"))
-
-    @property
-    def avgdl(self) -> float:
-        return self.stats["total_tokens"] / self.stats["n_docs"]
 
     def cache(self) -> "BlockMaxIndex":
         self.postings = self.postings.cache()
@@ -218,9 +215,9 @@ class BlockMaxIndex:
         terms = [t for t in terms if t in dfs]
         if not terms:
             return local_table(self.spark, [], SCORE_SCHEMA)
-        n = self.stats["n_docs"]
+        n = self.corpus_stats.n_docs
         idf = {t: math.log(1.0 + (n - dfs[t] + 0.5) / (dfs[t] + 0.5)) for t in terms}
-        kernel = _shard_kernel_factory(idf, self.avgdl, k, k1, b, prune)
+        kernel = _shard_kernel_factory(idf, self.corpus_stats.avgdl, k, k1, b, prune)
         matched = self.postings.where(F.col("term").isin(terms))
         local = (
             matched.groupBy("shard")

@@ -14,7 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from neural_search_spark.corpus import synthetic_code_corpus
-from neural_search_spark.index.builder import build_index, read_manifest
+from neural_search_spark.index.builder import build_index, read_manifest, update_index
 from neural_search_spark.search.bm25 import BM25Engine, topk
 from neural_search_spark.search.wand import BlockMaxIndex
 
@@ -61,6 +61,33 @@ def test_stats_match_corpus(spark, index_dir, engine):
     idx = BlockMaxIndex(spark, index_dir)
     assert idx.stats["n_docs"] == engine.stats.n_docs
     assert idx.stats["total_tokens"] == engine.stats.total_tokens
+
+
+def test_token_less_docs_count_in_every_lexical_artifact(spark, tmp_path):
+    """A doc with no tokens ("" or punctuation only) keeps a ``dl = 0``
+    doclens row in the engine, the built index and the updated index, so
+    all three agree on ``n_docs``/``total_tokens`` (as the DuckDB oracle
+    counts every corpus doc) and the WAND top-k equals the DataFrame
+    top-k."""
+    docs = {1: "alpha beta", 2: "beta gamma gamma", 3: "", 4: "!!! ---", 5: "gamma delta", 6: ""}
+    corpus = spark.createDataFrame(sorted(docs.items()), "docID long, content string")
+    engine = BM25Engine(spark, corpus).cache()
+    assert (engine.stats.n_docs, engine.stats.total_tokens) == (6, 7)
+    built, updated = str(tmp_path / "built"), str(tmp_path / "updated")
+    build_index(spark, corpus, built, n_shards=2, block_size=16)
+    build_index(spark, corpus.where(F.col("docID") % 2 == 0), updated, n_shards=2, block_size=16)
+    update_index(spark, corpus, updated)
+    token_less = {3: (0, 0), 4: (0, 0), 6: (0, 0)}
+    for d in (built, updated):
+        idx = BlockMaxIndex(spark, d)
+        assert (idx.stats["n_docs"], idx.stats["total_tokens"]) == (6, 7), d
+        lens = {r["docID"]: (r["dl"], r["dlq"]) for r in idx.doclens.collect()}
+        assert {i: lens[i] for i in token_less} == token_less, d
+        for query in ("beta", "gamma delta", "alpha gamma"):
+            want = _rows(topk(engine.match(query), 10))
+            assert _rows(idx.match_topk(query, k=10)) == want, (d, query)
+    lens = {r["docID"]: (r["dl"], r["dlq"]) for r in engine.doclens.collect()}
+    assert len(lens) == 6 and {i: lens[i] for i in token_less} == token_less
 
 
 def test_index_compresses(spark, index_dir):

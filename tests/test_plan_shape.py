@@ -75,16 +75,18 @@ def test_phrase_default_routes_through_positional_index(spark, entry):
 def test_delegate_raw_routes_are_artifact_bounded(spark, entry):
     """The delegate raw-type routes never join the corpus against itself:
     token_count is a filter over the per-doc length artifact (its one
-    exchange is the output sort), match_only_text is a filter on the
-    cached postings + one agg ending in TakeOrderedAndProject (the
-    postings' own ``ndoc`` window exchange runs once, when the cache is
-    built)."""
+    query-time exchange is the output sort; the artifact's own build, a
+    join of the corpus ids onto the cached postings, runs once), and
+    match_only_text is a filter on the cached postings + one agg ending in
+    TakeOrderedAndProject (the postings' own ``ndoc`` window exchange runs
+    once, when the cache is built)."""
     from tools.plan_audit import query_time_nodes
 
     qmap = entry.queries()
     p = _plan(qmap["semantic_raw_token_count"](spark, SF_DIR))
-    assert p.count(") Exchange") <= 1
-    assert "Join" not in p
+    nodes = [n for _, n in query_time_nodes(p)]
+    assert sum(n.startswith("Exchange") for n in nodes) <= 1
+    assert not any("Join" in n for n in nodes)
     p = _plan(qmap["semantic_raw_match_only_topk"](spark, SF_DIR))
     nodes = [n for _, n in query_time_nodes(p)]
     assert sum(n.startswith("Exchange") for n in nodes) <= 1
@@ -251,10 +253,13 @@ def _without_initial_plans(plan: str) -> str:
     """A formatted plan without the nodes of any adaptive ``== Initial Plan
     ==`` section: once a cached relation with an exchange has run, the
     plan prints its adaptive plan's final plan and, beside it, the initial
-    plan, which never executes."""
+    plan, which never executes. A node that also prints outside every
+    such section is kept: a cache built over another cache (the doclens
+    over the engine postings) reprints the inner cache's executed plan
+    inside the outer initial plan."""
     import re
 
-    skip, marker = set(), None  # marker: where the section's nodes start
+    skip, ran, marker = set(), set(), None  # marker: where the section's nodes start
     for line in plan.splitlines():
         depth = len(line) - len(line.lstrip(" :+-*"))
         if "== Initial Plan ==" in line:
@@ -263,8 +268,9 @@ def _without_initial_plans(plan: str) -> str:
         if marker is not None and depth < marker:
             marker = None
         m = re.match(r"[ :+\-*]*\S.*? \((\d+)\)", line)
-        if marker is not None and m:
-            skip.add(int(m.group(1)))
+        if m:
+            (skip if marker is not None else ran).add(int(m.group(1)))
+    skip -= ran
     blocks = re.split(r"\n(?=\(\d+\) )", plan)
     return "\n".join(
         b for b in blocks if not ((m := re.match(r"\((\d+)\) ", b)) and int(m.group(1)) in skip)
@@ -351,6 +357,33 @@ def test_one_phrase_scorer_in_the_library():
     pos = (root / "index" / "positions.py").read_text()
     assert pos.count("F.array_intersect(") == 1
     assert pos.count("F.first(F.when(") == 1
+
+
+def test_one_doc_length_source_in_the_library():
+    """Static guard: only ``search/bm25.py`` quantizes a doc length or
+    reads one off the analyzer (``doc_term_freqs``/``doc_lengths`` feed the
+    engine, its field artifacts, ``build_index`` and ``update_index``), and
+    the index builder has no per-doc ``groupBy`` of its own over the raw
+    rows. Plain token counts for other ends (dedup keepers, packing,
+    stream analytics) are not BM25 doc lengths and are not checked."""
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent / "neural_search_spark"
+    hits = set()
+    for p in root.rglob("*.py"):
+        rel, src = p.relative_to(root).as_posix(), p.read_text()
+        if rel == "search/bm25.py":
+            continue
+        for line in src.splitlines():
+            if "quantize_length_col(" in line or '_tf.dl"' in line or '.alias("dlq")' in line:
+                hits.add((rel, line.strip()))
+    assert hits == set()
+    builder = (root / "index" / "builder.py").read_text()
+    assert 'groupBy("docID", "shard")' not in builder
+    assert 'F.first("dl")' not in builder
+    bm25 = (root / "search" / "bm25.py").read_text()
+    assert "def quantized_doc_lengths" not in bm25
+    assert bm25.count("quantize_length_col(") == 3  # its definition and two calls
 
 
 def test_one_ann_pipeline_in_the_library():

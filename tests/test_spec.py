@@ -81,6 +81,24 @@ def test_spec_validation():
         parse_hybrid_spec(_Fake(), {"queries": [{"match": "a"}], "from": 5})
 
 
+def test_spec_obeys_the_live_sub_query_cap(spark, engine):
+    """The parser reads the ``hybrid_max_sub_queries`` setting, as
+    ``hybrid_search`` does: a raised cap admits a 6-clause spec and a
+    lowered one refuses a 2-clause spec."""
+    from neural_search_spark import settings
+
+    spec = {"queries": [{"match": {"query": f"ident{i}"}} for i in range(6)], "pagination_depth": 10}
+    with settings.override(hybrid_max_sub_queries=6):
+        got = parse_hybrid_spec(engine, spec, k=5)
+        want = hybrid_search(
+            [engine.match(f"ident{i}") for i in range(6)], "min_max", "arithmetic_mean", k=5, depth=10
+        )
+        assert _ids(got) == _ids(want)
+    with settings.override(hybrid_max_sub_queries=1):
+        with pytest.raises(ValueError, match="1..1 sub-queries"):
+            parse_hybrid_spec(engine, {"queries": spec["queries"][:2]})
+
+
 def test_spec_neural_clause_requires_embeddings(engine):
     """A neural clause needs the doc-embedding table (the text_embedding
     processor's output column at scale) — omitting it is a spec error."""

@@ -11,15 +11,20 @@ ONCE at ingest and persisted columnar, and a phrase query reads only the
 partitions of its own terms.
 
 Layout: ``positions/bucket=B/*.parquet`` with rows
-``(term, docID, positions array<int>)`` where
-``bucket = hash32(term) % n_buckets``. The term-hash partitioning makes
-every query a **partition-pruned** scan (m terms → ≤ m of n_buckets
-directories); within a bucket the ``term IN (...)`` predicate pushes
-into the parquet row-group filter. Position lists ride parquet's own
-delta/RLE int encodings — Spark-first columnar compression instead of a
-hand-rolled varint stream, and the whole extract is JVM-side
+``(term, docID, positions array<int>, dlq, ndoc)`` where
+``bucket = hash32(term) % n_buckets``, ``dlq`` is the doc's SmallFloat
+length and ``ndoc`` the term's document count over the whole field
+(Lucene keeps norms and docFreq in the index, beside the positions). A
+phrase query therefore reads nothing but its terms' rows: no doclens
+join, no df aggregation. The term-hash partitioning makes every query a
+**partition-pruned** scan (m terms → ≤ m of n_buckets directories);
+within a bucket the ``term IN (...)`` predicate pushes into the parquet
+row-group filter. Position lists ride parquet's own delta/RLE int
+encodings — Spark-first columnar compression instead of a hand-rolled
+varint stream, and the whole extract is JVM-side
 (``regexp_extract_all`` + ``posexplode`` + ``collect_list``), no Python
-in the build.
+in the build. A dir written before ``dlq``/``ndoc`` joined the rows is
+refused at :class:`PositionalIndex` construction: rebuild it.
 
 Adjacency at query time is pure whole-stage-codegen array algebra, built
 once in ``PositionalIndex._phrase_freqs``:
@@ -35,10 +40,10 @@ chain, and all three score through
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from neural_search_spark.analysis.tokenizer import analyzed_tokens, tokenize_text
-from neural_search_spark.search.bm25 import B, K1, CorpusStats, phrase_scores, topk
+from neural_search_spark.analysis.tokenizer import tokenize_text
+from neural_search_spark.search.bm25 import B, K1, CorpusStats, doc_tokens, phrase_scores, topk
 from neural_search_spark.session import local_table
 
 N_BUCKETS = 64
@@ -46,12 +51,6 @@ N_BUCKETS = 64
 #: dictionary terms (Lucene's default ``max_expansions``), so the
 #: driver-side expansion ``collect()`` is bounded.
 MAX_EXPANSIONS = 50
-
-
-def _doc_freqs(rows: DataFrame) -> DataFrame:
-    """``(term, ndoc)`` over position rows, one per (term, doc): position
-    rows carry no ``ndoc``, so the phrase's df is counted from them."""
-    return rows.groupBy("term").agg(F.count("*").alias("ndoc"))
 
 
 def _bucket_col(term_col) -> "F.Column":
@@ -71,21 +70,25 @@ def build_positions(
 ) -> None:
     """corpus → positional postings table, partitioned by term-hash bucket.
 
-    One JVM-side pass: tokenize (regexp), posexplode to (docID, pos,
-    term), one groupBy (docID, term) shuffle collecting sorted position
-    lists, dynamic-partition write. The shuffle moves one row per token
-    occurrence — the irreducible payload of a positional index."""
-    toks = analyzed_tokens(text_col)
-    long = corpus.select(
-        F.col(id_col).alias("docID"), F.posexplode(toks).alias("pos", "term")
+    One JVM-side pass: tokenize (regexp) and quantize the doc length once
+    per doc (:func:`~neural_search_spark.search.bm25.doc_tokens`),
+    posexplode to (docID, dlq, pos, term), one groupBy (docID, term)
+    collecting sorted position lists, then one exchange by bucket that
+    also serves the ``ndoc`` window (a bucket is a function of the term)
+    and the dynamic-partition write."""
+    long = doc_tokens(corpus, text_col, id_col).select(
+        "docID", "dlq", F.posexplode_outer("toks").alias("pos", "term")
     )
     rows = (
-        long.groupBy("docID", "term")
+        long.where(F.col("term").isNotNull())
+        .groupBy("docID", "dlq", "term")
         .agg(F.array_sort(F.collect_list("pos")).alias("positions"))
         .withColumn("bucket", _bucket_col(F.col("term")))
+        .repartition("bucket")
     )
+    ndoc = F.count(F.lit(1)).over(Window.partitionBy("bucket", "term"))
     (
-        rows.repartition("bucket")
+        rows.select("term", "docID", "positions", "dlq", ndoc.alias("ndoc"), "bucket")
         .write.mode("overwrite")
         .partitionBy("bucket")
         .parquet(out_dir)
@@ -93,7 +96,12 @@ def build_positions(
 
 
 class PositionalIndex:
-    """Query wrapper over a built positions table + the corpus doclens."""
+    """Query wrapper over a built positions table and its field's stats.
+
+    ``doclens`` is accepted for the callers' sake and not read: every
+    position row carries its doc's ``dlq`` and its term's ``ndoc``. The
+    table is read (listed, schema inferred) once, here; a dir whose rows
+    lack ``dlq``/``ndoc`` raises ``ValueError``."""
 
     def __init__(
         self,
@@ -104,8 +112,14 @@ class PositionalIndex:
     ):
         self.spark = spark
         self.pos_dir = pos_dir
-        self.doclens = doclens
         self.stats = stats
+        self._rows = spark.read.parquet(pos_dir)
+        missing = [c for c in ("dlq", "ndoc") if c not in self._rows.columns]
+        if missing:
+            raise ValueError(
+                f"positions dir {pos_dir} has no {', '.join(missing)} column: it was "
+                "written by an older build_positions; rebuild it"
+            )
 
     def _term_rows(self, terms: list[str]) -> DataFrame:
         """Partition-pruned read: only the buckets (and row groups) of the
@@ -113,49 +127,57 @@ class PositionalIndex:
         from neural_search_spark.pipeline.params import hash32_py
 
         buckets = sorted({hash32_py(t) % N_BUCKETS for t in terms})
-        df = self.spark.read.parquet(self.pos_dir)
-        return df.where(F.col("bucket").isin(buckets) & F.col("term").isin(terms))
+        return self._rows.where(F.col("bucket").isin(buckets) & F.col("term").isin(terms))
 
     def _phrase_freqs(
         self, slots: list[tuple[str, ...]], slop: int = 0
-    ) -> tuple[DataFrame, DataFrame]:
-        """The position chain → (the slot terms' position rows, ``(docID,
-        ptf)``), where ``ptf`` counts the distinct end positions of in-order
-        runs over the slots with every gap 1..slop+1 tokens wide.
+    ) -> tuple[DataFrame, dict]:
+        """The position chain → (``(docID, ptf, dlq, …)`` rows, the ``ndoc``
+        column of each one-term slot), where ``ptf`` counts the distinct end
+        positions of in-order runs over the slots with every gap 1..slop+1
+        tokens wide.
 
         A slot is a set of terms: one term for a fixed position, the
         expansion set for a prefix slot. Each distinct slot pivots into
-        one column of the doc's positions (a multi-term slot unions its
-        terms' lists: one term per position, so they are disjoint); a doc
-        missing any slot drops out. The chain is then
+        one column of the doc's rows: a one-term slot into the struct of
+        its row's positions and ``ndoc``, a multi-term slot into the union
+        of its terms' position lists (one term per position, so they are
+        disjoint); a doc missing any slot drops out. The doc's ``dlq`` is
+        a grouping key (every row of a doc carries the same one). The
+        chain is then
         ``chain' = ∪_{d=1..slop+1} (transform(chain, x -> x+d) ∩ slot)``,
         a plain ``array_intersect`` at slop 0 (already a set) and
         ``array_distinct`` over the concatenated steps otherwise."""
         pivot = sorted(set(slots))
         col_of = {s: f"p{i}" for i, s in enumerate(pivot)}
         rows = self._term_rows(sorted({t for s in pivot for t in s}))
-        per_slot, present = [], []
+        per_slot, present, positions = [], [], {}
         for s in pivot:
+            c = col_of[s]
             if len(s) == 1:
-                agg = F.first(F.when(F.col("term") == s[0], F.col("positions")), ignorenulls=True)
-                present.append(F.col(col_of[s]).isNotNull())
+                hit = F.struct("positions", "ndoc")
+                agg = F.first(F.when(F.col("term") == s[0], hit), ignorenulls=True)
+                present.append(F.col(c).isNotNull())
+                positions[s] = F.col(f"{c}.positions")
             else:
                 agg = F.flatten(F.collect_list(F.when(F.col("term").isin(list(s)), F.col("positions"))))
-                present.append(F.size(col_of[s]) > 0)
-            per_slot.append(agg.alias(col_of[s]))
-        wide = rows.groupBy("docID").agg(*per_slot)
+                present.append(F.size(c) > 0)
+                positions[s] = F.col(c)
+            per_slot.append(agg.alias(c))
+        wide = rows.groupBy("docID", "dlq").agg(*per_slot)
         for cond in present:
             wide = wide.where(cond)
-        chain = F.col(col_of[slots[0]])
+        chain = positions[slots[0]]
         for s in slots[1:]:
             # a 1-arg lambda is mandatory: a second (defaulted) parameter
             # makes Spark pass the element INDEX as the extra argument
             steps = [
-                F.array_intersect(F.transform(chain, lambda x: x + d), F.col(col_of[s]))
+                F.array_intersect(F.transform(chain, lambda x: x + d), positions[s])
                 for d in range(1, slop + 2)
             ]
             chain = steps[0] if slop == 0 else F.array_distinct(F.concat(*steps))
-        return rows, wide.select("docID", F.size(chain).alias("ptf")).where(F.col("ptf") > 0)
+        ndoc = {s: F.col(f"{c}.ndoc") for s, c in col_of.items() if len(s) == 1}
+        return wide.withColumn("ptf", F.size(chain)).where(F.col("ptf") > 0), ndoc
 
     def match_phrase(self, phrase: str, k1: float = K1, b: float = B) -> DataFrame:
         """(docID, score), identical by contract to the scan path
@@ -185,10 +207,9 @@ class PositionalIndex:
         exp = [r["term"] for r in exp_df.limit(MAX_EXPANSIONS).collect()]
         if not exp:
             return local_table(self.spark, [], "docID long, score double")
-        rows, verified = self._phrase_freqs([(t,) for t in fixed] + [tuple(exp)])
-        # df over the fixed terms only: the open slot carries no weight
-        rows_f = rows.where(F.col("term").isin(sorted(set(fixed))))
-        return phrase_scores(verified, self.doclens, self.stats, _doc_freqs(rows_f), fixed, k1, b)
+        verified, ndoc = self._phrase_freqs([(t,) for t in fixed] + [tuple(exp)])
+        # idf over the fixed positions only: the open slot carries no weight
+        return phrase_scores(verified, self.stats, [ndoc[(t,)] for t in fixed], k1, b)
 
     def match_phrase_topk(self, phrase: str, k: int = 10) -> DataFrame:
         return topk(self.match_phrase(phrase), k)
@@ -207,5 +228,5 @@ class PositionalIndex:
         terms = tokenize_text(phrase)
         if not terms:
             return local_table(self.spark, [], "docID long, score double")
-        rows, verified = self._phrase_freqs([(t,) for t in terms], slop)
-        return phrase_scores(verified, self.doclens, self.stats, _doc_freqs(rows), terms, k1, b)
+        verified, ndoc = self._phrase_freqs([(t,) for t in terms], slop)
+        return phrase_scores(verified, self.stats, [ndoc[(t,)] for t in terms], k1, b)

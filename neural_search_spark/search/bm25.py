@@ -48,6 +48,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from neural_search_spark.analysis.tokenizer import (
     TOKEN_RE,
+    analyzed_tokens,
     explode_term_freqs,
     term_freqs,
     tokenize_text,
@@ -76,14 +77,32 @@ def quantize_length_col(dl_col_name: str):
     return F.expr(quantize_length_sql(dl_col_name))
 
 
+def _with_doc_length(docs: DataFrame, dl) -> DataFrame:
+    """One row per doc → the same rows plus ``dl`` (the doc's token count)
+    and ``dlq``, its SmallFloat length, quantized once per doc, BEFORE any
+    explode (after it, the same value would be computed once per row)."""
+    return docs.withColumn("dl", dl).withColumn("dlq", quantize_length_col("dl"))
+
+
 def doc_term_freqs(corpus: DataFrame, text_col: str, id_col: str, *keep) -> DataFrame:
     """corpus → one row per doc ``(docID, *keep, _tf, dl, dlq)``: the
     analyzer's :func:`term_freqs` struct, its token count and the SmallFloat
-    length, quantized once per doc, BEFORE any explode (after it, the same
-    value would be computed once per posting row)."""
-    return corpus.select(
-        F.col(id_col).alias("docID"), *keep, term_freqs(text_col).alias("_tf")
-    ).withColumn("dl", F.col("_tf.dl")).withColumn("dlq", quantize_length_col("_tf.dl"))
+    length."""
+    return _with_doc_length(
+        corpus.select(F.col(id_col).alias("docID"), *keep, term_freqs(text_col).alias("_tf")),
+        F.col("_tf.dl"),
+    )
+
+
+def doc_tokens(corpus: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """corpus → one row per doc ``(docID, toks, dl, dlq)``: the analyzed
+    tokens in text order (the positional index's input), their count and
+    the SmallFloat length, the same ``dl``/``dlq`` as
+    :func:`doc_term_freqs` gives."""
+    return _with_doc_length(
+        corpus.select(F.col(id_col).alias("docID"), analyzed_tokens(text_col).alias("toks")),
+        F.size("toks"),
+    )
 
 
 def doc_lengths(postings: DataFrame, doc_ids: DataFrame) -> DataFrame:
@@ -148,37 +167,28 @@ def term_score_col(stats: CorpusStats, k1: float = K1, b: float = B) -> "F.Colum
 
 
 def phrase_scores(
-    verified: DataFrame,
-    doclens: DataFrame,
+    rows: DataFrame,
     stats: CorpusStats,
-    doc_freqs: DataFrame,
-    weight_terms: list[str],
+    ndocs: list["F.Column"],
     k1: float = K1,
     b: float = B,
 ) -> DataFrame:
-    """Lucene ``PhraseWeight`` scoring: ``(docID, ptf)`` rows → ``(docID,
-    score)`` with
+    """Lucene ``PhraseWeight`` scoring, row by row: ``(docID, ptf, dlq,
+    …)`` rows → ``(docID, score)`` with
 
-        score = (Σ_j idf(weight_terms[j])) · tfNorm(ptf, dlq)
+        score = (Σ_j idf(ndocs[j])) · tfNorm(ptf, dlq)
 
-    The idf sum runs over the phrase *positions*, duplicates included
-    (one ``TermStatistics`` per position). ``doc_freqs`` holds one
-    ``(term, ndoc)`` row per weighted term: its index-wide document
-    frequency. ``doclens`` supplies ``dlq``. Every positional query (scan
-    or index ``match_phrase``, ``match_phrase_prefix``, ``span_near``)
-    scores through here."""
-    pos_df = F.broadcast(
-        local_table(verified.sparkSession, list(enumerate(weight_terms)), "pos int, term string")
-    )
-    qidf = pos_df.join(F.broadcast(doc_freqs), "term").agg(
-        F.sum(idf_col(stats.n_docs, F.col("ndoc"))).alias("qidf")
-    )
+    ``ndocs`` holds one column per weighted phrase *position*, duplicates
+    included (one ``TermStatistics`` per position): that term's
+    index-wide document count, read off the row. The idf sum runs left to
+    right over the positions. Every positional query (scan or index
+    ``match_phrase``, ``match_phrase_prefix``, ``span_near``) scores
+    through here."""
+    qidf = idf_col(stats.n_docs, ndocs[0])
+    for ndoc in ndocs[1:]:
+        qidf = qidf + idf_col(stats.n_docs, ndoc)
     tf_norm = tf_norm_col(F.col("ptf").cast("double"), stats, k1, b)
-    return (
-        verified.join(doclens, "docID")
-        .crossJoin(F.broadcast(qidf))
-        .select("docID", (F.col("qidf") * tf_norm).alias("score"))
-    )
+    return rows.select("docID", (qidf * tf_norm).alias("score"))
 
 
 def bm25_clause_scores(
@@ -434,9 +444,14 @@ def match_phrase_scores(
         )
         .where(F.col("ptf") > 0)
     )
-    # every postings row carries its term's corpus-wide ndoc
-    doc_freqs = matched.select("term", "ndoc").distinct()
-    return phrase_scores(verified, doclens, stats, doc_freqs, terms, k1, b)
+    # every postings row carries its term's corpus-wide ndoc: one row of
+    # them, one column per distinct term, crossed onto the verified docs
+    ndoc_of = {t: f"_n{i}" for i, t in enumerate(distinct_terms)}
+    ndocs = matched.agg(
+        *[F.max(F.when(F.col("term") == t, F.col("ndoc"))).alias(c) for t, c in ndoc_of.items()]
+    )
+    rows = verified.join(doclens, "docID").crossJoin(F.broadcast(ndocs))
+    return phrase_scores(rows, stats, [F.col(ndoc_of[t]) for t in terms], k1, b)
 
 
 def multi_match_scores(
@@ -809,7 +824,7 @@ class BM25Engine:
         self.text_col = text_col
         self.id_col = id_col
         self.postings = bm25_postings(corpus, text_col, id_col)
-        self.doclens = self._doclens(self.postings)
+        self._doclens: DataFrame | None = None
         self._stats: CorpusStats | None = None
         self._term_dict: DataFrame | None = None
         self._cached = False
@@ -819,15 +834,27 @@ class BM25Engine:
 
     def cache(self) -> "BM25Engine":
         """Materialize derived tables once for repeated queries (query-time
-        hot path; at scale this is the persisted postings index instead)."""
+        hot path; at scale this is the persisted postings index instead).
+        The doclens cache is registered on first use of :attr:`doclens`,
+        not here: planned after the postings are built (``warm()`` counts
+        them first), its ``groupBy(docID)`` reads their docID placement
+        and plans no exchange."""
         self.postings = self.postings.cache()
-        self.doclens = self._doclens(self.postings).cache()
+        self._doclens = None
         self._cached = True
         return self
 
-    def _doclens(self, postings: DataFrame) -> DataFrame:
+    def _doclens_of(self, postings: DataFrame) -> DataFrame:
         """:func:`doc_lengths` of every corpus doc, read off ``postings``."""
         return doc_lengths(postings, self.corpus.select(F.col(self.id_col).alias("docID")))
+
+    @property
+    def doclens(self) -> DataFrame:
+        """``(docID, dl, dlq)`` of every corpus doc, cached whenever the
+        engine is."""
+        if self._doclens is None:
+            self._doclens = self._kept(self._doclens_of(self.postings))
+        return self._doclens
 
     def _kept(self, df: DataFrame) -> DataFrame:
         """``df``, cached whenever the engine is."""
@@ -858,7 +885,7 @@ class BM25Engine:
             return self.postings, self.doclens, self.stats
         if field not in self._field_artifacts:
             p = self._kept(bm25_postings(self.corpus, field, self.id_col))
-            d = self._kept(self._doclens(p))
+            d = self._kept(self._doclens_of(p))
             self._field_artifacts[field] = (p, d, corpus_stats_from_doclens(d))
         return self._field_artifacts[field]
 

@@ -4,9 +4,11 @@ Per-shard kernel (Arrow-batched ``applyInPandas`` cogroup — the Spark
 restatement of the reference's per-shard collection,
 ``search/collector/HybridTopScoreDocCollector.java:135-170``):
 
-1. Terms are scored rarest-first (global df ascending — the matchCost
-   ordering idea of ``query/HybridQueryScorer.java:222-293``); partial
-   sums accumulate per docID.
+1. Terms are scored rarest-first (shard-local df ascending — the
+   matchCost ordering idea of ``query/HybridQueryScorer.java:222-293``);
+   partial sums accumulate per docID. A term's idf uses its index-wide
+   df, ``gdf``, read off its own postings row (Lucene keeps docFreq in
+   the terms dictionary): no query-time df aggregation or collect.
 2. After the cheap terms, the k-th best *partial* total is a valid lower
    bound θ of the final k-th score (every final score ≥ its partial).
 3. For each remaining expensive term, a block is decoded only if
@@ -21,6 +23,13 @@ restatement of the reference's per-shard collection,
 
 All math is float64 and mirrors :mod:`neural_search_spark.search.bm25`
 exactly — the two paths are asserted rank- and score-identical in tests.
+
+Layout: :class:`BlockMaxIndex` adds ``gdf = sum(df) over (partition by
+term)`` to the on-disk postings. Its cached postings and doclens are both
+hash-partitioned by ``shard``, one partition per core, so a cached query
+is the term filter plus the per-shard cogroup, with no exchange: one
+Spark job. An uncached reader runs the same plan, with the window over
+the filtered rows and the shard exchanges at query time.
 """
 
 from __future__ import annotations
@@ -31,7 +40,7 @@ import os
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from neural_search_spark.analysis.tokenizer import tokenize_text
@@ -49,9 +58,7 @@ def _ub_tfn(max_tf: np.ndarray, min_dlq: np.ndarray, avgdl: float, k1: float, b:
     return mt / (mt + k1 * (1.0 - b + b * min_dlq.astype(np.float64) / avgdl))
 
 
-def _shard_kernel_factory(
-    idf: dict[str, float], avgdl: float, k: int, k1: float, b: float, prune: bool
-):
+def _shard_kernel_factory(n_docs: int, avgdl: float, k: int, k1: float, b: float, prune: bool):
     def score_shard(postings: pd.DataFrame, doclens: pd.DataFrame) -> pd.DataFrame:
         if postings.empty:
             return pd.DataFrame({"docID": pd.Series(dtype="int64"), "score": pd.Series(dtype="float64")})
@@ -62,9 +69,12 @@ def _shard_kernel_factory(
 
         # rarest-first by local df (cheap lists first; matchCost ordering)
         rows = postings.sort_values("df").to_dict("records")
-        # global upper bound per term (max over its blocks)
-        term_ub = []
+        # idf from the index-wide df on the row; the upper bound per term
+        # is the max over its blocks
+        idf, term_ub = {}, []
         for r in rows:
+            gdf = int(r["gdf"])
+            idf[r["term"]] = math.log(1.0 + (n_docs - gdf + 0.5) / (gdf + 0.5))
             ub = idf[r["term"]] * float(
                 np.max(
                     _ub_tfn(
@@ -172,24 +182,20 @@ class BlockMaxIndex:
             self.stats = json.load(f)
         check_format_version(self.stats, index_dir)  # BWC gate: refuse stale
         self.corpus_stats = CorpusStats(self.stats["n_docs"], self.stats["total_tokens"])
-        self.postings = spark.read.parquet(os.path.join(index_dir, "postings"))
+        postings = spark.read.parquet(os.path.join(index_dir, "postings"))
+        # idf is global (Lucene stats are per index, not per shard): every
+        # row carries its term's index-wide df
+        self.postings = postings.withColumn("gdf", F.sum("df").over(Window.partitionBy("term")))
         self.doclens = spark.read.parquet(os.path.join(index_dir, "doclens"))
 
     def cache(self) -> "BlockMaxIndex":
-        self.postings = self.postings.cache()
-        self.doclens = self.doclens.cache()
+        """Cache the postings (with ``gdf``) and the doclens, both
+        hash-partitioned by ``shard`` into one partition per core, so the
+        per-shard cogroup of a query needs no exchange."""
+        n = self.spark.sparkContext.defaultParallelism
+        self.postings = self.postings.repartition(n, "shard").cache()
+        self.doclens = self.doclens.repartition(n, "shard").cache()
         return self
-
-    def global_dfs(self, terms: list[str]) -> dict[str, int]:
-        """Index-wide document frequency per term (idf is global — Lucene
-        stats are per index, not per shard)."""
-        rows = (
-            self.postings.where(F.col("term").isin(terms))
-            .groupBy("term")
-            .agg(F.sum("df").alias("df"))
-            .collect()
-        )
-        return {r["term"]: int(r["df"]) for r in rows}
 
     def match_topk(
         self,
@@ -211,13 +217,11 @@ class BlockMaxIndex:
         prune: bool = True,
     ) -> DataFrame:
         terms = sorted(set(terms))
-        dfs = self.global_dfs(terms)
-        terms = [t for t in terms if t in dfs]
         if not terms:
             return local_table(self.spark, [], SCORE_SCHEMA)
-        n = self.corpus_stats.n_docs
-        idf = {t: math.log(1.0 + (n - dfs[t] + 0.5) / (dfs[t] + 0.5)) for t in terms}
-        kernel = _shard_kernel_factory(idf, self.corpus_stats.avgdl, k, k1, b, prune)
+        kernel = _shard_kernel_factory(
+            self.corpus_stats.n_docs, self.corpus_stats.avgdl, k, k1, b, prune
+        )
         matched = self.postings.where(F.col("term").isin(terms))
         local = (
             matched.groupBy("shard")

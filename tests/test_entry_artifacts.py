@@ -169,3 +169,27 @@ def test_index_dir_tag_follows_the_build_sources(tmp_path):
     st = os.stat(docs)
     os.utime(docs, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
     assert entry._build_tag(str(data)) != before
+
+
+def test_prune_tool_lists_and_deletes_only_stale_artifact_dirs(tmp_path, capsys):
+    """``tools/prune_artifacts.py`` names the ``nss_*`` dirs whose tag is no
+    current ``_build_tag`` of the given sf dirs, removes them only with
+    ``--delete``, and never touches a current-tag dir or another name."""
+    from tools.prune_artifacts import main, stale_dirs
+
+    tag, old = entry._build_tag(SF_DIR), "0123456789"
+    assert tag != old
+    keep = [f"nss_index_v1_{tag}", f"nss_index_upd_v1_{tag}", f"nss_positions_{tag}",
+            f"nss_positions_{tag}_repo", "nss_notes", f"other_{old}"]
+    stale = [f"nss_index_v1_{old}", f"nss_index_upd_v1_{old}", f"nss_positions_{old}",
+             f"nss_positions_{old}_repo"]
+    for name in keep + stale:
+        (tmp_path / name).mkdir()
+    want = sorted(str(tmp_path / n) for n in stale)
+    assert stale_dirs(str(tmp_path), [SF_DIR]) == want
+    assert main(["--root", str(tmp_path), SF_DIR]) == 0
+    assert sorted(os.listdir(tmp_path)) == sorted(keep + stale)  # listing deletes nothing
+    printed = capsys.readouterr().out
+    assert all(f"stale {p}" in printed for p in want)
+    assert main(["--root", str(tmp_path), "--delete", SF_DIR]) == 0
+    assert sorted(os.listdir(tmp_path)) == sorted(keep)

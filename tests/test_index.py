@@ -57,6 +57,26 @@ def test_index_matches_dataframe_path(spark, index_dir, engine, query, prune):
     )
 
 
+def test_cached_uncached_and_dataframe_wand_topk_agree(spark, index_dir, engine):
+    """The cached index (global df read off its shard-partitioned rows),
+    the uncached one (the same plan with query-time exchanges) and the
+    DataFrame path return the same rows, float-equal, on a rare-term
+    query and a partly absent one; an all-absent query returns 0 rows."""
+    cached = BlockMaxIndex(spark, index_dir).cache()
+    uncached = BlockMaxIndex(spark, index_dir)
+    try:
+        for query in ("def uniq_000003", "import nonexistent_token_xyz ident1"):
+            want = _rows(topk(engine.match(query), 10))
+            assert want, query
+            assert _rows(cached.match_topk(query, k=10)) == want, query
+            assert _rows(uncached.match_topk(query, k=10)) == want, query
+        for idx in (cached, uncached):
+            assert _rows(idx.match_topk("nonexistent_token_xyz zzz_absent_term", k=10)) == []
+    finally:
+        cached.postings.unpersist()
+        cached.doclens.unpersist()
+
+
 def test_stats_match_corpus(spark, index_dir, engine):
     idx = BlockMaxIndex(spark, index_dir)
     assert idx.stats["n_docs"] == engine.stats.n_docs
@@ -371,6 +391,81 @@ def test_phrase_prefix_slot_holding_a_fixed_term(spark, tmp_path):
     mp = {r["docID"]: r["score"] for r in pidx.match_phrase("a a").collect()}
     assert mp.keys() == {1}
     assert got[1] == pytest.approx(mp[1] / 2)
+
+
+def test_positional_and_scan_phrase_paths_agree(spark, tmp_path):
+    """``match_phrase``, ``match_phrase_prefix`` and ``span_near`` at slop 1,
+    scored off the position rows' own ``dlq`` and ``ndoc``, agree with a
+    scan of the texts: the engine's scan path for ``match_phrase``, and for
+    all three a Python scan over the analyzed texts with the engine's
+    doclens, term dictionary and stats."""
+    import math
+
+    from neural_search_spark.analysis.tokenizer import tokenize_text
+    from neural_search_spark.index.positions import PositionalIndex, build_positions
+    from neural_search_spark.search.bm25 import B, K1
+
+    rows = [
+        (0, "quick brown fox"),
+        (1, "quick brown quick brown"),
+        (2, "quick red brown fox"),
+        (3, "brown quick"),
+        (4, "quick brownie fox quick fox"),
+        (5, ""),
+    ]
+    df = spark.createDataFrame(rows, "docID long, content string")
+    eng = BM25Engine(spark, df).cache()
+    d = str(tmp_path / "pos_agree")
+    build_positions(spark, df, d)
+    pidx = PositionalIndex(spark, d, eng.doclens, eng.stats)
+    dlq = {r["docID"]: r["dlq"] for r in eng.doclens.collect()}
+    ndoc = {r["term"]: r["ndoc"] for r in eng.term_dict.collect()}
+    n, avgdl = eng.stats.n_docs, eng.stats.avgdl
+
+    def scan(slots, n_weighted, slop):
+        out = {}
+        for doc_id, text in rows:
+            toks = tokenize_text(text)
+            chain = {i for i, t in enumerate(toks) if t in slots[0]}
+            for s in slots[1:]:
+                chain = {p for p, t in enumerate(toks) if t in s and any(1 <= p - c <= slop + 1 for c in chain)}
+            if chain:
+                qidf = sum(math.log(1.0 + (n - ndoc[s[0]] + 0.5) / (ndoc[s[0]] + 0.5)) for s in slots[:n_weighted])
+                tf = float(len(chain))
+                out[doc_id] = qidf * (tf / (tf + K1 * (1.0 - B + B * dlq[doc_id] / avgdl)))
+        return out
+
+    def got(df):
+        return {r["docID"]: r["score"] for r in df.collect()}
+
+    phrase = got(pidx.match_phrase("quick brown"))
+    assert phrase == got(eng.match_phrase("quick brown"))
+    cases = [
+        (phrase, scan([("quick",), ("brown",)], 2, 0)),
+        (got(pidx.match_phrase_prefix("quick bro", eng.term_dict)), scan([("quick",), ("brown", "brownie")], 1, 0)),
+        (got(pidx.span_near("quick fox", slop=1)), scan([("quick",), ("fox",)], 2, 1)),
+    ]
+    for have, want in cases:
+        assert want and have.keys() == want.keys()
+        assert have == pytest.approx(want, rel=1e-12, abs=0)
+
+
+def test_stale_positions_dir_is_refused(spark, tmp_path):
+    """A positions dir written before the rows carried ``dlq``/``ndoc``
+    fails at construction, naming the dir, instead of mid-query."""
+    import re
+
+    from neural_search_spark.index.positions import PositionalIndex
+    from neural_search_spark.search.bm25 import CorpusStats
+
+    d = str(tmp_path / "old_layout")
+    old = spark.createDataFrame(
+        [("alpha", 0, [0], 5), ("beta", 0, [1], 9)],
+        "term string, docID long, positions array<int>, bucket int",
+    )
+    old.write.partitionBy("bucket").parquet(d)
+    with pytest.raises(ValueError, match=re.escape(d) + ".*rebuild"):
+        PositionalIndex(spark, d, None, CorpusStats(1, 2))
 
 
 def test_positional_bucket_pruning(spark, tmp_path):

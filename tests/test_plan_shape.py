@@ -42,12 +42,18 @@ def test_semantic_sparse_route_is_zero_exchange(spark, entry):
 
 
 def test_wand_path_is_bounded_exchange_topk(spark, entry):
-    """The block-max index query is cached-postings scans + the top-k
-    cut: at most 2 exchanges, final TakeOrderedAndProject, and never a
-    SortMergeJoin (a corpus re-sort would mean the index isn't used)."""
+    """The block-max index query over its cached shard-partitioned rows is
+    the term filter, the per-shard cogroup and the top-k cut: no
+    query-time exchange (global df rides on the rows), a final
+    TakeOrderedAndProject, and never a SortMergeJoin (a corpus re-sort
+    would mean the index isn't used)."""
+    from tools.plan_audit import query_time_nodes
+
     for key in ("bm25_wand_topk", "bm25_updated_index_topk"):
+        entry.queries()[key](spark, SF_DIR).collect()  # builds the caches
         plan = _plan(entry.queries()[key](spark, SF_DIR))
-        assert plan.count(") Exchange") <= 2, key
+        nodes = [n for _, n in query_time_nodes(plan)]
+        assert not any("Exchange" in n for n in nodes), (key, nodes)
         assert "TakeOrderedAndProject" in plan, key
         assert "SortMergeJoin" not in plan, key
 
@@ -456,6 +462,19 @@ def test_match_clause_runs_without_a_shuffle(cached_engine):
     assert _query_time_exchanges(batch) == []
 
 
+def _warm_jobs(spark, group: str, request) -> list[int]:
+    """The ids of the Spark jobs that a second ``request()`` runs (the
+    first may compile code or build caches); both return the same rows."""
+    sc = spark.sparkContext
+    want = request()
+    sc.setJobGroup(group, group)
+    try:
+        assert request() == want
+        return list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
 def test_lexical_hybrid_runs_at_most_two_jobs(spark, cached_engine):
     """A 2-clause lexical ``hybrid_search``, called and collected, runs at
     most 2 Spark jobs: one collect of the clauses' depth cuts (each clause
@@ -467,15 +486,28 @@ def test_lexical_hybrid_runs_at_most_two_jobs(spark, cached_engine):
         clauses = [cached_engine.match(t) for t in ("table value spark", "join merge hash window")]
         return hybrid_search(clauses, "min_max", "arithmetic_mean", k=10, depth=50).collect()
 
-    sc = spark.sparkContext
-    want = request()  # warm: the first request may compile code
-    sc.setJobGroup("lexical-hybrid-guard", "2-clause lexical hybrid")
-    try:
-        assert request() == want
-        jobs = sc.statusTracker().getJobIdsForGroup("lexical-hybrid-guard")
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = _warm_jobs(spark, "lexical-hybrid-guard", request)
     assert 1 <= len(jobs) <= 2, jobs
+
+
+def test_cached_wand_topk_runs_one_job(spark, entry):
+    """A warm WAND top-k over the cached index is one Spark job: idf comes
+    from the ``gdf`` on its postings rows (no df collect), and the
+    shard-partitioned postings and doclens cogroup in place (no shuffle
+    stage)."""
+    idx = entry._index(spark, SF_DIR)
+    jobs = _warm_jobs(spark, "wand-guard", lambda: idx.match_topk(entry.Q_MATCH, k=10).collect())
+    assert len(jobs) == 1, jobs
+
+
+def test_positional_phrase_topk_runs_at_most_two_jobs(spark, entry):
+    """A positional ``match_phrase_topk`` reads ``dlq`` and ``ndoc`` off its
+    position rows: the per-doc pivot's shuffle stage and the top-k, at
+    most 2 Spark jobs, and no broadcast (no doclens join, no df table)."""
+    pidx = entry._pos_index(spark, SF_DIR)
+    jobs = _warm_jobs(spark, "phrase-guard", lambda: pidx.match_phrase_topk(entry.Q_PHRASE, k=10).collect())
+    assert 1 <= len(jobs) <= 2, jobs
+    assert "BroadcastExchange" not in _plan(pidx.match_phrase_topk(entry.Q_PHRASE, k=10))
 
 
 def test_query_time_nodes_skip_a_cache_built_over_a_cache(cached_engine):
